@@ -1,4 +1,4 @@
-.PHONY: dist test check bench scaling clean
+.PHONY: dist test check bench bench-test scaling clean
 
 dist:
 	mkdir -p dist
@@ -12,6 +12,9 @@ check:
 
 bench:
 	python bench.py
+
+bench-test:
+	python -m pytest webbench/tests -q
 
 scaling:
 	python tools/scaling_bench.py --docs 2000000 --n 2 --runs 3

@@ -5,7 +5,7 @@ buckets, completed manifest buckets, fragmented partitions) because a
 literal IN-filter prunes a parquet scan where a join never would. Each
 list is bounded by a layout constant (n_buckets / partition count), not
 by data volume — but a convention is not a bound, so the ceiling is
-asserted at every such site. 10^5 entries keeps the collected list and
+enforced at every such site. 10^5 entries keeps the collected list and
 the generated IN-filter in the low-MB range on the driver; a layout
 needing more buckets than that should shard the manifest instead.
 """
@@ -16,7 +16,10 @@ MAX_DRIVER_LIST = 100_000
 
 
 def check_driver_list_bound(n: int, what: str) -> None:
-    assert n <= MAX_DRIVER_LIST, (
-        f"{what}={n} exceeds MAX_DRIVER_LIST={MAX_DRIVER_LIST}: this "
-        f"driver-side list is only safe because it is bounded by layout "
-        f"config, not data volume — shard the layout instead")
+    """Raise ValueError past the ceiling (an explicit raise, not an
+    `assert`, so the bound also holds under `python -O`)."""
+    if n > MAX_DRIVER_LIST:
+        raise ValueError(
+            f"{what}={n} exceeds MAX_DRIVER_LIST={MAX_DRIVER_LIST}: this "
+            f"driver-side list is only safe because it is bounded by layout "
+            f"config, not data volume — shard the layout instead")

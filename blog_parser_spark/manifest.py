@@ -21,6 +21,7 @@ Resume protocol (exactly-once per bucket):
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -93,11 +94,16 @@ def _with_task_metrics(df: DataFrame) -> DataFrame:
 
 
 def completed_buckets(spark: SparkSession, manifest_dir: str) -> DataFrame:
-    """Buckets already durable; empty frame when no manifest exists yet."""
-    try:
-        return spark.read.parquet(manifest_dir).select("bucket").distinct()
-    except Exception:
+    """Buckets already durable; empty frame when no manifest exists yet.
+
+    An explicit existence probe, NOT try/except around the read: an
+    unreadable or corrupt manifest must raise, never be taken for "no
+    bucket done yet" (which would silently re-run every bucket)."""
+    has_manifest = os.path.isdir(manifest_dir) and any(
+        e.endswith(".parquet") for e in os.listdir(manifest_dir))
+    if not has_manifest:
         return spark.createDataFrame([], "bucket int")
+    return spark.read.parquet(manifest_dir).select("bucket").distinct()
 
 
 def run_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,

@@ -4,9 +4,11 @@ batch flavor)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from blog_parser_spark import manifest
@@ -66,6 +68,28 @@ def test_quarantine_sink_holds_failures(spark, pages, tmp_path):
     q = spark.read.parquet(f"{out}/sinks").filter("sink = 'quarantine'")
     assert q.count() == 3
     assert q.filter(F.col("parse_err").isNull()).count() == 0
+
+
+def test_corrupt_manifest_raises_instead_of_rerunning(spark, pages, tmp_path):
+    """A manifest that exists but cannot be read must fail the resume, not
+    be taken for "no bucket done yet": that would silently rewrite every
+    bucket of the sinks."""
+    out = str(tmp_path / "corrupt")
+    manifest.run_resumable(spark, pages, out, n_buckets=8)
+
+    def sink_files():
+        return {os.path.join(d, n): os.stat(os.path.join(d, n)).st_mtime_ns
+                for d, _, names in os.walk(f"{out}/sinks") for n in names}
+
+    before = sink_files()
+    parts = [n for n in os.listdir(f"{out}/manifest") if n.endswith(".parquet")]
+    assert parts
+    for n in parts:
+        with open(f"{out}/manifest/{n}", "wb") as f:
+            f.write(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):
+        manifest.run_resumable(spark, pages, out, n_buckets=8)
+    assert sink_files() == before
 
 
 def test_resume_scan_partition_prunes_completed_buckets(spark, pages, tmp_path):

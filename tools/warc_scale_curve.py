@@ -67,10 +67,10 @@ def main() -> None:
     # Archive rows are ~360 KB gzip members, so a 128 MB scan split holds
     # ~350 rows and each in-flight task pins ~3 copies of its split
     # (columnar batch, Arrow IPC buffer, result). The local JVM hosts all
-    # N executor threads, so heap must be N x 128 MB x 3 + headroom —
-    # the 8g pages-workload default OOMs at 32 cores on this table shape.
+    # N executor threads, so heap must be N x split x 3 + headroom —
+    # the 8g pages-workload default OOMs at 32 cores with 128 MB splits.
     # (On a real cluster this is per-executor memory x cores-per-executor.)
-    heap_gb = max(8, args.cpus * 128 * 3 // 1024 + 8)
+    heap_gb = max(8, args.cpus * args.max_partition_mb * 3 // 1024 + 8)
     spark = get_spark("warc-curve", master=f"local[{args.cpus}]",
                       shuffle_partitions=2 * args.cpus,
                       extra={"spark.driver.memory": f"{heap_gb}g",
@@ -81,7 +81,11 @@ def main() -> None:
     n_base = io.read_table(spark, args.sf_dir, "documents").count()
     results = []
     for target in args.sizes:
-        arch_dir = os.path.join(WORK, f"archives_{target}.parquet")
+        # keyed on every input that shapes the corpus, so --keep never
+        # reuses archives packed for another size, file sizing or source
+        arch_dir = os.path.join(
+            WORK, f"archives_{os.path.basename(os.path.normpath(args.sf_dir))}"
+                  f"_{target}_{args.docs_per_file}.parquet")
         if not os.path.exists(arch_dir):
             pages = io.synth_pages(spark, args.sf_dir,
                                    replicate=max(1, target // n_base))
