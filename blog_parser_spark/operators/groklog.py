@@ -50,8 +50,8 @@ def parse_lines(raw: DataFrame) -> DataFrame:
     regexp_extract calls would execute the match six times (Catalyst's
     common-subexpression elimination does not merge different group
     indices); measured same-session interleaved at 16M lines this
-    formulation is ~1.6x faster (tools/grok_ab_bench.py, raw numbers in
-    BENCH/BASELINE.md). A regexp_replace-into-sentinel + split rewrite
+    formulation is ~1.6x faster (BENCH/BASELINE.md, "single-pass grok
+    parse A/B"). A regexp_replace-into-sentinel + split rewrite
     was ALSO measured and is ~2x SLOWER than even six extracts — the
     replacement-string materialization dominates — which is why this
     takes the substring route.

@@ -3,7 +3,7 @@
 The north star's corpus is "Common-Crawl-style web pages"; Common Crawl
 ships as WARC files (many ~1 GB archives, each a concatenation of
 warcinfo/request/response records). This module is the Spark plumbing
-around the grammar pinned in spec.py (render_warc_file/parse_warc_file —
+around the grammar pinned in spec.py (render_warc_file/walk_warc —
 one source of truth for both directions):
 
 - pack_warc_files: pages -> (warc_file, content) archive rows. Fixture
@@ -16,8 +16,11 @@ one source of truth for both directions):
   unit: ~1 GB each, so 100 TB = ~10^5 well-sized tasks with no shuffle at
   all). `.warc.gz` archives (Common Crawl's actual layout: one gzip
   member per record, members concatenated) gunzip inside the same map
-  stage — read_warc sniffs the gzip magic per file, so plain and gz
+  stage — spec.walk_warc sniffs the gzip magic per file, so plain and gz
   archives mix freely in one load.
+- cdx_index / fetch_by_index: the capture index and the random access it
+  drives. Every stage here walks through spec.walk_warc; a seek is
+  start=<offset>, max_records=1 on the whole archive, never a slice.
 
 Scale shape: both directions are ONE Arrow-batched Python stage and zero
 shuffles beyond pack's repartition on file id. Payload bytes cross Arrow
@@ -223,14 +226,14 @@ def read_warc(files: DataFrame, rec_type: str = "response") -> DataFrame:
     text, still returned in the binary html slot — decode at the caller,
     which knows the type it asked for).
 
-    Each archive is parsed binary-safely via Content-Length framing
-    (spec.parse_warc_file). Gzipped archives are detected per file by
-    the gzip magic (never by name) and walked member-by-member in the
-    same Arrow stage (spec.parse_warc_gz_file) — plain and .warc.gz
-    files mix freely in one ingest. A framing error emits the file's
-    good prefix AND one quarantine row carrying the position-stamped
-    reason — the resume/metrics story is identical to the landing-zone
-    readers: count failures, never silently drop bytes.
+    Each archive is walked binary-safely via Content-Length framing by
+    spec.walk_warc, which detects gzipped archives per file by the gzip
+    magic (never by name) and walks those member-by-member in the same
+    Arrow stage — plain and .warc.gz files mix freely in one ingest. A
+    framing error emits the file's good prefix AND one quarantine row
+    carrying the position-stamped reason — the resume/metrics story is
+    identical to the landing-zone readers: count failures, never
+    silently drop bytes.
 
     Sizing note (measured, tools/warc_scale_curve.py): archive rows are
     100s-of-KB blobs, so the session's pages-tuned scan split
@@ -246,11 +249,7 @@ def read_warc(files: DataFrame, rec_type: str = "response") -> DataFrame:
         for pdf in batches:
             rows = []
             for name, content in zip(pdf["warc_file"], pdf["content"]):
-                raw = bytes(content)
-                walker = (spec.parse_warc_gz_file
-                          if raw[:2] == spec.GZIP_MAGIC
-                          else spec.parse_warc_file)
-                recs, err = walker(raw, rec_type=rec_type)
+                recs, err = spec.walk_warc(bytes(content), rec_type=rec_type)
                 # digest_err rides on the record row itself (url/payload
                 # present): framing is sound, the payload is suspect —
                 # the caller decides whether to quarantine or refetch
@@ -279,9 +278,9 @@ def cdx_index(files: DataFrame, rec_type: str = "response") -> DataFrame:
     position, byte offset, payload digest). The offset is the number a
     consumer SEEKS to (for .warc.gz: the record's gzip member offset),
     so the index is only as good as its seekability — this builder
-    re-parses each archive's suffix at every recorded offset inside the
-    same Arrow stage and stamps seek_ok='ok' only when the record
-    recovered at the offset is byte-identical to the record indexed.
+    seeks every recorded offset inside the same Arrow stage (one record
+    walked from start=offset) and stamps seek_ok='ok' only when the
+    record recovered there is byte-identical to the record indexed.
     One stateless map stage, parallelism = archive files, zero shuffle —
     the same 100 TB shape as read_warc. A malformed archive yields its
     good prefix plus a position-stamped quarantine row (url NULL,
@@ -291,16 +290,10 @@ def cdx_index(files: DataFrame, rec_type: str = "response") -> DataFrame:
             rows = []
             for name, content in zip(pdf["warc_file"], pdf["content"]):
                 raw = bytes(content)
-                walker = (spec.parse_warc_gz_file
-                          if raw[:2] == spec.GZIP_MAGIC
-                          else spec.parse_warc_file)
-                recs, err = walker(raw, rec_type=rec_type)
+                recs, err = spec.walk_warc(raw, rec_type=rec_type)
                 for i, r in enumerate(recs):
-                    # max_records=1: the verify re-parses ONE record at
-                    # the offset, keeping the whole index build O(n) in
-                    # archive bytes instead of O(n^2) suffix re-walks
-                    sub, serr = walker(raw[r.offset:], rec_type=rec_type,
-                                       max_records=1)
+                    sub, serr = spec.walk_warc(raw, rec_type=rec_type,
+                                               start=r.offset, max_records=1)
                     if not sub:
                         ok = f"seek recovered no record ({serr})"
                     elif (sub[0].url != r.url
@@ -335,10 +328,11 @@ def fetch_by_index(files: DataFrame, index: DataFrame, wanted: DataFrame,
        is gunzipped per hit).
 
     On object storage the same hit list drives byte-range GETs; here the
-    archive row carries the full content and the seek is a slice. The
-    hit list is materialized to the driver WHEN CALLED (it IS the
-    driver's fetch plan — the names of the objects to GET), bounded by
-    limits.MAX_DRIVER_LIST and asserted: a literal IN-filter on
+    archive row carries the full content and the seek is
+    spec.walk_warc(start=offset). The hit list is materialized to the
+    driver WHEN CALLED (it IS the driver's fetch plan — the names of the
+    objects to GET); past limits.MAX_DRIVER_LIST archives it raises
+    ValueError (limits.check_driver_list_bound): a literal IN-filter on
     warc_file pushes into the archive scan and skips untouched row
     groups, which no join-side pruning can do (the limits.py
     convention). Every hit yields a row: a stale/corrupt index entry
@@ -372,9 +366,6 @@ def fetch_by_index(files: DataFrame, index: DataFrame, wanted: DataFrame,
             for name, content, offsets in zip(
                     pdf["warc_file"], pdf["content"], pdf["_offsets"]):
                 raw = bytes(content)
-                walker = (spec.parse_warc_gz_file
-                          if raw[:2] == spec.GZIP_MAGIC
-                          else spec.parse_warc_file)
                 for off in offsets:
                     off = int(off)
                     if not 0 <= off < len(raw):
@@ -382,8 +373,8 @@ def fetch_by_index(files: DataFrame, index: DataFrame, wanted: DataFrame,
                                      f"index offset {off} outside archive "
                                      f"(len {len(raw)})"))
                         continue
-                    recs, err = walker(raw[off:], rec_type=rec_type,
-                                       max_records=1)
+                    recs, err = spec.walk_warc(raw, rec_type=rec_type,
+                                               start=off, max_records=1)
                     if recs:
                         r = recs[0]
                         rows.append((r.url, _parse_warc_date(r.warc_date),

@@ -334,7 +334,8 @@ def render_warc_file(records: list[tuple[str, str, bytes]],
 
 def parse_warc_file(data: bytes,
                     rec_type: str = "response",
-                    max_records: int | None = None) -> tuple[list[WarcRecord], str | None]:
+                    max_records: int | None = None,
+                    start: int = 0) -> tuple[list[WarcRecord], str | None]:
     """Binary-safe WARC walk. Returns (rec_type records in file order, err).
 
     rec_type="response" reads WARC page archives; "conversion" reads WET
@@ -348,13 +349,15 @@ def parse_warc_file(data: bytes,
 
     max_records stops the walk as soon as that many rec_type records
     have been collected (err None — the unvisited tail is not
-    validated). This is the seek primitive: parsing one record at a
-    CDX offset is O(record), not O(archive suffix).
+    validated). start begins the walk at that byte of data, so offsets
+    and error positions stay absolute. Together they are the seek
+    primitive: start=<CDX offset>, max_records=1 costs O(record) and
+    copies nothing of the archive suffix.
     """
     out: list[WarcRecord] = []
     if max_records is not None and max_records <= 0:
         return out, None
-    pos = 0
+    pos = start
     n = len(data)
     while pos < n:
         if not data.startswith(WARC_VERSION + b"\r\n", pos):
@@ -443,7 +446,8 @@ def render_warc_gz_file(records: list[tuple[str, str, bytes]],
 
 def parse_warc_gz_file(data: bytes,
                        rec_type: str = "response",
-                       max_records: int | None = None) -> tuple[list[WarcRecord], str | None]:
+                       max_records: int | None = None,
+                       start: int = 0) -> tuple[list[WarcRecord], str | None]:
     """Binary-safe .warc.gz walk: gunzip one concatenated member at a
     time (streamed in bounded chunks — linear in the archive, no
     per-member tail copy) and run the plain-WARC grammar on each
@@ -451,12 +455,12 @@ def parse_warc_gz_file(data: bytes,
     byte offset — the number a CC-style index stores. Error contract
     matches parse_warc_file: the first corrupt/truncated member stops
     the walk with a position-stamped reason; everything before it is
-    returned."""
+    returned. max_records and start are parse_warc_file's."""
     import zlib
     out: list[WarcRecord] = []
     if max_records is not None and max_records <= 0:
         return out, None
-    pos, n = 0, len(data)
+    pos, n = start, len(data)
     view = memoryview(data)
     while pos < n:
         member_at = pos
@@ -481,6 +485,16 @@ def parse_warc_gz_file(data: bytes,
         if max_records is not None and len(out) >= max_records:
             return out, None
     return out, None
+
+
+def walk_warc(data: bytes, rec_type: str = "response", start: int = 0,
+              max_records: int | None = None) -> tuple[list[WarcRecord], str | None]:
+    """Walk a WARC archive of either layout from byte `start`: the
+    file's own first two bytes (never its name) pick parse_warc_gz_file
+    or parse_warc_file, so plain and .warc.gz archives mix freely."""
+    walker = parse_warc_gz_file if data[:2] == GZIP_MAGIC else parse_warc_file
+    return walker(data, rec_type=rec_type, max_records=max_records,
+                  start=start)
 
 
 def render_html(text: str, doc_id: int | None = None,

@@ -232,7 +232,9 @@ def test_warc_max_records_is_exact_prefix(recs, k):
     """The seek primitive's contract: parsing with max_records=k returns
     EXACTLY the first k records of the full parse (url, payload, offset
     all equal) with err None once k records were found — for both the
-    plain and the per-record-gzip layout."""
+    plain and the per-record-gzip layout. walk_warc picks that layout
+    itself, and its start=o seek returns what the sliced form
+    parse(data[o:]) returns, with the offset made absolute."""
     date = "2024-05-06T07:08:09Z"
     triples = [(u, date, p) for u, p in recs]
     for render, parse in ((spec.render_warc_file, spec.parse_warc_file),
@@ -241,8 +243,17 @@ def test_warc_max_records_is_exact_prefix(recs, k):
         data = render(triples)
         full, err_full = parse(data)
         assert err_full is None
+        assert spec.walk_warc(data) == (full, None)
         got, err = parse(data, max_records=k)
         key = [(r.url, r.payload, r.offset) for r in got]
         want = [(r.url, r.payload, r.offset) for r in full[:k]]
         assert key == want
         assert err is None
+        for r in full:
+            o = r.offset
+            sliced, serr = parse(data[o:], max_records=1)
+            seek, err = spec.walk_warc(data, start=o, max_records=1)
+            assert serr is None and err is None
+            assert seek == [s._replace(offset=s.offset + o) for s in sliced]
+            assert (seek[0].url, seek[0].payload, seek[0].offset) == (
+                r.url, r.payload, o)

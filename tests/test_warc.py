@@ -565,6 +565,11 @@ def test_fetch_by_index_quarantines_stale_offsets(spark):
     errs = sorted((r for r in rows if r.url is None),
                   key=lambda r: r.rec_offset)
     assert "no response record at offset" in errs[0].warc_err
+    # the seek walks the whole archive from the offset, so the framing
+    # error names the absolute file byte, not a slice-relative 0
+    stale = int(good["https://a.com/2"]) + 7
+    assert errs[0].rec_offset == stale
+    assert f"at byte {stale}" in errs[0].warc_err
     assert "outside archive" in errs[1].warc_err
 
 

@@ -128,6 +128,8 @@ def main() -> None:
 
     from tools.scaling_bench import build_corpus
     corpus = build_corpus(args.docs)
+    # ship the working tree's package, never a stale prebuilt archive
+    subprocess.run(["make", "dist"], check=True)
 
     lo = run_leg(corpus, args.small, args.executor_cores, args.runs)
     print(json.dumps(lo))
