@@ -21,8 +21,8 @@ Spark-first shapes:
   million-row blocklist alike.
 
 Determinism (oracle bit-exactness): BM25/TF-IDF idf uses ln → round 12
-both engines (fn_math precedent); per-document score sums fold LEFT
-over term-sorted contribution arrays (DuckDB list_reduce folds left
+both engines (libm ln can differ by 1 ulp); per-document score sums fold
+LEFT over term-sorted contribution arrays (DuckDB list_reduce folds left
 from the first element; Spark F.aggregate folds left from 0.0, and
 0.0 + x == x exactly — same convention as the ANN oracles); every
 top-k ordering carries a unique tie-break.
@@ -149,7 +149,8 @@ def phrase_match(docs: DataFrame, phrase: list[str]) -> DataFrame:
     drops at the map-completeness check, so repeated-term phrases
     ("a b a") and single-term phrases both stay correct.
     """
-    assert phrase, "phrase must be non-empty"
+    if not phrase:
+        raise ValueError("phrase must be non-empty")
     distinct_terms = sorted(set(phrase))
     tp = (positional_index(docs, distinct_terms)
           .groupBy("doc_id")

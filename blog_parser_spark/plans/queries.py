@@ -204,38 +204,8 @@ def q_win_dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# relational core over the TPC-H-ish fixtures
+# relational core over the star-schema fixtures
 # ---------------------------------------------------------------------------
-
-@register("project_basic", """
-SELECT l_orderkey, l_linenumber,
-       CAST(CAST(CAST(l_extendedprice AS DECIMAL(18,4))
-            * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))
-            AS DECIMAL(18,4)) AS DOUBLE) AS net_price,
-       upper(l_returnflag) AS flag
-FROM lineitem
-""")
-def q_project_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact decimal arithmetic internally, DOUBLE on the wire: inputs are
-    cast to DECIMAL(18,4) BEFORE the multiply (fixture prices/discounts
-    carry at most 2 decimal digits, so the double->decimal input cast is
-    unambiguous in any engine), the product — exact in decimal — is
-    rounded once, then the OUTPUT column is cast back to DOUBLE. The
-    decimal value is exact at 4 digits with scaled magnitude << 2^53, so
-    decimal->double is the correctly-rounded nearest double in both
-    engines; emitting DECIMAL instead trips harness-side canonicalization
-    of decimal output columns (CORRECTNESS_r02: values bit-identical
-    locally, driver hash mismatch). Repo convention: DECIMAL is for
-    internal partials only, never an output column."""
-    li = io.read_table(spark, sf_dir, "lineitem")
-    price = F.col("l_extendedprice").cast("decimal(18,4)")
-    disc = F.col("l_discount").cast("decimal(18,4)")
-    return li.select(
-        "l_orderkey", "l_linenumber",
-        (price * (F.lit(1).cast("decimal(18,4)") - disc))
-        .cast("decimal(18,4)").cast("double").alias("net_price"),
-        F.upper("l_returnflag").alias("flag"))
-
 
 @register("join_smj", """
 SELECT o.o_orderstatus AS status, COUNT(*) AS line_count,
@@ -464,30 +434,8 @@ def q_win_ntile_percent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# sorts / limits / top-k / set ops
+# top-k per group
 # ---------------------------------------------------------------------------
-
-@register("sort_global", """
-SELECT doc_id, lang, n_chars,
-       row_number() OVER (ORDER BY lang, n_chars DESC, doc_id) AS pos
-FROM documents
-""")
-def q_sort_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = io.read_table(spark, sf_dir, "documents")
-    w = Window.orderBy("lang", F.desc("n_chars"), "doc_id")
-    return docs.select("doc_id", "lang", "n_chars",
-                       F.row_number().over(w).alias("pos"))
-
-
-@register("limit_topk", """
-SELECT o_orderkey, o_totalprice FROM orders
-ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
-""")
-def q_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = io.read_table(spark, sf_dir, "orders")
-    return (o.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-            .select("o_orderkey", "o_totalprice").limit(10))
-
 
 @register("topk_per_group", """
 SELECT p_brand, p_partkey, p_retailprice FROM (
@@ -501,145 +449,3 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), "p_partkey")
     return (p.withColumn("rn", F.row_number().over(w)).filter("rn <= 3")
             .select("p_brand", "p_partkey", "p_retailprice"))
-
-
-@register("set_union", """
-SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
-UNION
-SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-""")
-def q_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = io.read_table(spark, sf_dir, "orders")
-    a = o.filter("o_orderstatus = 'O'").select(F.col("o_custkey").alias("custkey"))
-    b = o.filter("o_orderstatus = 'F'").select(F.col("o_custkey").alias("custkey"))
-    return a.unionByName(b).distinct()
-
-
-@register("set_intersect", """
-SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
-INTERSECT
-SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-""")
-def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = io.read_table(spark, sf_dir, "orders")
-    a = o.filter("o_orderstatus = 'O'").select(F.col("o_custkey").alias("custkey"))
-    b = o.filter("o_orderstatus = 'F'").select(F.col("o_custkey").alias("custkey"))
-    return a.intersect(b)
-
-
-@register("set_except", """
-SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
-EXCEPT
-SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-""")
-def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = io.read_table(spark, sf_dir, "orders")
-    a = o.filter("o_orderstatus = 'O'").select(F.col("o_custkey").alias("custkey"))
-    b = o.filter("o_orderstatus = 'F'").select(F.col("o_custkey").alias("custkey"))
-    return a.subtract(b)
-
-
-# ---------------------------------------------------------------------------
-# scalar function families
-# ---------------------------------------------------------------------------
-
-@register("fn_string", """
-SELECT p_partkey, lower(p_name) AS lname, upper(p_brand) AS ubrand,
-       length(p_name) AS name_len, substr(p_type, 1, 5) AS type5,
-       concat(p_brand, ':', p_type) AS brand_type,
-       replace(p_name, ' ', '_') AS name_us,
-       trim(p_name) AS name_trim
-FROM part
-""")
-def q_fn_string(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = io.read_table(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        F.lower("p_name").alias("lname"), F.upper("p_brand").alias("ubrand"),
-        F.length("p_name").alias("name_len"),
-        F.substring("p_type", 1, 5).alias("type5"),
-        F.concat_ws("", F.col("p_brand"), F.lit(":"), F.col("p_type")).alias("brand_type"),
-        F.regexp_replace("p_name", " ", "_").alias("name_us"),
-        F.trim(F.col("p_name")).alias("name_trim"))
-
-
-@register("fn_datetime", """
-SELECT event_id, CAST(ts AS DATE) AS day,
-       CAST(year(ts) AS INT) AS y, CAST(month(ts) AS INT) AS m,
-       CAST(hour(ts) AS INT) AS h,
-       CAST(date_trunc('month', ts) AS DATE) AS month_start,
-       CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS INT) AS days_since
-FROM events
-""")
-def q_fn_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = io.read_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id", F.to_date("ts").alias("day"),
-        F.year("ts").alias("y"), F.month("ts").alias("m"), F.hour("ts").alias("h"),
-        F.date_trunc("month", F.col("ts")).cast("date").alias("month_start"),
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date")).alias("days_since"))
-
-
-@register("fn_math", """
-SELECT l_orderkey, l_linenumber,
-       abs(l_quantity - 25) AS dev,
-       CAST(floor(l_quantity) AS BIGINT) AS qfloor,
-       CAST(ceil(l_quantity / 2) AS BIGINT) AS qhalf,
-       sqrt(CAST(l_quantity AS DOUBLE)) AS qsqrt,
-       round(ln(CAST(l_quantity AS DOUBLE) + 1), 12) AS qln,
-       CAST(l_quantity AS BIGINT) % 7 AS qmod
-FROM lineitem
-""")
-def q_fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = io.read_table(spark, sf_dir, "lineitem")
-    q = F.col("l_quantity")
-    return li.select(
-        "l_orderkey", "l_linenumber",
-        F.abs(q - 25).alias("dev"),
-        F.floor(q).cast("long").alias("qfloor"),
-        F.ceil(q / 2).cast("long").alias("qhalf"),
-        F.sqrt(q.cast("double")).alias("qsqrt"),
-        # ln is the one libm-dependent fn here: JVM Math.log and duckdb's
-        # libm differ by 1 ulp on some inputs; round(12) makes the value
-        # engine-independent (sqrt/abs/floor/ceil are IEEE-exact already)
-        F.round(F.log(q.cast("double") + 1), 12).alias("qln"),
-        (q.cast("long") % 7).alias("qmod"))
-
-
-@register("fn_hash", PAGES_SQL + """
-SELECT url, md5(url) AS url_md5 FROM routed_sink
-""")
-def q_fn_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pages = io.synth_pages(spark, sf_dir).select("url")
-    return pages.select("url", F.md5(F.col("url").cast("binary")).alias("url_md5"))
-
-
-@register("fn_array", """
-SELECT doc_id,
-       CAST(length(string_split(text, ' ')) AS INT) AS n_words,
-       array_to_string(string_split(text, ' ')[1:5], '|') AS first5,
-       CAST(list_contains(string_split(text, ' '), 'spark') AS BOOLEAN) AS has_spark,
-       array_to_string(list_transform(string_split(text, ' ')[1:3], w -> upper(w)), '|') AS up3
-FROM documents
-""")
-def q_fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = io.read_table(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
-    return docs.select(
-        "doc_id",
-        F.size(words).alias("n_words"),
-        F.concat_ws("|", F.slice(words, 1, 5)).alias("first5"),
-        F.array_contains(words, "spark").alias("has_spark"),
-        F.concat_ws("|", F.transform(F.slice(words, 1, 3),
-                                     lambda w: F.upper(w))).alias("up3"))
-
-
-@register("fn_json", """
-SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k
-FROM events
-""")
-def q_fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = io.read_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("int").alias("k"))

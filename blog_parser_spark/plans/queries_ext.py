@@ -1,7 +1,7 @@
 """Driver-contract queries, batch 3: skew-salted join, batch window
 aggregates (tumbling + session via gaps-and-islands oracle), pivot,
-percentiles, min_by/max_by, grouping sets, multiset set-ops, map/url/try
-scalar families, and the Spark-4 Python UDTF surface."""
+percentiles, min_by/max_by, grouping sets, url parsing, window frames,
+the SQL-API flagship, histogram binning, gap-fill, and bitmap distincts."""
 
 from __future__ import annotations
 
@@ -98,7 +98,6 @@ def q_agg_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "events"))
 
 
-
 @register("agg_pivot", """
 SELECT lang,
   COUNT(*) FILTER (WHERE source = 'src0') AS src0,
@@ -114,28 +113,6 @@ def q_agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)))
             .select("lang", *[F.coalesce(F.col(f"src{i}"), F.lit(0)).alias(f"src{i}")
                               for i in range(4)]))
-
-
-@register("set_unpivot", """
-SELECT doc_id, metric, CAST(val AS BIGINT) AS val
-FROM (SELECT doc_id, n_chars, length(string_split(text, ' ')) AS n_words
-      FROM documents)
-UNPIVOT (val FOR metric IN (n_chars, n_words))
-""")
-def q_set_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide->long melt (df.unpivot / SQL UNPIVOT): the inverse of
-    agg_pivot. Runs as a JVM Expand node — each input row emits one row
-    per value column, no shuffle, no Python."""
-    docs = io.read_table(spark, sf_dir, "documents")
-    wide = docs.select(
-        "doc_id", F.col("n_chars").cast("long").alias("n_chars"),
-        F.size(F.split("text", " ")).cast("long").alias("n_words"))
-    # Spark's unpivot RETAINS null values; SQL UNPIVOT excludes them by
-    # default — filter nulls so both sides agree even if a value column
-    # is ever null (fixtures are non-null today; don't rely on that)
-    return (wide.unpivot("doc_id", ["n_chars", "n_words"], "metric", "val")
-            .filter(F.col("val").isNotNull())
-            .select("doc_id", "metric", F.col("val").cast("long").alias("val")))
 
 
 @register("agg_percentile", """
@@ -212,55 +189,8 @@ def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# multiset set ops
+# scalar families: url parsing
 # ---------------------------------------------------------------------------
-
-@register("set_intersect_all", """
-SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
-INTERSECT ALL
-SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-""")
-def q_set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = io.read_table(spark, sf_dir, "orders")
-    a = o.filter("o_orderstatus = 'O'").select(F.col("o_custkey").alias("custkey"))
-    b = o.filter("o_orderstatus = 'F'").select(F.col("o_custkey").alias("custkey"))
-    return a.intersectAll(b)
-
-
-@register("set_except_all", """
-SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
-EXCEPT ALL
-SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-""")
-def q_set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = io.read_table(spark, sf_dir, "orders")
-    a = o.filter("o_orderstatus = 'O'").select(F.col("o_custkey").alias("custkey"))
-    b = o.filter("o_orderstatus = 'F'").select(F.col("o_custkey").alias("custkey"))
-    return a.exceptAll(b)
-
-
-# ---------------------------------------------------------------------------
-# scalar families: map/json, url, try_, conditional
-# ---------------------------------------------------------------------------
-
-@register("fn_map", """
-SELECT event_id,
-  array_to_string(json_keys(props), ',') AS prop_keys,
-  CAST(json_extract_string(props, '$.k') AS INT) AS k_val,
-  CASE WHEN json_extract_string(props, '$.missing') IS NULL THEN 'absent'
-       ELSE 'present' END AS missing_state
-FROM events
-""")
-def q_fn_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = io.read_table(spark, sf_dir, "events")
-    m = F.from_json("props", "map<string,int>")
-    return ev.select(
-        "event_id",
-        F.concat_ws(",", F.map_keys(m)).alias("prop_keys"),
-        F.element_at(m, "k").alias("k_val"),
-        F.when(F.element_at(m, "missing").isNull(), "absent")
-        .otherwise("present").alias("missing_state"))
-
 
 @register("fn_url", PAGES_SQL_REF := """
 WITH p AS (
@@ -289,45 +219,6 @@ def q_fn_url(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.parse_url("url", F.lit("HOST")).alias("host"),
         F.parse_url("url", F.lit("PATH")).alias("path"),
         F.parse_url("url", F.lit("QUERY")).alias("query"))
-
-
-@register("fn_try", """
-SELECT doc_id,
-  try_cast(lang AS INT) AS lang_as_int,
-  try_cast(CAST(doc_id AS VARCHAR) AS INT) AS id_roundtrip,
-  CAST(doc_id AS BIGINT) // nullif(doc_id % 3, 0) AS try_div
-FROM documents
-""")
-def q_fn_try(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = io.read_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.expr("try_cast(lang AS INT)").alias("lang_as_int"),
-        F.expr("try_cast(CAST(doc_id AS STRING) AS INT)").alias("id_roundtrip"),
-        F.try_divide(F.col("doc_id"), F.nullif(F.col("doc_id") % 3, F.lit(0)))
-        .cast("long").alias("try_div"))
-
-
-@register("fn_conditional", """
-SELECT doc_id,
-  CASE WHEN n_chars >= 400 THEN 'xl' WHEN n_chars >= 250 THEN 'l'
-       WHEN n_chars >= 120 THEN 'm' ELSE 's' END AS size_class,
-  coalesce(nullif(lang, 'en'), 'english') AS lang_or_default,
-  greatest(n_chars, doc_id) AS g, least(n_chars, doc_id) AS l,
-  CASE WHEN doc_id % 2 = 0 THEN NULL ELSE doc_id END AS odd_or_null
-FROM documents
-""")
-def q_fn_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = io.read_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.when(F.col("n_chars") >= 400, "xl").when(F.col("n_chars") >= 250, "l")
-        .when(F.col("n_chars") >= 120, "m").otherwise("s").alias("size_class"),
-        F.coalesce(F.nullif("lang", F.lit("en")), F.lit("english")).alias("lang_or_default"),
-        F.greatest("n_chars", "doc_id").alias("g"),
-        F.least("n_chars", "doc_id").alias("l"),
-        F.when(F.col("doc_id") % 2 == 0, F.lit(None).cast("long"))
-        .otherwise(F.col("doc_id")).alias("odd_or_null"))
 
 
 # ---------------------------------------------------------------------------
@@ -376,37 +267,6 @@ def q_win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Spark-4 Python UDTF surface (alternative exploder; SURVEY.md §2.3)
-# ---------------------------------------------------------------------------
-
-@register("udtf_word_explode", """
-SELECT doc_id, CAST(i - 1 AS INT) AS word_idx,
-       string_split(text, ' ')[i] AS word
-FROM (SELECT doc_id, text, unnest(range(1, len(string_split(text,' ')) + 1)) AS i
-      FROM documents WHERE doc_id < 20)
-""")
-def q_udtf_word_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Python UDTF (table function) — the row-expanding UDF surface. Kept
-    off hot paths (pandas+explode is vectorized; UDTF is row-at-a-time)
-    but registered to prove the operator surface works."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="word_idx int, word string")
-    class WordExplode:
-        def eval(self, text: str):
-            if text:
-                for i, w in enumerate(text.split(" ")):
-                    yield i, w
-
-    spark.udtf.register("word_explode", WordExplode)
-    io.read_table(spark, sf_dir, "documents").createOrReplaceTempView("docs_udtf")
-    return spark.sql("""
-        SELECT d.doc_id, t.word_idx, t.word
-        FROM docs_udtf d, LATERAL word_explode(d.text) t
-        WHERE d.doc_id < 20""")
-
-
-# ---------------------------------------------------------------------------
 # SQL-API parity: the flagship aggregate written as pure spark.sql over a
 # temp view of the parsed rows — same oracle as agg_sink_counts
 # ---------------------------------------------------------------------------
@@ -447,24 +307,6 @@ def q_agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = F.least(F.floor(F.col("o_totalprice") / 60000.0), F.lit(9)).cast("int")
     return (o.groupBy(b.alias("bucket"))
             .agg(F.count(F.lit(1)).alias("n")))
-
-
-@register("sql_exists_subquery", """
-SELECT c_custkey, c_name FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o
-              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-""")
-def q_sql_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated EXISTS through the SQL surface: Catalyst's
-    RewritePredicateSubquery turns it into the same left-semi join the
-    DataFrame API's join_semi uses — this entry pins the SQL path."""
-    io.read_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_sq")
-    io.read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_sq")
-    return spark.sql("""
-        SELECT c_custkey, c_name FROM customer_sq c
-        WHERE EXISTS (SELECT 1 FROM orders_sq o
-                      WHERE o.o_custkey = c.c_custkey
-                        AND o.o_totalprice > 300000)""")
 
 
 @register("win_gapfill", """

@@ -1,6 +1,6 @@
-"""Batch-4 driver-contract queries: raw scan pushdown, struct functions,
-and embedding-cosine near-duplicate detection (SURVEY.md §2.3 scans +
-training-data ops).
+"""Batch-4 driver-contract queries: batch sessionization, binned range
+join, raw scan pushdown, embedding-cosine near-duplicate detection and
+the bloom-prefiltered join (SURVEY.md §2.3 scans + training-data ops).
 
 Determinism notes follow queries.py: identical aliases both sides, doubles
 rounded after identical double-precision arithmetic, unique tie-breaks.
@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..operators import custom_pandas, joins
+from ..operators import joins
 from ..sources import io
 from .registry import register
 
@@ -79,33 +79,6 @@ def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# grouped pandas-UDF surfaces — the UDAF / grouped-map rows of the §2.3
-# UDF table, each verified against a plain-SQL oracle (the UDF computes
-# exactly what the SQL window/aggregate computes, so any mismatch is a
-# plumbing bug, not a semantics choice).
-# ---------------------------------------------------------------------------
-
-@register("udaf_grouped_agg", """
-SELECT lang, CAST(SUM(n_chars) AS BIGINT) AS total
-FROM documents GROUP BY lang
-""")
-def q_udaf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = io.read_table(spark, sf_dir, "documents")
-    return custom_pandas.checked_byte_sums(docs, "lang", "n_chars")
-
-
-@register("grouped_map_cumsum", """
-SELECT source, doc_id, n_chars,
-       CAST(SUM(n_chars) OVER (PARTITION BY source ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-FROM documents
-""")
-def q_grouped_map_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = io.read_table(spark, sf_dir, "documents")
-    return custom_pandas.group_cumsum(docs, "source", "doc_id", "n_chars")
-
-
-# ---------------------------------------------------------------------------
 # scan_parquet — the §2.3 raw-scan entry. The Spark plan must show the
 # filter as PushedFilters and the projection as a 4-column ReadSchema
 # (asserted in tests/test_plans.py); the oracle is the same relational op.
@@ -121,140 +94,6 @@ def q_scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (li.filter((F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
                       & (F.col("l_quantity") < 10))
             .select("l_orderkey", "l_partkey", "l_quantity", "l_shipdate"))
-
-
-# ---------------------------------------------------------------------------
-# fn_struct — StructType create / field access / nested sort key.
-# ---------------------------------------------------------------------------
-
-@register("fn_struct", """
-SELECT doc_id,
-       s.src AS src, s.n AS n,
-       CASE WHEN s.n >= 300 THEN 'long' ELSE 'short' END AS bucket
-FROM (SELECT doc_id, struct_pack(src := source, n := n_chars) AS s
-      FROM documents)
-""")
-def q_fn_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = io.read_table(spark, sf_dir, "documents")
-    s = F.struct(F.col("source").alias("src"), F.col("n_chars").alias("n"))
-    return (docs.withColumn("s", s)
-            .select("doc_id",
-                    F.col("s.src").alias("src"),
-                    F.col("s.n").alias("n"),
-                    F.when(F.col("s.n") >= 300, "long").otherwise("short")
-                     .alias("bucket")))
-
-
-# ---------------------------------------------------------------------------
-# Composite analytics (TPC-H-shaped) — multi-join + aggregate plans that
-# exercise join strategy selection, pushdown through joins, and top-k.
-# Double sums go through DECIMAL(18,4) partials (exact, order-independent)
-# per the repo determinism convention; top-k carries a unique tie-break.
-# ---------------------------------------------------------------------------
-
-def _dsum(col):
-    return F.sum(col.cast("decimal(18,4)")).cast("double")
-
-
-@register("tpch_q1_pricing", """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-       CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-       round(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-             / COUNT(*), 6) AS avg_qty,
-       COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '2001-09-02'
-GROUP BY l_returnflag, l_linestatus
-""")
-def q_tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = (io.read_table(spark, sf_dir, "lineitem")
-          .filter(F.col("l_shipdate") <= F.lit("2001-09-02").cast("timestamp")))
-    # exact decimal BEFORE the multiply — double*double cast after the
-    # product puts the rounding boundary on a half-ULP engines disagree on
-    disc = (F.col("l_extendedprice").cast("decimal(18,4)")
-            * (F.lit(1).cast("decimal(18,4)")
-               - F.col("l_discount").cast("decimal(18,4)"))).cast("decimal(18,4)")
-    return (li.groupBy("l_returnflag", "l_linestatus")
-            .agg(_dsum(F.col("l_quantity")).alias("sum_qty"),
-                 _dsum(F.col("l_extendedprice")).alias("sum_base_price"),
-                 _dsum(disc).alias("sum_disc_price"),
-                 F.round(_dsum(F.col("l_quantity"))
-                         / F.count(F.lit(1)), 6).alias("avg_qty"),
-                 F.count(F.lit(1)).alias("count_order")))
-
-
-@register("tpch_q3_shipping", """
-SELECT l_orderkey,
-       CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-       o_orderdate, o_orderpriority
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-  AND l_shipdate  > TIMESTAMP '1997-01-01'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey
-LIMIT 10
-""")
-def q_tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = (io.read_table(spark, sf_dir, "customer")
-            .filter(F.col("c_mktsegment") == "BUILDING"))
-    orders = (io.read_table(spark, sf_dir, "orders")
-              .filter(F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp")))
-    li = (io.read_table(spark, sf_dir, "lineitem")
-          .filter(F.col("l_shipdate") > F.lit("1997-01-01").cast("timestamp")))
-    # exact decimal BEFORE the multiply — double*double cast after the
-    # product puts the rounding boundary on a half-ULP engines disagree on
-    disc = (F.col("l_extendedprice").cast("decimal(18,4)")
-            * (F.lit(1).cast("decimal(18,4)")
-               - F.col("l_discount").cast("decimal(18,4)"))).cast("decimal(18,4)")
-    return (cust.join(orders, cust.c_custkey == orders.o_custkey)
-            .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-            .agg(_dsum(disc).alias("revenue"))
-            .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-            .orderBy(F.desc("revenue"), "l_orderkey").limit(10))
-
-
-@register("tpch_q5_local_supplier", """
-SELECT n_name,
-       CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate <  TIMESTAMP '1998-01-01'
-GROUP BY n_name
-""")
-def q_tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = io.read_table(spark, sf_dir, "customer")
-    orders = (io.read_table(spark, sf_dir, "orders")
-              .filter((F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-                      & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))))
-    li = io.read_table(spark, sf_dir, "lineitem")
-    supp = io.read_table(spark, sf_dir, "supplier")
-    nation = io.read_table(spark, sf_dir, "nation")
-    region = io.read_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    # exact decimal BEFORE the multiply — double*double cast after the
-    # product puts the rounding boundary on a half-ULP engines disagree on
-    disc = (F.col("l_extendedprice").cast("decimal(18,4)")
-            * (F.lit(1).cast("decimal(18,4)")
-               - F.col("l_discount").cast("decimal(18,4)"))).cast("decimal(18,4)")
-    return (cust.join(orders, cust.c_custkey == orders.o_custkey)
-            .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(supp, (F.col("l_suppkey") == F.col("s_suppkey"))
-                  & (F.col("c_nationkey") == F.col("s_nationkey")))
-            .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-            .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-            .groupBy("n_name")
-            .agg(_dsum(disc).alias("revenue")))
 
 
 # ---------------------------------------------------------------------------
@@ -318,32 +157,6 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (pairs.withColumn("cos", F.round(cos, 6))
             .filter(F.col("cos") >= 0.99)
             .select("id_a", "id_b", "cos"))
-
-
-@register("tpch_q6_forecast_revenue", """
-SELECT CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,4))
-                     * CAST(l_discount AS DECIMAL(18,4))
-                     AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-  AND l_shipdate <  TIMESTAMP '1996-01-01'
-  AND l_discount BETWEEN 0.05 AND 0.07
-  AND l_quantity < 24
-""")
-def q_tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pushdown-economy query: every predicate reaches the parquet
-    scan (PushedFilters), the read schema is 4 columns, and the whole
-    plan is scan -> partial agg -> single-row exchange -> final agg —
-    no join, no wide shuffle. Revenue in exact decimal per convention."""
-    li = io.read_table(spark, sf_dir, "lineitem")
-    rev = (F.col("l_extendedprice").cast("decimal(18,4)")
-           * F.col("l_discount").cast("decimal(18,4)")).cast("decimal(18,4)")
-    return (li.filter(
-        (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_discount") >= 0.05) & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24))
-        .agg(F.sum(rev).cast("double").alias("revenue")))
 
 
 @register("join_bloom_prefilter", """

@@ -684,48 +684,6 @@ def q_training_data_neardup_removal(spark: SparkSession, sf_dir: str) -> DataFra
     return sampling.sample_fraction(reps, "doc_id", 800_000)
 
 
-@register("fn_binary", """
-SELECT doc_id,
-       to_base64(encode(substr(text, 1, 24))) AS b64_prefix,
-       hex(encode(substr(text, 1, 8))) AS hex_prefix,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes_utf8,
-       md5(text) AS text_md5
-FROM documents
-""")
-def q_fn_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column function family over text payloads (the html-column
-    ops a webtext pipeline runs): base64/hex encode, utf8 byte length,
-    md5 — all JVM expressions, cross-engine byte-identical."""
-    docs = io.read_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.base64(F.substring("text", 1, 24).cast("binary")).alias("b64_prefix"),
-        F.hex(F.substring("text", 1, 8).cast("binary")).alias("hex_prefix"),
-        F.octet_length("text").cast("long").alias("n_bytes_utf8"),
-        F.md5(F.col("text").cast("binary")).alias("text_md5"))
-
-
-@register("fn_variant", """
-SELECT event_id,
-       CAST(json_extract(props, '$.k') AS INT) AS k,
-       CASE WHEN CAST(json_extract(props, '$.k') AS INT) >= 50
-            THEN 'hi' ELSE 'lo' END AS k_band
-FROM events
-""")
-def q_fn_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 VARIANT path for semi-structured log fields: parse_json
-    once into a variant, then typed variant_get extraction — the
-    schema-on-read shape for log props whose keys drift over time
-    (from_json needs a declared schema; variant does not). Oracle is the
-    equivalent JSON extraction."""
-    ev = io.read_table(spark, sf_dir, "events")
-    v = F.parse_json("props")
-    k = F.try_variant_get(v, "$.k", "int")
-    return ev.select(
-        "event_id", k.alias("k"),
-        F.when(k >= 50, "hi").otherwise("lo").alias("k_band"))
-
-
 @register("training_data_leakage_safe_split", f"""
 WITH RECURSIVE corpus AS ({_NEAR_CORPUS_SQL}),
 sh AS (SELECT doc_id, {_SHINGLES_SQL} AS s FROM corpus),

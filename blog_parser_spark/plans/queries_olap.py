@@ -1,8 +1,8 @@
-"""Batch-7 driver-contract queries: TPC-H-shaped optimizer breadth
-(correlated EXISTS agg, argmin-per-group, conditional aggregates,
-ratio-of-sums, HAVING top-k, disjunctive pushdown), log-analytics
-anomaly scoring, join-based triangle counting, mergeable partial
-aggregates, and URL canonicalization (the log-pipeline normalize step).
+"""Batch-7 driver-contract queries: log-analytics anomaly scoring,
+join-based triangle counting, mergeable partial aggregates, URL
+canonicalization (the log-pipeline normalize step), cohort retention,
+OHLC resampling, fuzzy and point-in-time joins, and log parsing (grok,
+templates, multiline stacks, IP/CIDR enrichment).
 
 Determinism notes follow queries.py: identical aliases both sides,
 double sums via DECIMAL(18,4) partials cast back to double, every
@@ -18,213 +18,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..operators import enrich, graph, groklog, logmine, urlnorm
 from ..sources import io
 from .registry import register
-
-
-def _dsum(col):
-    return F.sum(col.cast("decimal(18,4)")).cast("double")
-
-
-def _disc_price():
-    # exact decimal BEFORE the multiply — double*double cast after the
-    # product puts the rounding boundary on a half-ULP engines disagree on
-    return (F.col("l_extendedprice").cast("decimal(18,4)")
-            * (F.lit(1).cast("decimal(18,4)")
-               - F.col("l_discount").cast("decimal(18,4)"))).cast("decimal(18,4)")
-
-
-_DISC_SQL = ("CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * "
-             "(CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))) "
-             "AS DECIMAL(18,4))")
-
-
-# ---------------------------------------------------------------------------
-# tpch_q4_order_priority — correlated EXISTS folded into an aggregate:
-# orders in a quarter that had at least one lineitem shipped after the
-# order date, counted per priority. Spark plan: the EXISTS becomes a
-# LEFT SEMI sort-merge join with the non-equi ship>order predicate as
-# the join condition's residual — lineitem is never widened, duplicates
-# never multiply the count (semi-join semantics, not inner+distinct).
-# ---------------------------------------------------------------------------
-
-@register("tpch_q4_order_priority", """
-SELECT o_orderpriority, COUNT(*) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate <  TIMESTAMP '1996-07-01'
-  AND EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-GROUP BY o_orderpriority
-""")
-def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = (io.read_table(spark, sf_dir, "orders")
-              .filter((F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-                      & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))))
-    li = io.read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    return (orders.join(li, (F.col("l_orderkey") == F.col("o_orderkey"))
-                        & (F.col("l_shipdate") > F.col("o_orderdate")), "left_semi")
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("order_count")))
-
-
-# ---------------------------------------------------------------------------
-# tpch_q2_min_cost_supplier — argmin-per-group through a join: the
-# cheapest (supplier, price) ever observed per part. The classic
-# correlated-scalar-subquery shape, expressed as one aggregation plus
-# a window argmin — no re-scan of the fact table, no correlated loop.
-# Ties (equal min cost) break on s_suppkey so both engines pick the
-# same row.
-# ---------------------------------------------------------------------------
-
-@register("tpch_q2_min_cost_supplier", """
-SELECT l_partkey AS part_key, l_suppkey AS supp_key,
-       CAST(cost AS DOUBLE) AS min_cost
-FROM (
-  SELECT l_partkey, l_suppkey, min(l_extendedprice) AS cost,
-         row_number() OVER (PARTITION BY l_partkey
-                            ORDER BY min(l_extendedprice), l_suppkey) AS rn
-  FROM lineitem GROUP BY l_partkey, l_suppkey)
-WHERE rn = 1
-""")
-def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = io.read_table(spark, sf_dir, "lineitem")
-    per_supp = (li.groupBy("l_partkey", "l_suppkey")
-                .agg(F.min("l_extendedprice").alias("cost")))
-    w = Window.partitionBy("l_partkey").orderBy("cost", "l_suppkey")
-    return (per_supp.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("l_partkey").alias("part_key"),
-                    F.col("l_suppkey").alias("supp_key"),
-                    F.col("cost").cast("double").alias("min_cost")))
-
-
-# ---------------------------------------------------------------------------
-# tpch_q12_priority_by_flag — conditional aggregates (the CASE-inside-
-# SUM pattern): per return flag, how many lineitems belong to
-# high-priority vs low-priority orders. One join, one agg, both
-# conditional sums computed in the same pass (no double scan).
-# ---------------------------------------------------------------------------
-
-@register("tpch_q12_priority_by_flag", """
-SELECT l_returnflag,
-       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
-                THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l_shipdate <  TIMESTAMP '1997-01-01'
-GROUP BY l_returnflag
-""")
-def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = io.read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    li = (io.read_table(spark, sf_dir, "lineitem")
-          .filter((F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-                  & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))))
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-            .groupBy("l_returnflag")
-            .agg(F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-                 F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count")))
-
-
-# ---------------------------------------------------------------------------
-# tpch_q14_promo_revenue — ratio of two conditional decimal sums over
-# one month (promo revenue share). Both sums land in the same
-# aggregate; the ratio is computed on the exact-decimal results cast
-# to double, then round(6) — the division inputs are bit-identical
-# across engines so the quotient is too.
-# ---------------------------------------------------------------------------
-
-@register("tpch_q14_promo_revenue", f"""
-SELECT round(100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
-         THEN {_DISC_SQL} ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)
-       / CAST(SUM({_DISC_SQL}) AS DOUBLE), 6) AS promo_revenue_pct
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1996-09-01'
-  AND l_shipdate <  TIMESTAMP '1996-10-01'
-""")
-def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = (io.read_table(spark, sf_dir, "lineitem")
-          .filter((F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
-                  & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp"))))
-    part = io.read_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    disc = _disc_price()
-    promo = F.when(F.col("p_type") == "PROMO", disc).otherwise(
-        F.lit(0).cast("decimal(18,4)"))
-    return (li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-            .agg(F.round(F.lit(100.0) * _dsum(promo) / _dsum(disc), 6)
-                 .alias("promo_revenue_pct")))
-
-
-# ---------------------------------------------------------------------------
-# tpch_q18_large_orders — HAVING over a fact-side aggregate, then a
-# dimension join only for the survivors (aggregate-before-join: the
-# 60k-row lineitem collapses to ~100 qualifying orders BEFORE touching
-# customer), then deterministic top-k.
-# ---------------------------------------------------------------------------
-
-@register("tpch_q18_large_orders", """
-SELECT c_name, o_orderkey, o_orderdate,
-       CAST(o_totalprice AS DOUBLE) AS total_price,
-       CAST(sum_qty AS DOUBLE) AS sum_qty
-FROM (
-  SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-           AS sum_qty
-  FROM lineitem GROUP BY l_orderkey
-  HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) > 300)
-JOIN orders   ON o_orderkey = l_orderkey
-JOIN customer ON c_custkey = o_custkey
-ORDER BY total_price DESC, o_orderkey
-LIMIT 20
-""")
-def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = io.read_table(spark, sf_dir, "lineitem")
-    orders = io.read_table(spark, sf_dir, "orders")
-    cust = io.read_table(spark, sf_dir, "customer")
-    big = (li.groupBy("l_orderkey")
-           .agg(_dsum(F.col("l_quantity")).alias("sum_qty"))
-           .filter(F.col("sum_qty") > 300))
-    return (big.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-            .join(cust, F.col("c_custkey") == F.col("o_custkey"))
-            .select("c_name", "o_orderkey", "o_orderdate",
-                    F.col("o_totalprice").cast("double").alias("total_price"),
-                    F.col("sum_qty").cast("double").alias("sum_qty"))
-            .orderBy(F.desc("total_price"), "o_orderkey").limit(20))
-
-
-# ---------------------------------------------------------------------------
-# tpch_q19_disjunctive — OR-of-ANDs predicate spanning both join sides
-# (the "discounted revenue" shape). Catalyst extracts the common
-# l_quantity <= 30 / p_size >= 1 bounds and pushes brand/size IN-lists
-# to the part scan; the residual disjunction evaluates post-join in
-# codegen. One broadcast join, no UNION-of-three-scans rewrite needed.
-# ---------------------------------------------------------------------------
-
-@register("tpch_q19_disjunctive", f"""
-SELECT CAST(SUM({_DISC_SQL}) AS DOUBLE) AS revenue, COUNT(*) AS n_lines
-FROM lineitem JOIN part ON p_partkey = l_partkey
-WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-       AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#3'  AND p_size BETWEEN 1 AND 10
-       AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#15' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 20 AND 30)
-""")
-def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = io.read_table(spark, sf_dir, "lineitem")
-    part = io.read_table(spark, sf_dir, "part")
-    qty = F.col("l_quantity")
-    size = F.col("p_size")
-    pred = (((F.col("p_brand") == "Brand#12") & size.between(1, 5)
-             & qty.between(1, 11))
-            | ((F.col("p_brand") == "Brand#3") & size.between(1, 10)
-               & qty.between(10, 20))
-            | ((F.col("p_brand") == "Brand#15") & size.between(1, 15)
-               & qty.between(20, 30)))
-    return (li.join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
-            .filter(pred)
-            .agg(_dsum(_disc_price()).alias("revenue"),
-                 F.count(F.lit(1)).alias("n_lines")))
 
 
 # ---------------------------------------------------------------------------
@@ -484,111 +277,6 @@ def q_agg_ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.min("value").cast("double").alias("low"),
                  F.max_by("value", key).cast("double").alias("close"),
                  F.count(F.lit(1)).alias("n_events")))
-
-
-# ---------------------------------------------------------------------------
-# tpch_q10_returned_revenue — the returned-item report: 3-way join with
-# the date filter pushed to orders and the returnflag filter pushed to
-# the lineitem scan, nation broadcast, deterministic top-20.
-# ---------------------------------------------------------------------------
-
-@register("tpch_q10_returned_revenue", f"""
-SELECT c_custkey, c_name, n_name,
-       CAST(SUM({_DISC_SQL}) AS DOUBLE) AS revenue
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN nation   ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate <  TIMESTAMP '1996-07-01'
-GROUP BY c_custkey, c_name, n_name
-ORDER BY revenue DESC, c_custkey
-LIMIT 20
-""")
-def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = io.read_table(spark, sf_dir, "customer")
-    orders = (io.read_table(spark, sf_dir, "orders")
-              .filter((F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-                      & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))))
-    li = (io.read_table(spark, sf_dir, "lineitem")
-          .filter(F.col("l_returnflag") == "R"))
-    nation = io.read_table(spark, sf_dir, "nation")
-    return (cust.join(orders, F.col("c_custkey") == F.col("o_custkey"))
-            .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-            .groupBy("c_custkey", "c_name", "n_name")
-            .agg(_dsum(_disc_price()).alias("revenue"))
-            .orderBy(F.desc("revenue"), "c_custkey").limit(20))
-
-
-# ---------------------------------------------------------------------------
-# tpch_q16_supplier_cnt — NOT IN as a broadcast anti-join (suppkeys are
-# non-null, so anti-join == NOT IN) + COUNT(DISTINCT) per group +
-# deterministic top-k. The IN-list size filter pushes to the part scan.
-# ---------------------------------------------------------------------------
-
-@register("tpch_q16_supplier_cnt", """
-SELECT p_brand, p_type, COUNT(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem JOIN part ON p_partkey = l_partkey
-WHERE p_size IN (1, 5, 9, 13)
-  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p_brand, p_type
-ORDER BY supplier_cnt DESC, p_brand, p_type
-LIMIT 15
-""")
-def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = io.read_table(spark, sf_dir, "lineitem")
-    part = (io.read_table(spark, sf_dir, "part")
-            .filter(F.col("p_size").isin(1, 5, 9, 13)))
-    bad = (io.read_table(spark, sf_dir, "supplier")
-           .filter(F.col("s_acctbal") < 0).select("s_suppkey"))
-    return (li.join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
-            .join(F.broadcast(bad), F.col("l_suppkey") == F.col("s_suppkey"),
-                  "left_anti")
-            .groupBy("p_brand", "p_type")
-            .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-            .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type").limit(15))
-
-
-# ---------------------------------------------------------------------------
-# tpch_q22_dormant_customers — scalar-subquery threshold + anti-join:
-# high-balance customers with no recent orders, per market segment. The
-# global average stays IN the plan (one-row aggregate crossJoin-broadcast
-# back onto customer — no driver collect), and is computed from a
-# DECIMAL-exact sum so both engines derive the identical double threshold
-# (a plain AVG(double) differs in the last ULP with partitioned
-# summation, and a half-ULP threshold flips boundary rows).
-# ---------------------------------------------------------------------------
-
-@register("tpch_q22_dormant_customers", """
-WITH avgbal AS (
-  SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*)
-           AS avg_bal
-  FROM customer WHERE c_acctbal > 0)
-SELECT c_mktsegment, COUNT(*) AS numcust,
-       CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS totacctbal
-FROM customer, avgbal
-WHERE c_acctbal > avg_bal
-  AND NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey
-                    AND o_orderdate >= TIMESTAMP '2001-01-01')
-GROUP BY c_mktsegment
-""")
-def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = io.read_table(spark, sf_dir, "customer")
-    avgbal = (cust.filter(F.col("c_acctbal") > 0)
-              .agg((F.sum(F.col("c_acctbal").cast("decimal(18,4)"))
-                    .cast("double") / F.count(F.lit(1))).alias("avg_bal")))
-    recent = (io.read_table(spark, sf_dir, "orders")
-              .filter(F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp"))
-              .select("o_custkey"))
-    return (cust.crossJoin(F.broadcast(avgbal))
-            .filter(F.col("c_acctbal") > F.col("avg_bal"))
-            .join(recent, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-            .groupBy("c_mktsegment")
-            .agg(F.count(F.lit(1)).alias("numcust"),
-                 _dsum(F.col("c_acctbal")).alias("totacctbal")))
 
 
 # ---------------------------------------------------------------------------

@@ -4,8 +4,8 @@ per-document TF-IDF top terms — plus suffix-chain domain blocklist
 filtering (the crawl-hygiene step every webtext pipeline runs before
 anything else).
 
-Determinism: idf lns are round(12) both sides (fn_math precedent);
-per-document score sums fold LEFT over term-sorted contribution lists
+Determinism: idf lns are round(12) both sides (libm ln can differ by 1
+ulp); per-document score sums fold LEFT over term-sorted contribution lists
 (DuckDB list_reduce folds left from the first element, Spark
 F.aggregate folds left from 0.0, and 0.0 + x == x exactly); postings
 lists are sort_array/list_sort so list order is data-determined;

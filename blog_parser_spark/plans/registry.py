@@ -25,38 +25,14 @@ def register(name: str, sql: str | None = None):
 
 # The driver's correctness gate runs exactly the FIRST 50 registered
 # queries (CORRECTNESS_r0*.json key set == registration order[:50]), so
-# export order is a deliberate choice, not an import-order accident.
-# The window ROTATES per round to grow lifetime driver-green coverage:
-# rounds 1-3 spent their slots on the parse→enrich→route→aggregate core,
-# the join/agg/window families, TPC-H q1/q3/q5/q6, and the headline
-# dedup/ANN/training-data queries (all recorded green in
-# CORRECTNESS_r03.json). Round 4 rotates in 50 oracle-bearing queries
-# that have NEVER had a driver row: the remaining TPC-H pack
-# (q2,q4,q7-q22), the retrieval layer, CDC/lakehouse, grok parsing,
-# fuzzy/bloom/PIT joins, the export trio, and the remaining text ops —
-# all already green under the identical local gate
-# (tools/check_queries.py). Rotated-out queries remain covered by that
-# local gate plus their recorded driver history; no-oracle rows
-# (agg_approx_*, agg_hll_union, text_compression_ratio) sort after as ever.
-#
-# Round-5 window: the 74 oracle-bearing queries with no driver row
-# after r4, plus search_inverted_index (whose only recorded row is the
-# r4 red — serialized-postings fix must earn its green), give 75
-# candidates for 50 slots. Kept: search_inverted_index, the 13 crawl
-# ops (byte-level WARC/WET identity evidence belongs in the driver
-# record), fn_url, and the 35 weblog/OLAP/graph/text singles with the
-# most standalone operator value. Left on the local gate only (25):
-# fn_binary/variant/try/conditional/struct, udtf_word_explode,
-# sql_exists_subquery, agg_histogram, win_first_last_nth,
-# multimodal_features/resize/frames (decode codec-stubbed),
-# agg_sliding_window, win_range_frame, win_gapfill, win_sessionize,
-# grouped_map_cumsum, udaf_grouped_agg, sample_exact_k,
-# snapshot_diff_audit, schema_drift_census, entity_extract_census,
-# trending_event_types, bounce_rate_entry, attribution_linear,
-# agg_bitmap_rollup, agg_bitmap_distinct, parse_robots_audit — all
-# single-function demos whose operator families already carry driver
-# rows. Rotated-out queries remain covered by tools/check_queries.py
-# plus recorded driver history. Recompute the remainder exactly:
+# export order is a deliberate choice, not an import-order accident:
+# DRIVER_WINDOW is pinned here and _ordered() puts it first.
+# The window rotates per round to grow lifetime driver-green coverage:
+# every slot goes to an oracle-bearing query with no recorded driver-GREEN
+# row (a query whose only rows are red may re-enter to earn its green).
+# Queries outside the window stay covered by the identical local gate
+# (tools/check_queries.py) plus their recorded driver history; no-oracle
+# rows sort after as ever. Recompute the remainder exactly:
 #   green(CORRECTNESS_r01..r04) ∪ DRIVER_WINDOW vs oracle-bearing
 #   registry order (tests/test_registry_contract.py enforces
 #   disjointness from recorded GREEN rows).

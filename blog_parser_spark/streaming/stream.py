@@ -362,12 +362,14 @@ def user_activity_profile(events: DataFrame,
 
 def start_pipeline(spark: SparkSession, pages_stream: DataFrame, out_dir: str,
                    checkpoint: str, available_now: bool = True) -> StreamingQuery:
-    """stream_fanout: per-microbatch reuse of the BATCH fan-out + aggregate.
+    """stream_fanout: per-microbatch reuse of the BATCH fan-out.
 
-    foreachBatch gets the same routed_pages spine; sinks append-partitioned
-    by sink; the flagship aggregate is maintained incrementally as a
-    per-batch parquet append keyed by batch_id (idempotent on replay:
-    overwrite-by-batch-id semantics via dynamic partition overwrite).
+    foreachBatch runs the same routed_pages spine on each micro-batch and
+    writes the routed rows to `{out_dir}/sinks`, partitioned by
+    (batch_id, sink); idempotent on replay (dynamic partition overwrite
+    of that batch_id). Only the routed sinks are written: no aggregate
+    is maintained. The url dedup runs within each micro-batch only, so a
+    url recaptured in a later batch is written again.
     Checkpoint dir = the resume token (BASELINE.json north_rule)."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:

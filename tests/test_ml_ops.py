@@ -180,16 +180,6 @@ def test_connected_components_raises_on_non_convergence(spark):
         dedup.connected_components(nodes, chain, max_iter=2)
 
 
-def test_checked_sum_udaf_all_null_group_is_null(spark):
-    from blog_parser_spark.operators import custom_pandas
-    df = spark.createDataFrame(
-        [("a", 1), ("a", 2), ("b", None), ("b", None)],
-        "k string, v long")
-    got = {r.k: r.total
-           for r in custom_pandas.checked_byte_sums(df, "k", "v").collect()}
-    assert got == {"a": 3, "b": None}  # SQL SUM semantics, not 0
-
-
 def test_ann_ivf_exact_when_probing_all_lists(spark):
     """n_probe == n_centroids makes IVF scan every inverted list — the
     result must EQUAL brute force row-for-row (same scores, same ranks).

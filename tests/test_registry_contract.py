@@ -6,6 +6,10 @@ a headline query out of the gate (the r2 regression)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import duckdb
 
 from tests.conftest import SF_DIR
@@ -118,3 +122,14 @@ def test_driver_window_spark_schemas_are_scalar_only(spark):
                           (T.ArrayType, T.MapType, T.StructType)):
                 bad.append((name, f.name, f.dataType.simpleString()))
     assert bad == [], f"nested-typed Spark output columns: {bad}"
+
+
+def test_check_queries_rejects_unknown_query_names():
+    """A stale name on the local gate's command line must fail loudly
+    before Spark starts, not report `0/0 ok`."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "tools/check_queries.py", SF_DIR, "no_such_query"],
+        cwd=root, capture_output=True, text=True, timeout=120)
+    assert r.returncode != 0
+    assert "no_such_query" in r.stdout + r.stderr

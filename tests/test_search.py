@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import Row
 
 from blog_parser_spark.operators import search
@@ -91,6 +92,8 @@ def test_phrase_match_counts_and_overlaps(spark):
     got = {r["doc_id"]: r["occurrences"] for r in
            search.phrase_match(docs, ["table", "hash"]).collect()}
     assert got == {0: 2, 3: 1}
+    with pytest.raises(ValueError, match="non-empty"):
+        search.phrase_match(docs, [])
 
 
 def test_phrase_match_repeated_term_and_self_overlap(spark):

@@ -46,6 +46,12 @@ def main() -> int:
     import __spark_entry__ as e
     from blog_parser_spark.session import get_spark
 
+    qs, osql = e.queries(), e.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries: {', '.join(unknown)} ({len(qs)} registered)")
+        return 1
+
     spark = get_spark("check-queries", master="local[8]", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -54,7 +60,6 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
-    qs, osql = e.queries(), e.oracle_sql()
     failures = []
     n_run = 0
     for name, fn in qs.items():

@@ -89,10 +89,6 @@ def main() -> None:
             qs["text_segment_dedup"](spark, SF_DIR),
         "text_unigram_logprob (per-(doc,word) counts join broadcast vocab)":
             qs["text_unigram_logprob"](spark, SF_DIR),
-        "tpch_q4_order_priority (EXISTS -> left semi, non-equi residual)":
-            qs["tpch_q4_order_priority"](spark, SF_DIR),
-        "tpch_q19_disjunctive (OR-of-ANDs: IN-list pushed, residual in codegen)":
-            qs["tpch_q19_disjunctive"](spark, SF_DIR),
         "graph_triangle_count (two hash joins on vertex keys)":
             qs["graph_triangle_count"](spark, SF_DIR),
         "agg_ohlc_resample (ONE aggregate; struct-keyed min_by/max_by "
