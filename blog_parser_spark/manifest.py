@@ -25,10 +25,11 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .limits import check_driver_list_bound
 from .plans import pipeline
+from .sources import io
 
 DEFAULT_BUCKETS = 64
 
@@ -102,7 +103,8 @@ def completed_buckets(spark: SparkSession, manifest_dir: str) -> DataFrame:
     has_manifest = os.path.isdir(manifest_dir) and any(
         e.endswith(".parquet") for e in os.listdir(manifest_dir))
     if not has_manifest:
-        return spark.createDataFrame([], "bucket int")
+        return io.local_table(
+            spark, [], StructType([StructField("bucket", IntegerType())]))
     return spark.read.parquet(manifest_dir).select("bucket").distinct()
 
 

@@ -26,7 +26,13 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # python workers are reused across tasks (amortize interpreter startup)
+    # python workers are reused across tasks: reuse amortizes the fork,
+    # interpreter start and imports, not PySpark's per-task overhead. Before
+    # each task setup_spark_files calls importlib.invalidate_caches(), which
+    # on CPython < 3.13 re-reads every zip on the path (0.2-0.5 s; made lazy
+    # by _zipimport_compat); after each, pyspark.daemon runs gc.collect()
+    # (30-75 ms, left as is). A PythonRDD job forks a separate worker pool,
+    # hence io.local_table for driver-local tables.
     "spark.python.worker.reuse": "true",
     # scan split sizing (spill-awareness): 128 MB splits of ~1.2 kB/row
     # pages give ~100k rows/task; the parse UDF streams those as 10k-row

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType, IntegerType, StringType, StructField, StructType, TimestampType,
@@ -149,15 +150,29 @@ DOMAIN_META_SCHEMA = StructType([
 ])
 
 
+def local_table(spark: SparkSession, rows: list[tuple],
+                schema: StructType) -> DataFrame:
+    """A driver-local table (dims, fetch plans, empty manifests) planned as
+    a LocalTableScan: it runs no Spark job and starts no Python worker.
+
+    `createDataFrame(list_of_rows)` plans Scan ExistingRDD instead, and its
+    PythonRDD job forks a second Python worker pool before the first real
+    stage; a pandas frame avoids that only when non-empty. An Arrow table
+    takes the LocalTableScan path at any size, with the schema exact."""
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.table({f.name: list(c) for f, c in zip(schema.fields, cols)})
+    return spark.createDataFrame(table, schema)
+
+
 def lang_norm_df(spark: SparkSession) -> DataFrame:
     rows = [(r["lang_raw"], r["lang_norm"]) for r in oracle.lang_norm_rows()]
-    return spark.createDataFrame(rows, LANG_NORM_SCHEMA)
+    return local_table(spark, rows, LANG_NORM_SCHEMA)
 
 
 def domain_meta_df(spark: SparkSession, n_sources: int = 20) -> DataFrame:
     rows = [(r["domain"], r["site_category"], r["country"], r["tier"])
             for r in oracle.domain_meta_rows(n_sources)]
-    return spark.createDataFrame(rows, DOMAIN_META_SCHEMA)
+    return local_table(spark, rows, DOMAIN_META_SCHEMA)
 
 
 # --- sinks -------------------------------------------------------------------

@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 )
 
 from .. import spec
+from . import io
 
 WARC_FILE_SCHEMA = StructType([
     StructField("warc_file", StringType(), False),
@@ -353,8 +354,8 @@ def fetch_by_index(files: DataFrame, index: DataFrame, wanted: DataFrame,
     plan_schema = StructType([
         StructField("warc_file", StringType(), False),
         StructField("_offsets", ArrayType(LongType()), False)])
-    per_file_local = spark.createDataFrame(
-        [(r.warc_file, [int(o) for o in r._offsets]) for r in plan],
+    per_file_local = io.local_table(
+        spark, [(r.warc_file, [int(o) for o in r._offsets]) for r in plan],
         plan_schema)
     tagged = (files
               .where(F.col("warc_file").isin([r.warc_file for r in plan]))

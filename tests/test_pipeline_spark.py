@@ -6,8 +6,9 @@ from __future__ import annotations
 import duckdb
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from blog_parser_spark import oracle
+from blog_parser_spark import manifest, oracle
 from blog_parser_spark.operators import aggregate, parse
 from blog_parser_spark.plans import pipeline
 from blog_parser_spark.sources import io
@@ -85,6 +86,24 @@ def test_salted_agg_equals_plain(spark, pages_df):
     plain = pipeline.flagship(spark, pages_df, salted=False)
     salted = pipeline.flagship(spark, pages_df, salted=True)
     assert aggregate.multiset_equal(plain, salted)
+
+
+def test_driver_local_tables_are_local_table_scans(spark, tmp_path):
+    """The broadcast dims and the no-manifest-yet frame plan as
+    LocalTableScan, never Scan ExistingRDD: building them runs no
+    PythonRDD job, so a pass forks no second Python worker pool. This
+    also catches a silent fall back to the RDD path. Schemas are exact."""
+    cases = [(io.lang_norm_df(spark), io.LANG_NORM_SCHEMA),
+             (io.domain_meta_df(spark), io.DOMAIN_META_SCHEMA),
+             (manifest.completed_buckets(spark, str(tmp_path / "none")),
+              StructType([StructField("bucket", IntegerType())]))]
+    for df, schema in cases:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert df.select("*").schema == schema
+    assert cases[2][0].collect() == []
+    assert sorted(tuple(r) for r in cases[0][0].collect()) == sorted(
+        (r["lang_raw"], r["lang_norm"]) for r in oracle.lang_norm_rows())
 
 
 def test_dedup_latest_keeps_newest_and_breaks_ties(spark):

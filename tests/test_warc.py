@@ -573,6 +573,46 @@ def test_fetch_by_index_quarantines_stale_offsets(spark):
     assert "outside archive" in errs[1].warc_err
 
 
+def _subtree(plan: str, marker: str) -> str:
+    """The plan-tree lines under the first node whose line holds marker."""
+    lines = plan.splitlines()
+    top = next(i for i, line in enumerate(lines) if marker in line)
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    sub = []
+    for line in lines[top + 1:]:
+        if depth(line) <= depth(lines[top]):
+            break
+        sub.append(line)
+    return "\n".join(sub)
+
+
+def test_fetch_plan_broadcasts_a_local_table_scan(spark):
+    """The driver's fetch plan goes back to the executors as a
+    LocalTableScan under the broadcast, never Scan ExistingRDD, so no
+    PythonRDD job runs per fetch. An empty plan prunes the whole fetch."""
+    raw = spec.render_warc_file(
+        [("https://a.com/1", "2024-01-01T00:00:00Z", b"aaa")])
+    files = spark.createDataFrame(
+        [Row(warc_file="p.warc", content=bytearray(raw))])
+    index = warc.cdx_index(files)
+
+    def fetch(url):
+        df = warc.fetch_by_index(files, index, spark.createDataFrame([Row(url=url)]))
+        return df, df._jdf.queryExecution().executedPlan().toString()
+
+    fetched, plan = fetch("https://a.com/1")
+    side = _subtree(plan, "BroadcastExchange")
+    assert "LocalTableScan" in side and "ExistingRDD" not in side, plan
+    assert [bytes(r.html) for r in fetched.collect()] == [b"aaa"]
+
+    fetched, plan = fetch("https://a.com/none")
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert fetched.collect() == []
+
+
 def test_index_delta_statuses_and_quarantine_exclusion(spark):
     """Hand archives: one url gone, one added, one changed (different
     payload bytes), one identical — and a quarantine row (url NULL) in
