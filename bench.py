@@ -37,6 +37,18 @@ MIN_BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "1000000"))
 STEAL_RETRY_THRESHOLD = float(
     os.environ.get("SPARK_GRAFT_STEAL_RETRY", "0.10"))
 
+# registry queries timed by name each round: the flagship, then the
+# training-data ops layer (bucketed near-dup, LSH ANN, CC clustering, text
+# quality) — the 100 TB-shaped formulations, so regressions in the
+# dedup/ANN plans show up next to the flagship — and the round-3 layers
+# (link graph, export, CDC merge)
+REGISTRY_LEGS = (
+    "agg_sink_counts", "dedup_minhash_lsh", "ann_lsh_bucketed",
+    "dedup_components", "text_quality",
+    "graph_pagerank", "export_pack_sequences",
+    "export_chunk_overlap", "cdc_apply_changes",
+)
+
 
 def _cpu_ticks() -> tuple[int, int]:
     """(user, steal) ticks from /proc/stat — recorded around the run so
@@ -163,16 +175,7 @@ def _measure(spark, qreg, sf_dir: str, sf: str, cpus: int,
         qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
         return time.time() - t0
 
-    # relational headliners on the raw fixtures, then the training-data
-    # ops layer (bucketed near-dup, LSH ANN, CC clustering, text quality)
-    # — the 100 TB-shaped formulations, timed per round so regressions in
-    # the dedup/ANN plans show up next to the flagship
-    for name in ("join_smj", "agg_rollup", "win_ntile_percent",
-                 "agg_sink_counts", "dedup_minhash_lsh", "ann_lsh_bucketed",
-                 "dedup_components", "text_quality",
-                 # round-3 layers: link graph, export, CDC merge
-                 "graph_pagerank", "export_pack_sequences",
-                 "export_chunk_overlap", "cdc_apply_changes"):
+    for name in REGISTRY_LEGS:
         _run_built(name)
         timings[name] = _run_built(name)
 

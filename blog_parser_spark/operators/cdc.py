@@ -5,8 +5,8 @@ from the change history.
 This is the batch MERGE a lakehouse table format runs under the hood,
 expressed with open DataFrame ops so it works on plain parquet:
 
-- latest-change-per-key is the win_dedup_latest pattern (row_number over
-  (key) ordered by change sequence desc) — Spark 4 rewrites it to
+- latest-change-per-key is a row_number over (key) ordered by change
+  sequence desc, filtered to rank 1 — Spark 4 rewrites it to
   WindowGroupLimit, so superseded changes collapse map-side before the
   shuffle;
 - the merge itself is ONE anti-join (base rows whose key has no change

@@ -63,10 +63,10 @@ def join_ip_ranges(df: DataFrame, ranges: DataFrame,
     table is config-sized (a few thousand ASN/geo blocks): cost is
     N x |ranges| comparisons with zero shuffle of the fact side. A
     full GeoIP table (~4M ranges) outgrows that; at that size switch
-    to operators/joins.range_join (the binned equi-join + residual
-    formulation this repo already ships) keyed on the range bin of
-    ip_long. Intervals must be non-overlapping so each IP matches at
-    most one row; unmatched IPs keep NULL labels (left join — rows are
+    to a binned equi-join (bucketize ip_long by range width, join on
+    the bin, re-apply the containment predicate as a residual).
+    Intervals must be non-overlapping so each IP matches at most one
+    row; unmatched IPs keep NULL labels (left join — rows are
     never dropped by enrichment)."""
     fact = df.withColumn("_ip_long", ip_to_long(ip_col))
     cond = (F.col("_ip_long") >= F.col("start_ip")) & \

@@ -1,137 +1,12 @@
 """Join operators that need explicit scale engineering (SURVEY.md §2.3):
-the salted skew join and the bin-bucketed range join. Broadcast/semi/
-anti/as-of joins are plain DataFrame calls and live inline in
-plans/queries.py.
+the prefix-filtered fuzzy Jaccard join and the bloom-routed anti join of
+the crawl frontier. Broadcast joins are plain DataFrame calls and live
+inline in the plans.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def salted_join_on(fact: DataFrame, dim: DataFrame, key: str, unique_col: str,
-                   salt_buckets: int = 16, how: str = "inner") -> DataFrame:
-    """Skew-safe equi-join on `key`: the hot key's fact rows spread over
-    `salt_buckets` reducers.
-
-    - fact side: salt = pmod(xxhash64(unique_col), buckets) — a pure
-      function of the row (deterministic under retries, SURVEY.md §7b).
-    - dim side: exploded x buckets (dims are small; the blow-up is bounded).
-    - join on (key, salt): co-location preserved, hot key split.
-
-    Result equals the unsalted join exactly (tests + oracle assert)."""
-    salt = F.pmod(F.xxhash64(unique_col), F.lit(salt_buckets)).cast("int")
-    f = fact.withColumn("_salt", salt)
-    d = (dim.withColumn("_salt", F.explode(
-        F.sequence(F.lit(0), F.lit(salt_buckets - 1)).cast("array<int>"))))
-    out = f.join(d, [key, "_salt"], how)
-    return out.drop("_salt")
-
-
-_BLOOM_SEED = 0x9E3779B9  # second hash = xxhash64(key, seed); any fixed odd constant
-
-
-def bloom_prefiltered_join(probe: DataFrame, build: DataFrame, key: str,
-                           num_bits: int = 1_048_576,
-                           how: str = "inner") -> DataFrame:
-    """Equi-join with a bloom-filter prefilter on the probe side — the
-    standard 100 TB trick when the build side is selective but too big to
-    broadcast whole: condense the build keys into ONE broadcast bloom
-    filter and drop probe rows that cannot match BEFORE the join shuffle.
-    Probe shuffle volume falls to ~selectivity x |probe| (+ the false-
-    positive rate); the result is EXACTLY the plain join's — blooms have
-    no false negatives, and false positives are removed by the real join
-    — so correctness is oracle-checkable against the unfiltered join SQL.
-
-    Spark's own `bloom_filter_agg` is optimizer-internal (not in the SQL
-    function registry), so the filter is hand-rolled from public
-    primitives, all JVM-side: k=2 bit positions per key (xxhash64 with
-    two seeds, mod num_bits), per-64-bit-word `bit_or` aggregate with
-    map-side partial combine (the shuffle carries <= set-words rows, not
-    keys), assembled into one map<word_idx, mask> row that broadcasts at
-    ~16 B per set word — sparse, so tiny build sides cost bytes, not
-    num_bits/8. The probe check is two element_at lookups + bit tests in
-    whole-stage codegen.
-
-    Plan note: attaching the one-row bloom to every probe row is a
-    condition-less join, so the plan carries a BroadcastNestedLoopJoin —
-    with a single-row broadcast side that is a constant-time row widen,
-    not an O(n x m) pairing (same declared pattern as win_gapfill's
-    grid). The bit tests themselves run in whole-stage codegen.
-
-    Restricted to inner/semi: for outer joins the prefilter would drop
-    probe rows that must survive as null-extended output."""
-    if how not in ("inner", "semi", "left_semi", "leftsemi"):
-        raise ValueError(
-            f"bloom prefilter preserves inner/semi joins only, got {how!r}")
-    if num_bits < 64:
-        raise ValueError(f"num_bits must be >= 64, got {num_bits}")
-
-    def positions(df: DataFrame):
-        h1 = F.pmod(F.xxhash64(F.col(key)), F.lit(num_bits))
-        h2 = F.pmod(F.xxhash64(F.col(key), F.lit(_BLOOM_SEED)),
-                    F.lit(num_bits))
-        return h1, h2
-
-    h1, h2 = positions(build)
-    bloom = (build
-             .select(F.explode(F.array(h1, h2)).alias("_pos"))
-             .select(F.expr("_pos div 64").cast("int").alias("_w"),
-                     F.expr("shiftleft(1L, cast(pmod(_pos, 64) as int))")
-                     .alias("_bv"))
-             .groupBy("_w").agg(F.bit_or("_bv").alias("_mask"))
-             .agg(F.map_from_arrays(F.collect_list("_w"),
-                                    F.collect_list("_mask")).alias("_bf")))
-
-    p1, p2 = positions(probe)
-    # positions are materialized as temp columns so the bit tests stay
-    # plain column expressions (no string re-parsing of composed exprs)
-    hit1 = (F.element_at("_bf", F.expr("_p1 div 64").cast("int"))
-            .bitwiseAND(F.expr("shiftleft(1L, cast(pmod(_p1, 64) as int))"))
-            != 0)
-    hit2 = (F.element_at("_bf", F.expr("_p2 div 64").cast("int"))
-            .bitwiseAND(F.expr("shiftleft(1L, cast(pmod(_p2, 64) as int))"))
-            != 0)
-    pre = (probe.join(F.broadcast(bloom))
-           .withColumn("_p1", p1).withColumn("_p2", p2)
-           .filter(hit1 & hit2)
-           .drop("_bf", "_p1", "_p2"))
-    return pre.join(build, key, how)
-
-
-def range_join_binned(a: DataFrame, b: DataFrame, a_start: str, b_ts: str,
-                      window_sec: int, how: str = "inner") -> DataFrame:
-    """Scale formulation of the range join `a.start <= b.ts <
-    a.start + window_sec`: bucketize the time axis into window-sized
-    bins and equi-join on the bin, then re-apply the exact predicate.
-    Turns an O(|A|x|B|) nested-loop into a shuffled hash join on _bin.
-
-    Binning uses F.floor (true floor division), NOT a long cast — cast
-    truncates toward zero, so for negative epochs (pre-1970) trunc !=
-    floor and the at-most-2-bins invariant would silently drop pairs.
-    With floor, a window [s, s+W) of width W == bin width spans at most
-    2 bins, so each anchor row is duplicated into exactly those 2.
-
-    `a_start`/`b_ts` are epoch-seconds (long/double) columns.
-
-    Inner join only: the bin-explode duplicates each left row into its 2
-    candidate bins and the exact predicate is re-applied AFTER the join,
-    so outer semantics would be wrong twice over (unmatched rows are
-    dropped by the NULL-valued post-filter, matched rows would carry a
-    spurious null-partner duplicate from their other bin)."""
-    if how != "inner":
-        raise ValueError(
-            f"range_join_binned supports how='inner' only, got {how!r}; "
-            "outer range joins need the unbinned formulation")
-    bin_sec = int(window_sec)
-    if bin_sec < 1:
-        raise ValueError(f"window_sec must be >= 1, got {window_sec}")
-    a_bin = F.floor(F.col(a_start) / bin_sec).cast("long")
-    a2 = a.withColumn("_bin", F.explode(F.array(a_bin, a_bin + 1)))
-    b2 = b.withColumn("_bin", F.floor(F.col(b_ts) / bin_sec).cast("long"))
-    cond = (F.col(b_ts) >= F.col(a_start)) & (
-        F.col(b_ts) < F.col(a_start) + window_sec)
-    return a2.join(b2, "_bin", how).filter(cond).drop("_bin")
 
 
 def fuzzy_jaccard_join(left: DataFrame, right: DataFrame,
@@ -223,6 +98,9 @@ def fuzzy_jaccard_join(left: DataFrame, right: DataFrame,
             .filter(F.col("jacc") >= threshold))
 
 
+_BLOOM_SEED = 0x9E3779B9  # second hash = xxhash64(key, seed); any fixed odd constant
+
+
 def bloom_routed_anti_join(probe: DataFrame, build: DataFrame, key: str,
                            num_bits: int = 1_048_576) -> DataFrame:
     """Anti join (probe rows whose key is NOT in build) with bloom
@@ -231,9 +109,9 @@ def bloom_routed_anti_join(probe: DataFrame, build: DataFrame, key: str,
     probe side is overwhelmingly NOT-seen, and those rows shouldn't pay
     a shuffle at all.
 
-    A bloom prefilter CANNOT be applied to an anti join the way
-    bloom_prefiltered_join applies it to inner/semi (a false positive
-    would silently DROP an unseen url — wrong answers). Routing keeps it
+    A bloom PREFILTER (drop probe rows that miss, as for inner/semi
+    joins) cannot be applied to an anti join: a false positive would
+    silently DROP an unseen url — wrong answers. Routing keeps it
     exact: rows that MISS the bloom are definitely absent from build and
     bypass the join entirely (map-only path); only the bloom HITS (truly
     seen + false positives) go through the real left_anti join, which

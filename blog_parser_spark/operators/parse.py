@@ -1,6 +1,6 @@
 """Parse operators: the reference parser's entire per-document work as ONE
 vectorized pandas UDF (SURVEY.md §2.3 `parse_html`, `split_sentences`,
-`win_dedup_latest`, `failure_split`).
+newest-capture dedup, `failure_split`).
 
 Everything per-document runs inside `spec.parse_document` (the same code
 the pure-Python oracle runs); Spark supplies batching (Arrow), scheduling,
@@ -87,7 +87,7 @@ def _dedup_max_by(df: DataFrame, order_cols: list) -> DataFrame:
 
 
 def dedup_latest(pages: DataFrame) -> DataFrame:
-    """win_dedup_latest over raw pages: newest crawl per url, md5(html)
+    """Newest crawl per url over raw pages, md5(html)
     tie-break. One shuffle on url (duplicates collapse map-side)."""
     df = pages.withColumn("_md5", F.coalesce(F.md5("html"), F.lit("")))
     return _dedup_max_by(df, [F.col("warc_ts"), F.col("_md5")]).drop("_md5")

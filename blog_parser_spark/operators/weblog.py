@@ -319,8 +319,8 @@ def rolling_distinct_users(events: DataFrame,
     corpus edge.
 
     The fan-out factor IS window_days: for 90-day windows prefer the
-    registry's mergeable exact bitmaps (agg_bitmap_rollup) or the
-    approximate HLL sketch union (agg_hll_union) instead."""
+    registry's mergeable exact bitmaps (agg_bitmap_rollup) or an
+    approximate HLL sketch union (hll_sketch_agg + hll_union_agg) instead."""
     pairs = (events.select(_day_num().alias("day_num"), "user_id")
              .distinct())
     expanded = pairs.select(

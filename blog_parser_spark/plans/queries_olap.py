@@ -1,8 +1,8 @@
 """Batch-7 driver-contract queries: log-analytics anomaly scoring,
 join-based triangle counting, mergeable partial aggregates, URL
 canonicalization (the log-pipeline normalize step), cohort retention,
-OHLC resampling, fuzzy and point-in-time joins, and log parsing (grok,
-templates, multiline stacks, IP/CIDR enrichment).
+the fuzzy Jaccard join, and log parsing (grok, templates, multiline
+stacks, IP/CIDR enrichment).
 
 Determinism notes follow queries.py: identical aliases both sides,
 double sums via DECIMAL(18,4) partials cast back to double, every
@@ -242,44 +242,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# agg_ohlc_resample — telemetry downsampling to per-(series, day) OHLC
-# bars: open/close via min_by/max_by on the (ts, event_id) struct (ONE
-# hash aggregate — no per-group window sort; event_id uniquifies equal
-# timestamps so both engines pick the same row), high/low plain min/max.
-# The oracle expresses identical semantics with row_number windows.
-# ---------------------------------------------------------------------------
-
-@register("agg_ohlc_resample", """
-WITH daily AS (
-  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day, value,
-         row_number() OVER (PARTITION BY event_type,
-                            CAST(date_trunc('day', ts) AS DATE)
-                            ORDER BY ts, event_id) AS rn_a,
-         row_number() OVER (PARTITION BY event_type,
-                            CAST(date_trunc('day', ts) AS DATE)
-                            ORDER BY ts DESC, event_id DESC) AS rn_d
-  FROM events)
-SELECT event_type, day,
-       CAST(MAX(CASE WHEN rn_a = 1 THEN value END) AS DOUBLE) AS open,
-       CAST(MAX(value) AS DOUBLE) AS high,
-       CAST(MIN(value) AS DOUBLE) AS low,
-       CAST(MAX(CASE WHEN rn_d = 1 THEN value END) AS DOUBLE) AS close,
-       COUNT(*) AS n_events
-FROM daily GROUP BY event_type, day
-""")
-def q_agg_ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = io.read_table(spark, sf_dir, "events")
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    return (ev.groupBy("event_type",
-                       F.date_trunc("day", "ts").cast("date").alias("day"))
-            .agg(F.min_by("value", key).cast("double").alias("open"),
-                 F.max("value").cast("double").alias("high"),
-                 F.min("value").cast("double").alias("low"),
-                 F.max_by("value", key).cast("double").alias("close"),
-                 F.count(F.lit(1)).alias("n_events")))
-
-
-# ---------------------------------------------------------------------------
 # join_fuzzy_jaccard — exact fuzzy record linkage: token-set Jaccard
 # >= 0.8 between documents and a perturbed copy (each right-side doc
 # drops its 2 lexically-last tokens, so planted matches sit at
@@ -323,71 +285,6 @@ def q_join_fuzzy_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(0)))
         .alias("toks_r"))
     return joins.fuzzy_jaccard_join(left, right, threshold=0.8)
-
-
-# ---------------------------------------------------------------------------
-# join_point_in_time — the feature-store lookup: each fact row joins the
-# dimension VERSION that was valid at the fact's timestamp (SCD2
-# intervals from operators/cdc.scd2_intervals, [valid_from, valid_to)
-# in a unique seq space). Spark shape: equi-join on the key with the
-# interval predicate as SMJ residual — never a time-axis cross join;
-# each fact matches exactly one version because the intervals partition
-# the seq axis per key. Dimension = per-customer priority history built
-# from orders (seq = epoch·10^5 + orderkey mod 10^5, unique); facts =
-# lineitems at ship time (end-of-second rule: fact_seq gets the max
-# sub-second rank, so same-timestamp changes are visible).
-# ---------------------------------------------------------------------------
-
-@register("join_point_in_time", """
-WITH changes AS (
-  SELECT o_custkey AS custkey, o_orderpriority AS prio,
-         CAST(epoch(o_orderdate) AS BIGINT) * 100000
-           + o_orderkey % 100000 AS seq
-  FROM orders),
-dim AS (
-  SELECT custkey, prio, seq AS valid_from_seq,
-         lead(seq) OVER (PARTITION BY custkey ORDER BY seq) AS valid_to_seq
-  FROM changes),
-fact AS (
-  SELECT o_custkey AS custkey,
-         CAST(epoch(CAST(l_shipdate AS TIMESTAMP)) AS BIGINT) * 100000
-           + 99999 AS fact_seq,
-         CAST(l_extendedprice AS DECIMAL(18,4)) AS price
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-SELECT prio AS asof_priority, COUNT(*) AS n_lines,
-       CAST(SUM(price) AS DOUBLE) AS revenue
-FROM fact JOIN dim
-  ON fact.custkey = dim.custkey
- AND fact_seq >= valid_from_seq
- AND (valid_to_seq IS NULL OR fact_seq < valid_to_seq)
-GROUP BY prio
-""")
-def q_join_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import cdc
-    orders = io.read_table(spark, sf_dir, "orders")
-    seq = (F.col("o_orderdate").cast("timestamp").cast("long") * 100000
-           + F.col("o_orderkey") % 100000)
-    changes = orders.select(F.col("o_custkey").alias("custkey"),
-                            F.col("o_orderpriority").alias("prio"),
-                            seq.alias("seq"), F.lit("u").alias("op"))
-    dim = (cdc.scd2_intervals(changes, "custkey")
-           .select("custkey", "prio", "valid_from_seq", "valid_to_seq"))
-    li = io.read_table(spark, sf_dir, "lineitem")
-    fact = (li.join(orders.select("o_orderkey", "o_custkey"),
-                    F.col("l_orderkey") == F.col("o_orderkey"))
-            .select(F.col("o_custkey").alias("fcustkey"),
-                    (F.col("l_shipdate").cast("timestamp").cast("long")
-                     * 100000 + 99999).alias("fact_seq"),
-                    F.col("l_extendedprice").cast("decimal(18,4)")
-                    .alias("price")))
-    joined = fact.join(
-        dim, (F.col("fcustkey") == F.col("custkey"))
-        & (F.col("fact_seq") >= F.col("valid_from_seq"))
-        & (F.col("valid_to_seq").isNull()
-           | (F.col("fact_seq") < F.col("valid_to_seq"))))
-    return (joined.groupBy(F.col("prio").alias("asof_priority"))
-            .agg(F.count(F.lit(1)).alias("n_lines"),
-                 F.sum("price").cast("double").alias("revenue")))
 
 
 # ---------------------------------------------------------------------------
@@ -536,7 +433,7 @@ def q_parse_multiline_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
 # range row containing each IP. The dim is config-sized so it
 # BROADCASTS and the containment predicate runs map-side — zero shuffle
 # of the fact stream; a multi-million-range GeoIP table would switch to
-# the binned joins.range_join instead (documented on the operator).
+# a binned equi-join instead (documented on enrich.join_ip_ranges).
 # One cuts list generates BOTH the Spark dim and the SQL VALUES, so the
 # two engines cannot drift.
 # ---------------------------------------------------------------------------

@@ -38,12 +38,12 @@ FROM dt GROUP BY term HAVING COUNT(*) >= 50
 def q_search_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Contract boundary: the operator's postings stay array<bigint> (the
     # streaming index and closed-form pytests consume them), but the
-    # registered query serializes them to a comma-joined string — the
-    # agg_collect convention — because the driver harness's pandas
-    # canonicalizer cannot sort rows containing list cells (the r4 red
-    # row). The sort happens on the BIGINT array (numeric order), then
-    # each id casts to string; DuckDB's list_sort/array_to_string does
-    # the same.
+    # registered query serializes them to a comma-joined string (sorted,
+    # elements cast to string, joined with ',') because the driver
+    # harness's pandas canonicalizer cannot sort rows containing list
+    # cells (the r4 red row). The sort happens on the BIGINT array
+    # (numeric order), then each id casts to string; DuckDB's
+    # list_sort/array_to_string does the same.
     docs = io.read_table(spark, sf_dir, "documents")
     idx = search.inverted_index(docs, min_df=50)
     return idx.select(
@@ -197,44 +197,6 @@ def q_text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(tot))
             .select("w1", "w2", "c_ab", pmi.alias("pmi"))
             .orderBy(F.desc("pmi"), "w1", "w2").limit(25))
-
-
-# ---------------------------------------------------------------------------
-# agg_embedding_centroid — per-label mean vector over the embeddings
-# table (the class-prototype computation every labeled-embedding store
-# runs). posexplode gives (label, dim, value); per cell the sum folds
-# LEFT over vec_id-sorted values so both engines add the same doubles
-# in the same order (bit-identical; same convention as the ANN/BM25
-# oracles). The ordered fold needs the cell's values collected — fine
-# at per-(label, dim) group sizes; the 100 TB variant swaps the fold
-# for decimal partial sums (order-free) and accepts quantization at
-# ingest, as documented in operators/similarity.py's Lloyd step.
-# ---------------------------------------------------------------------------
-
-@register("agg_embedding_centroid", """
-SELECT label, dim,
-       list_reduce(list(v ORDER BY vec_id), (a, b) -> a + b)
-         / n AS centroid
-FROM (
-  SELECT label, vec_id, i - 1 AS dim, CAST(embedding[i] AS DOUBLE) AS v,
-         COUNT(*) OVER (PARTITION BY label) / 64 AS n
-  FROM embeddings, LATERAL unnest(range(1, 65)) AS t(i))
-GROUP BY label, dim, n
-""")
-def q_agg_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = io.read_table(spark, sf_dir, "embeddings")
-    cell = (emb.select(
-        "label", "vec_id",
-        F.posexplode(F.transform("embedding",
-                                 lambda x: x.cast("double")))
-        .alias("dim", "v")))
-    fold = F.aggregate(
-        F.sort_array(F.collect_list(F.struct("vec_id", "v"))),
-        F.lit(0.0).cast("double"), lambda acc, s: acc + s["v"])
-    return (cell.groupBy("label", "dim")
-            .agg((fold / F.count(F.lit(1))).alias("centroid"))
-            .select("label", F.col("dim").cast("long").alias("dim"),
-                    "centroid"))
 
 
 # ---------------------------------------------------------------------------

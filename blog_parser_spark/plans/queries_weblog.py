@@ -256,70 +256,6 @@ def q_schema_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# snapshot_diff_audit — keyed reconciliation between two snapshots
-# (operators/reconcile.py): each side reduces map-side to
-# (key, md5 fingerprint) — the only columns that shuffle — then one
-# full-outer join and a per-class count. Snapshot B simulates a day of
-# churn on orders deterministically (keys %97 deleted, %13 reclassed,
-# %89 re-inserted shifted +10M). Fingerprints hash BIGINT/VARCHAR only
-# (double rendering is engine-specific by design — see module doc).
-# ---------------------------------------------------------------------------
-
-@register("snapshot_diff_audit", """
-WITH a AS (
-  SELECT o_orderkey AS key, o_custkey, o_orderstatus, o_orderpriority
-  FROM orders),
-b AS (
-  SELECT o_orderkey AS key, o_custkey, o_orderstatus,
-         CASE WHEN o_orderkey % 13 = 0 THEN 'X-RECLASS'
-              ELSE o_orderpriority END AS o_orderpriority
-  FROM orders WHERE o_orderkey % 97 <> 0
-  UNION ALL
-  SELECT o_orderkey + 10000000, o_custkey, 'X', '5-ADDED'
-  FROM orders WHERE o_orderkey % 89 = 0),
-fa AS (
-  SELECT key, md5(concat_ws(chr(31),
-      COALESCE(CAST(o_custkey AS VARCHAR), chr(0)),
-      COALESCE(o_orderstatus, chr(0)),
-      COALESCE(o_orderpriority, chr(0)))) AS h_a FROM a),
-fb AS (
-  SELECT key, md5(concat_ws(chr(31),
-      COALESCE(CAST(o_custkey AS VARCHAR), chr(0)),
-      COALESCE(o_orderstatus, chr(0)),
-      COALESCE(o_orderpriority, chr(0)))) AS h_b FROM b),
-j AS (
-  SELECT COALESCE(fa.key, fb.key) AS key,
-         CASE WHEN fa.h_a IS NULL THEN 'added'
-              WHEN fb.h_b IS NULL THEN 'removed'
-              WHEN fa.h_a <> fb.h_b THEN 'changed'
-              ELSE 'unchanged' END AS diff_class
-  FROM fa FULL OUTER JOIN fb ON fa.key = fb.key)
-SELECT diff_class, CAST(COUNT(*) AS BIGINT) AS n_rows,
-       MIN(key) AS min_key, MAX(key) AS max_key
-FROM j GROUP BY diff_class
-""")
-def q_snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import reconcile
-    orders = io.read_table(spark, sf_dir, "orders")
-    key = F.col("o_orderkey")
-    a = orders.select(key.alias("key"), "o_custkey", "o_orderstatus",
-                      "o_orderpriority")
-    b = (orders.where(key % 97 != 0)
-         .select(key.alias("key"), "o_custkey", "o_orderstatus",
-                 F.when(key % 13 == 0, "X-RECLASS")
-                 .otherwise(F.col("o_orderpriority"))
-                 .alias("o_orderpriority"))
-         .unionByName(
-             orders.where(key % 89 == 0)
-             .select((key + 10000000).alias("key"), "o_custkey",
-                     F.lit("X").alias("o_orderstatus"),
-                     F.lit("5-ADDED").alias("o_orderpriority"))))
-    cols = ["o_custkey", "o_orderstatus", "o_orderpriority"]
-    return reconcile.diff_summary(
-        reconcile.snapshot_diff(a, b, "key", cols))
-
-
-# ---------------------------------------------------------------------------
 # text_boilerplate_strip — per-site common-line boilerplate removal
 # (operators/boilerplate.py): a line appearing on >= 1/2 of its
 # domain's docs is boilerplate. Frequency agg + join-back both key on

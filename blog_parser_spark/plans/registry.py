@@ -48,11 +48,8 @@ DRIVER_WINDOW: list[str] = [
     # round-5 archive layer (5) — per-record-gzip round trips, the
     # seek-verified CDX capture index, index-driven random access
     # (byte-identity through scan-pruned single-member seeks), and the
-    # cross-crawl digest delta. The last two took the slots of
-    # agg_ohlc_resample / agg_embedding_centroid: byte-level archive
-    # evidence belongs in the driver record, and both dropped singles'
-    # families already carry driver-green rows (agg_* r1-r3;
-    # ann_lsh_bucketed r4, dedup_embedding_cosine r1-r3).
+    # cross-crawl digest delta. Byte-level archive evidence belongs in
+    # the driver record.
     "scan_warc_gz_pages", "flagship_from_warc_gz", "export_cdx_index",
     "warc_fetch_by_index", "crawl_digest_delta",
     # link graph / web structure (3)

@@ -177,16 +177,6 @@ def domain_meta_df(spark: SparkSession, n_sources: int = 20) -> DataFrame:
 
 # --- sinks -------------------------------------------------------------------
 
-def write_fanout(df: DataFrame, out_dir: str, mode: str = "overwrite") -> None:
-    """sink_fanout: ONE pass, partitioned by sink (no per-sink job loop).
-
-    On Iceberg this is writeTo(...).partitionedBy("sink"); the repartition
-    by sink keeps one writer per sink partition and avoids small files.
-    """
-    (df.repartition("sink")
-       .write.mode(mode).partitionBy("sink").parquet(out_dir))
-
-
 def compact_partition_dir(spark: SparkSession, root: str, partition_col: str,
                           target_bytes: int = 128 * 1024 * 1024) -> dict:
     """Small-files compaction for a partitionBy() sink directory: rewrite

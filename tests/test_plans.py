@@ -19,20 +19,6 @@ from blog_parser_spark.plans.explain import (  # noqa: E402
     plan_formatted as _plan, plan_nodes as _nodes)
 
 
-def test_scan_parquet_pushdown_and_pruning(spark):
-    df = queries_ext2.q_scan_parquet(spark, SF_DIR)
-    plan = _plan(df)
-    assert "PushedFilters" in plan
-    # both predicates reach the scan
-    assert re.search(r"PushedFilters:.*l_quantity", plan)
-    assert re.search(r"PushedFilters:.*l_shipdate", plan)
-    # column pruning: ReadSchema carries only the 4 projected columns
-    m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
-    assert m, plan
-    cols = {c.split(":")[0] for c in m.group(1).split(",")}
-    assert cols == {"l_orderkey", "l_partkey", "l_quantity", "l_shipdate"}
-
-
 def test_filter_before_parse_pushes_to_scan(spark, tmp_path):
     """Filtering on raw columns BEFORE parse_pages must reach the parquet
     scan — rows of other langs are never decoded, never cross into Python."""
@@ -149,36 +135,6 @@ def test_export_pack_single_shard_shuffle(spark):
     # one hashpartitioning exchange on shard; windows reuse it
     assert nodes.count("Exchange") == 1, nodes
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
-def test_bloom_prefilter_join_exact_and_prefilters(spark):
-    from blog_parser_spark.operators import joins
-
-    li = io.read_table(spark, SF_DIR, "lineitem") \
-        .select("l_orderkey", "l_linenumber")
-    orders = (io.read_table(spark, SF_DIR, "orders")
-              .filter("o_orderpriority = '1-URGENT'")
-              .select(F.col("o_orderkey").alias("l_orderkey"),
-                      "o_totalprice"))
-    bloomed = joins.bloom_prefiltered_join(li, orders, "l_orderkey",
-                                           num_bits=1 << 16)
-    plain = li.join(orders, "l_orderkey", "inner")
-    assert sorted(map(tuple, bloomed.collect())) \
-        == sorted(map(tuple, plain.collect()))
-    plan = bloomed._jdf.queryExecution().executedPlan().toString()
-    # the bloom is a broadcast single-row map probed with element_at
-    assert "element_at" in plan
-    assert "bit_or" in plan or "BitOr" in plan
-
-    # a tiny bloom (64 bits for ~400 build keys) must still be EXACT on
-    # membership semantics: saturated filter = plain join, never dropped
-    tiny = joins.bloom_prefiltered_join(li, orders, "l_orderkey",
-                                        num_bits=64)
-    assert tiny.count() == plain.count()
-
-    import pytest
-    with pytest.raises(ValueError, match="inner/semi"):
-        joins.bloom_prefiltered_join(li, orders, "l_orderkey", how="left")
 
 
 def test_bm25_term_filter_precedes_first_shuffle(spark):

@@ -83,8 +83,9 @@ def test_no_nested_output_columns_in_any_oracle():
     oracle-bearing query must emit SCALAR columns only — the driver
     harness canonicalizes results with a pandas sort over all output
     columns, and a list/map/struct cell raises `unhashable type`.
-    Collections serialize to strings at the contract boundary
-    (array_to_string/concat_ws — the agg_collect convention). Exact
+    Collections serialize to strings at the contract boundary (sorted,
+    elements cast to string, array_to_string/concat_ws with ',' on both
+    sides, as search_inverted_index does). Exact
     check: bind every oracle in DuckDB and reject LIST/MAP/STRUCT/ARRAY
     result types (binding plans but does not execute)."""
     import __spark_entry__ as e
@@ -102,6 +103,16 @@ def test_no_nested_output_columns_in_any_oracle():
                     or "LIST" in ts:
                 bad.append((name, col, str(typ)))
     assert bad == [], f"nested-typed output columns: {bad}"
+
+
+def test_bench_registry_legs_are_registered():
+    """bench.py times REGISTRY_LEGS by name each round; a leg whose query
+    left the registry would raise KeyError mid-bench."""
+    import __spark_entry__ as e
+    import bench
+    qs = e.queries()
+    missing = [n for n in bench.REGISTRY_LEGS if n not in qs]
+    assert missing == [], f"bench legs not in registry: {missing}"
 
 
 def test_driver_window_spark_schemas_are_scalar_only(spark):

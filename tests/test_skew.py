@@ -1,13 +1,13 @@
-"""Skew handling (FIXTURES.md pages_skewed; SURVEY.md §2.3 agg_salted /
-join_salted): with one domain holding 50% of rows, the salted plans must
-produce EXACTLY the unsalted results."""
+"""Skew handling (FIXTURES.md pages_skewed; SURVEY.md §2.3 agg_salted):
+with one domain holding 50% of rows, the salted plan must produce EXACTLY
+the unsalted results, and the LSH hot-bucket cap must bound candidates."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from blog_parser_spark.operators import aggregate, joins
+from blog_parser_spark.operators import aggregate
 from blog_parser_spark.plans import pipeline
 from blog_parser_spark.sources import io
 from tests.conftest import SF_DIR
@@ -48,17 +48,6 @@ def test_salted_agg_exact_on_skew(spark, pages_skewed):
     assert aggregate.multiset_equal(plain, salted)
 
 
-def test_salted_join_exact_on_skew(spark, pages_skewed):
-    routed = pipeline.routed_pages(spark, pages_skewed, dedup=False)
-    dim = io.domain_meta_df(spark)
-    plain = (routed.join(dim, "domain")
-             .groupBy("site_category").agg(F.count(F.lit(1)).alias("n")))
-    salted = (joins.salted_join_on(routed, dim, key="domain",
-                                   unique_col="url", salt_buckets=8)
-              .groupBy("site_category").agg(F.count(F.lit(1)).alias("n")))
-    assert aggregate.multiset_equal(plain, salted)
-
-
 def test_lsh_hot_bucket_cap_bounds_candidate_volume(spark):
     """The 100 TB skew guard: one boilerplate text x 300 copies turns the
     LSH band self-join quadratic (identical docs share every band ->
@@ -88,20 +77,3 @@ def test_lsh_hot_bucket_cap_bounds_candidate_volume(spark):
     # join two boilerplate docs, and total volume collapses
     assert capped.filter("id_a < 300 AND id_b < 300").count() == 0
     assert capped.count() <= 20
-
-
-def test_range_join_binned_equals_bruteforce_incl_pre1970(spark):
-    """The binned range join must equal the brute-force nested-loop on
-    epochs spanning 1970 — negative epochs are where cast-truncation
-    binning (trunc != floor) silently drops qualifying pairs."""
-    epochs = [-100, -53, -50, -7, -1, 0, 1, 5, 49, 50, 99, 100]
-    a = spark.createDataFrame([(i, e) for i, e in enumerate(epochs)],
-                              "aid int, a_s long")
-    b = spark.createDataFrame([(j, e + d) for j, e in enumerate(epochs)
-                               for d in (-3, 0, 3, 26)],
-                              "bid int, b_s long")
-    got = sorted((r.aid, r.bid) for r in joins.range_join_binned(
-        a, b, "a_s", "b_s", window_sec=50).collect())
-    want = sorted((r.aid, r.bid) for r in a.crossJoin(b)
-                  .filter("b_s >= a_s AND b_s < a_s + 50").collect())
-    assert got == want and len(want) > 0

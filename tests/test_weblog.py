@@ -120,29 +120,6 @@ def test_schema_key_census_hand_case(spark):
                    "c": (1, "2024-01-05")}
 
 
-def test_snapshot_diff_hand_case(spark):
-    from blog_parser_spark.operators import reconcile
-    a = spark.createDataFrame(
-        [(1, "x"), (2, "y"), (3, "z")], "key long, v string")
-    b = spark.createDataFrame(
-        [(1, "x"), (2, "CHANGED"), (4, "new")], "key long, v string")
-    got = {r.key: r.diff_class
-           for r in reconcile.snapshot_diff(a, b, "key", ["v"]).collect()}
-    assert got == {1: "unchanged", 2: "changed", 3: "removed", 4: "added"}
-    summary = {r.diff_class: r.n_rows
-               for r in reconcile.diff_summary(
-                   reconcile.snapshot_diff(a, b, "key", ["v"])).collect()}
-    assert summary == {"unchanged": 1, "changed": 1, "removed": 1, "added": 1}
-
-
-def test_fingerprint_null_vs_empty(spark):
-    from blog_parser_spark.operators import reconcile
-    df = spark.createDataFrame([(1, None, "a"), (2, "", "a")],
-                               "key long, u string, v string")
-    hs = [r.h for r in reconcile.fingerprint(df, "key", ["u", "v"]).collect()]
-    assert hs[0] != hs[1]  # NULL and '' must fingerprint differently
-
-
 def test_strip_boilerplate_hand_case(spark):
     from blog_parser_spark.operators import boilerplate
     # Domain d: nav on all 3 docs (drop), promo on 1 of 3 (keep), unique

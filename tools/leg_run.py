@@ -1,12 +1,20 @@
-"""One weblog-scaling run: fresh JVM at a given parallelism, timed
-executions of the round-4 web-log operators over pre-materialized
-corpora. Spawned by tools/weblog_scale_bench.py; prints one JSON line.
+"""One leg-runner pass: a fresh JVM at local[cores] (shuffle partitions
+4 x cores) builds one named leg set over pre-materialized corpora, then
+runs each leg once as warmup and n_runs more times to a noop sink.
+Spawned taskset-pinned by tools/scaling_bench.py (`flagship`) and
+tools/weblog_scale_bench.py (`weblog`); prints one JSON line:
+{"cores": N, <input row counts>, <leg>: {"runs_sec", "best_sec",
+"median_sec", "warmup_sec"}, ...}.
 
-Usage: python tools/weblog_run.py <docs_parquet> <events_parquet> <cores> <n_runs> [pages_parquet packed_parquet packed_gz_parquet]
+Usage: python tools/leg_run.py <leg_set> <cores> <n_runs> <path> ...
 
-The three WARC paths come as a TRIPLE (pages to pack, packed plain
-archives to read, packed .warc.gz archives to read) — passing a partial
-set is an argument error, not a silent skip of the WARC legs.
+    flagship  <pages_parquet>
+    weblog    <docs_parquet> <events_parquet>
+              [<pages_parquet> <packed_parquet> <packed_gz_parquet>]
+
+The three WARC paths of `weblog` come as a TRIPLE (pages to pack, packed
+plain archives to read, packed .warc.gz archives to read) — passing a
+partial set is an argument error, not a silent skip of the WARC legs.
 """
 
 from __future__ import annotations
@@ -18,22 +26,26 @@ import time
 sys.path.insert(0, ".")
 
 
-def main() -> None:
-    docs_path, events_path = sys.argv[1], sys.argv[2]
-    cores, n_runs = int(sys.argv[3]), int(sys.argv[4])
+def flagship_legs(spark, pages_path: str):
+    from blog_parser_spark.plans import pipeline
+
+    pages = spark.read.parquet(pages_path)
+    return ({"docs": pages.count()},
+            {"flagship": pipeline.flagship(spark, pages, dedup=True)})
+
+
+def weblog_legs(spark, docs_path: str, events_path: str, *warc_paths: str):
     from pyspark.sql import functions as F
 
     from blog_parser_spark.operators import (boilerplate, heavyhitters,
                                              robots, urlnorm, weblog)
-    from blog_parser_spark.session import get_spark
     from blog_parser_spark.sources import warc
 
-    spark = get_spark(f"weblog-{cores}", master=f"local[{cores}]",
-                      shuffle_partitions=4 * cores)
-    spark.sparkContext.setLogLevel("ERROR")
+    if len(warc_paths) not in (0, 3):
+        raise SystemExit("WARC legs need ALL THREE paths: pages_parquet "
+                         "packed_parquet packed_gz_parquet")
     docs = spark.read.parquet(docs_path)
     events = spark.read.parquet(events_path)
-    n_docs, n_events = docs.count(), events.count()
 
     # same key/fetch synthesis shapes as plans/queries_webops.py, over
     # the replicated corpus (hot keys stay hot, tail grows with volume)
@@ -65,16 +77,11 @@ def main() -> None:
             robots.politeness_audit(fetches, robots.rules_df(spark)),
         "url_path_templates": urlnorm.template_census(fetches),
     }
-    if len(sys.argv) in (6, 7):
-        raise SystemExit("WARC legs need ALL THREE paths: pages_parquet "
-                         "packed_parquet packed_gz_parquet")
-    if len(sys.argv) > 7:
+    if warc_paths:
         # WARC directions timed separately at realistic archive size
         # (1000 pages/file) — production runs one at a time: pack is the
         # export/mirror path, read is the Common-Crawl ingest path
-        pages = spark.read.parquet(sys.argv[5])
-        packed = spark.read.parquet(sys.argv[6])
-        packed_gz = spark.read.parquet(sys.argv[7])
+        pages, packed, packed_gz = (spark.read.parquet(p) for p in warc_paths)
         legs["warc_pack"] = warc.pack_warc_files(pages, docs_per_file=1000)
         legs["warc_read"] = warc.read_warc(packed)
         # the gz ingest direction: same walk + per-member gunzip in the
@@ -92,7 +99,8 @@ def main() -> None:
         # previous JVM's leftover warehouse dir (fresh in-memory catalog,
         # existing path -> LOCATION_ALREADY_EXISTS)
         import shutil
-        fid_table_path = f"/tmp/weblog_fid_table_{cores}"
+        fid_table_path = ("/tmp/weblog_fid_table_"
+                          f"{spark.sparkContext.defaultParallelism}")
         shutil.rmtree(fid_table_path, ignore_errors=True)
         spark.sql("DROP TABLE IF EXISTS bench_pages_by_fid")
         (keyed.write.mode("overwrite").format("parquet")
@@ -107,21 +115,36 @@ def main() -> None:
         legs["warc_pack_bucketed"] = warc.pack_warc_files_presorted(
             spark.table("bench_pages_by_fid").select("url", "warc_ts", "html"),
             docs_per_file=1000)
+    return {"docs": docs.count(), "events": events.count()}, legs
 
-    out: dict[str, object] = {"cores": cores, "docs": n_docs,
-                              "events": n_events}
+
+LEG_SETS = {"flagship": flagship_legs, "weblog": weblog_legs}
+
+
+def main() -> None:
+    leg_set, cores, n_runs = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
+    from blog_parser_spark.session import get_spark
+
+    spark = get_spark(f"{leg_set}-{cores}", master=f"local[{cores}]",
+                      shuffle_partitions=4 * cores)
+    spark.sparkContext.setLogLevel("ERROR")
+    counts, legs = LEG_SETS[leg_set](spark, *sys.argv[4:])
+
+    out: dict[str, object] = {"cores": cores, **counts}
     for name, df in legs.items():
         def run() -> float:
             t0 = time.time()
             df.write.mode("overwrite").format("noop").save()
             return time.time() - t0
 
-        run()  # warmup (codegen + worker spawn), excluded as per-JVM cost
+        warmup = run()  # codegen + worker spawn: a per-JVM cost, excluded
         times = sorted(run() for _ in range(n_runs))
         # best-of-n: the VM host shows sporadic multi-second steal
         # outliers; best is the engine's sustained rate
         out[name] = {"runs_sec": [round(t, 2) for t in times],
-                     "best_sec": round(times[0], 3)}
+                     "best_sec": round(times[0], 3),
+                     "median_sec": round(times[n_runs // 2], 3),
+                     "warmup_sec": round(warmup, 2)}
     print(json.dumps(out))
 
 

@@ -61,26 +61,16 @@ def main() -> None:
             pipeline.flagship(spark, pages, dedup=False, salted=True),
         "sentences_fused (one Python stage, JVM-side double explode)":
             parse.sentences_from_pages(pages),
-        "scan_parquet (pushdown + pruning)": qs["scan_parquet"](spark, SF_DIR),
-        "join_smj (large-large equi join)": qs["join_smj"](spark, SF_DIR),
-        "join_salted (explicit skew salt)": qs["join_salted"](spark, SF_DIR),
-        "win_dedup_latest (WindowGroupLimit)": qs["win_dedup_latest"](spark, SF_DIR),
-        "join_range (bin-bucketed — hash join, no nested loop)":
-            qs["join_range"](spark, SF_DIR),
         "dedup_minhash_lsh (band-bucket join — no cartesian, no BNL)":
             qs["dedup_minhash_lsh"](spark, SF_DIR),
         "training_data_pipeline (single-pass enrich, no python stages)":
             qs["training_data_pipeline"](spark, SF_DIR),
-        "win_gapfill (generated spine joins pre-aggregated counts)":
-            qs["win_gapfill"](spark, SF_DIR),
         "decontam_ngram_overlap (eval grams broadcast — corpus side never shuffles pre-join)":
             qs["decontam_ngram_overlap"](spark, SF_DIR),
         "export_pack_sequences (single shard shuffle + per-shard window cumsum)":
             qs["export_pack_sequences"](spark, SF_DIR),
         "text_repetition (explode + map-side-combined gram counts)":
             qs["text_repetition"](spark, SF_DIR),
-        "join_bloom_prefilter (broadcast bloom map filters probe before the join)":
-            qs["join_bloom_prefilter"](spark, SF_DIR),
         "cdc_apply_changes (latest-change WindowGroupLimit + broadcast anti-join)":
             qs["cdc_apply_changes"](spark, SF_DIR),
         "export_chunk_overlap (map-only narrow plan — no shuffle)":
@@ -91,11 +81,6 @@ def main() -> None:
             qs["text_unigram_logprob"](spark, SF_DIR),
         "graph_triangle_count (two hash joins on vertex keys)":
             qs["graph_triangle_count"](spark, SF_DIR),
-        "agg_ohlc_resample (ONE aggregate; struct-keyed min_by/max_by "
-        "buffers are immutable so Spark plans SortAggregate — the "
-        "structural floor for any argmax on non-fixed-width types; "
-        "still map-side partial-combined)":
-            qs["agg_ohlc_resample"](spark, SF_DIR),
         "url_canonicalize (map-only narrow plan — no shuffle)":
             qs["url_canonicalize"](spark, SF_DIR),
         "join_fuzzy_jaccard (prefix-token candidates carry ids only; "
@@ -104,9 +89,6 @@ def main() -> None:
         "its own job and is therefore NOT visible in this dump, which "
         "shows only the post-checkpoint plan)":
             qs["join_fuzzy_jaccard"](spark, SF_DIR),
-        "join_point_in_time (SCD2 interval lookup — equi join on key, "
-        "interval as SMJ residual, no time-axis blowup)":
-            qs["join_point_in_time"](spark, SF_DIR),
         "search_bm25_topk (query-term filter BEFORE any shuffle; corpus "
         "stats broadcast one-row)":
             qs["search_bm25_topk"](spark, SF_DIR),
@@ -126,9 +108,6 @@ def main() -> None:
         "text_boilerplate_strip (freq agg + join-back keyed on "
         "(source, line_hash) — line text never shuffles as a key)":
             qs["text_boilerplate_strip"](spark, SF_DIR),
-        "snapshot_diff_audit (map-side md5 fingerprint reduction -> "
-        "one full-outer join on 48 B/row)":
-            qs["snapshot_diff_audit"](spark, SF_DIR),
         "rolling_distinct_users (two-stage plain aggs — NO Expand node; "
         "a double COUNT DISTINCT would plan one)":
             qs["rolling_distinct_users"](spark, SF_DIR),
@@ -253,8 +232,8 @@ def main() -> None:
                 "scale-independent — AQE may re-plan stage counts at runtime "
                 "on real data volumes).\n")
         for title, df in targets.items():
-            # Plans can embed non-printable literals (reconcile.py's
-            # \x1f separator / \x00 NULL sentinel) — escape them so
+            # Plans can embed non-printable literals (separator or
+            # sentinel characters in string constants) — escape them so
             # PLANS.md stays a text file for grep/diff tooling.
             plan = "".join(
                 c if c.isprintable() or c in "\n\t" else repr(c)[1:-1]

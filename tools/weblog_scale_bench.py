@@ -124,9 +124,8 @@ def main() -> None:
     for cores in (args.n, 4 * args.n):
         out = subprocess.run(
             ["taskset", "-c", f"0-{cores - 1}", sys.executable,
-             "tools/weblog_run.py", docs_path, ev_path,
-             str(cores), str(args.runs), pages_path, packed_path,
-             packed_gz_path],
+             "tools/leg_run.py", "weblog", str(cores), str(args.runs),
+             docs_path, ev_path, pages_path, packed_path, packed_gz_path],
             capture_output=True, text=True, check=True)
         results[cores] = json.loads(out.stdout.strip().splitlines()[-1])
         print(out.stdout.strip().splitlines()[-1])
