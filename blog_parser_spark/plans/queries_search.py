@@ -39,8 +39,8 @@ def q_search_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Contract boundary: the operator's postings stay array<bigint> (the
     # streaming index and closed-form pytests consume them), but the
     # registered query serializes them to a comma-joined string (sorted,
-    # elements cast to string, joined with ',') because the driver
-    # harness's pandas canonicalizer cannot sort rows containing list
+    # elements cast to string, joined with ',') because the correctness
+    # gate's pandas canonicalizer cannot sort rows containing list
     # cells (the r4 red row). The sort happens on the BIGINT array
     # (numeric order), then each id casts to string; DuckDB's
     # list_sort/array_to_string does the same.

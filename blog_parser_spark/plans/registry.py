@@ -49,7 +49,7 @@ DRIVER_WINDOW: list[str] = [
     # seek-verified CDX capture index, index-driven random access
     # (byte-identity through scan-pruned single-member seeks), and the
     # cross-crawl digest delta. Byte-level archive evidence belongs in
-    # the driver record.
+    # the correctness-gate record.
     "scan_warc_gz_pages", "flagship_from_warc_gz", "export_cdx_index",
     "warc_fetch_by_index", "crawl_digest_delta",
     # link graph / web structure (3)
