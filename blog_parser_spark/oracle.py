@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import hashlib
 from collections import defaultdict
-from datetime import date, datetime, timedelta
+from datetime import datetime, timedelta
 from typing import Any, Iterable
 
 from . import spec

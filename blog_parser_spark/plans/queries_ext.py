@@ -15,7 +15,7 @@ from .registry import register
 # scalar families: url parsing
 # ---------------------------------------------------------------------------
 
-@register("fn_url", PAGES_SQL_REF := """
+@register("fn_url", """
 WITH p AS (
   SELECT doc_id,
     'https://' || source || '.example.com/post/' || CAST(doc_id AS VARCHAR)

@@ -1,0 +1,87 @@
+"""Import hygiene of the program files (pure Python, stdlib `ast` only).
+
+A name that a module imports but never loads is dead weight: it costs an
+import at start-up, and it reads as a dependency that is not there. The
+scan below fails on any such name in the package, the tools and the
+top-level scripts. An import kept for its side effect or for re-export
+says so with `# noqa: F401` (or a bare `# noqa`) on its line, or is
+named in the module's `__all__`.
+"""
+
+from __future__ import annotations
+
+import ast
+import re
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+SCOPE = ("blog_parser_spark", "tools", "bench.py", "job.py",
+         "__spark_entry__.py")
+_NOQA = re.compile(r"#\s*noqa(?!:)|#\s*noqa:[^#]*\bF401\b", re.IGNORECASE)
+
+
+def _program_files() -> list[Path]:
+    out = []
+    for entry in SCOPE:
+        p = ROOT / entry
+        out.extend(sorted(p.rglob("*.py")) if p.is_dir() else [p])
+    return out
+
+
+def _exported(tree: ast.Module) -> set[str]:
+    names: set[str] = set()
+    for node in tree.body:
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+            targets = [node.target]
+        else:
+            continue
+        if (any(isinstance(t, ast.Name) and t.id == "__all__" for t in targets)
+                and isinstance(node.value, (ast.List, ast.Tuple))):
+            names.update(e.value for e in node.value.elts
+                         if isinstance(e, ast.Constant))
+    return names
+
+
+def unused_imports(source: str, filename: str = "<src>") -> list[tuple[int, str]]:
+    """(line, name) of every imported name the module never loads."""
+    tree = ast.parse(source, filename)
+    lines = source.splitlines()
+    imported: list[tuple[int, str]] = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            bound = [(a, a.asname or a.name.split(".")[0]) for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            bound = [(a, a.asname or a.name) for a in node.names
+                     if a.name != "*"]
+        else:
+            continue
+        for alias, name in bound:
+            if not any(_NOQA.search(lines[ln - 1])
+                       for ln in {node.lineno, alias.lineno}):
+                imported.append((alias.lineno, name))
+    used = {n.id for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+    used |= _exported(tree)
+    return [(ln, name) for ln, name in imported if name not in used]
+
+
+def test_scanner_flags_only_unused_names():
+    src = ("import os\n"
+           "import os.path as osp\n"
+           "import json  # noqa: E402,F401\n"
+           "from typing import Any, Iterable\n"
+           "from . import side_effect  # noqa\n"
+           "from .mod import exported\n"
+           "__all__ = ['exported']\n"
+           "def f(x: Any) -> None:\n"
+           "    return os.sep\n")
+    assert unused_imports(src) == [(2, "osp"), (4, "Iterable")]
+
+
+def test_program_files_import_nothing_unused():
+    found = [f"{p.relative_to(ROOT)}:{ln}: {name}"
+             for p in _program_files()
+             for ln, name in unused_imports(p.read_text(), str(p))]
+    assert found == [], "imported but never used:\n" + "\n".join(found)

@@ -13,8 +13,11 @@ Three invariant families, fuzzed with hypothesis:
 
 from __future__ import annotations
 
+import random
 import re
 import sys
+from datetime import datetime
+from unittest import mock
 
 from hypothesis import given, settings, strategies as st
 
@@ -257,3 +260,126 @@ def test_warc_max_records_is_exact_prefix(recs, k):
             assert seek == [s._replace(offset=s.offset + o) for s in sliced]
             assert (seek[0].url, seek[0].payload, seek[0].offset) == (
                 r.url, r.payload, o)
+
+
+# --- .warc.gz feed size and WARC-Date parsing --------------------------------
+
+# (first slice, largest slice) of parse_warc_gz_file's per-member feed:
+# 1/3 bytes runs the multi-slice loop on every member; 256 KiB/256 KiB is
+# the single fixed feed the walk used before the feed grew per member.
+_GZ_FEEDS = ((1, 3), (1 << 18, 1 << 18))
+
+
+def _walk_with_feed(feed, *args, **kw):
+    first, largest = feed
+    with mock.patch.multiple(spec, _GZ_FIRST=first, _GZ_CHUNK=largest):
+        return spec.walk_warc(*args, **kw)
+
+
+def _incompressible(seed: int) -> bytes:
+    return random.Random(seed).randbytes(20_000)
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(st.tuples(_warc_url, st.one_of(
+           _warc_payload, st.integers(0, 2**32).map(_incompressible))),
+           min_size=1, max_size=5),
+       st.data())
+def test_warc_gz_walk_does_not_depend_on_feed_size(recs, data):
+    """walk_warc over a .warc.gz returns the same records, offsets and
+    error string whatever the decompress feed sizes are, on valid,
+    truncated, corrupted and bad-magic archives, from any start and
+    with any max_records. Some payloads are 20 KB of random bytes, so
+    the default feed also runs more than one slice per member."""
+    date = "2024-05-06T07:08:09Z"
+    base = spec.render_warc_gz_file([(u, date, p) for u, p in recs])
+    offs = [r.offset for r in spec.walk_warc(base)[0]]
+    mode = data.draw(st.sampled_from(
+        ["valid", "truncate", "flip", "bad_magic"]))
+    pos = data.draw(st.integers(min_value=0, max_value=len(base) - 1))
+    if mode == "valid":
+        arc = base
+    elif mode == "truncate":
+        arc = base[:pos]
+    elif mode == "flip":
+        b = data.draw(st.integers(min_value=0, max_value=255))
+        arc = base[:pos] + bytes([b]) + base[pos + 1:]
+    else:
+        # before a later member or at the end, so the archive still
+        # opens with gzip magic and walk_warc takes the gz walker
+        at = data.draw(st.sampled_from([*offs, len(base)]))
+        arc = base[:at] + b"\x1f\x8c junk" + base[at:]
+    start = data.draw(st.one_of(
+        st.sampled_from([0, *offs]),
+        st.integers(min_value=0, max_value=len(arc))))
+    max_records = data.draw(st.one_of(st.none(), st.integers(0, 6)))
+    want = spec.walk_warc(arc, start=start, max_records=max_records)
+    for feed in _GZ_FEEDS:
+        got = _walk_with_feed(feed, arc, start=start,
+                              max_records=max_records)
+        assert got == want, feed
+
+
+_FULLWIDTH = str.maketrans("0123456789", "".join(map(chr, range(0xFF10, 0xFF1A))))
+_ARABIC_INDIC = str.maketrans("0123456789", "".join(map(chr, range(0x0660, 0x066A))))
+
+
+def _date_mutant(s: str, dt: datetime, kind: str) -> str:
+    return {
+        "canonical": s,
+        "lower_t": s.replace("T", "t"),
+        "lower_z": s[:-1] + "z",
+        "lower": s.lower(),
+        "unpadded": (f"{dt.year}-{dt.month}-{dt.day}T{dt.hour}:"
+                     f"{dt.minute}:{dt.second}Z"),
+        "fullwidth": s.translate(_FULLWIDTH),
+        "arabic_indic": s.translate(_ARABIC_INDIC),
+        "one_fullwidth": s[:9] + s[9].translate(_FULLWIDTH) + s[10:],
+        "month_13": s[:5] + "13" + s[7:],
+        "feb_30": s[:5] + "02-30" + s[10:],
+        "hour_24": s[:11] + "24" + s[13:],
+        "hour_24_midnight": s[:11] + "24:00:00Z",
+        "second_60": s[:17] + "60Z",
+        "year_0": "0000" + s[4:],
+        "trailing_space": s + " ",
+        "short": s[:-2] + "Z",
+        "long": s[:-1] + "0Z",
+        "no_zone": s[:-1],
+        "space_sep": s[:10] + " " + s[11:],
+    }[kind]
+
+
+def _parse_or_error(fn, s):
+    try:
+        return fn(s)
+    except ValueError as e:
+        return ("ValueError", str(e))
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.one_of(
+    st.tuples(st.datetimes(min_value=datetime(1678, 1, 1),
+                           max_value=datetime(2261, 12, 31)),
+              st.sampled_from(["canonical", "lower_t", "lower_z", "lower",
+                               "unpadded", "fullwidth", "arabic_indic",
+                               "one_fullwidth", "month_13", "feb_30",
+                               "hour_24", "hour_24_midnight", "second_60",
+                               "year_0", "trailing_space", "short", "long",
+                               "no_zone", "space_sep"])),
+    st.tuples(st.none(), st.text(max_size=24))))
+def test_warc_date_fast_path_equals_strptime(case):
+    """_parse_warc_date accepts exactly what strptime(WARC_DATE_FMT)
+    accepts, with the same value, and rejects everything else with
+    strptime's own ValueError message."""
+    from blog_parser_spark.sources import warc
+    dt, kind = case
+    if dt is None:
+        s = kind
+    else:
+        dt = dt.replace(microsecond=0)
+        s = _date_mutant(warc._fmt_warc_date(dt), dt, kind)
+    want = _parse_or_error(
+        lambda v: datetime.strptime(v, spec.WARC_DATE_FMT), s)
+    assert _parse_or_error(warc._parse_warc_date, s) == want
+    if dt is not None and kind == "canonical":
+        assert want == dt

@@ -27,7 +27,6 @@ import json
 import multiprocessing as mp
 import os
 import shutil
-import sys
 import time
 
 CHUNK = 4 * 1024 * 1024
