@@ -84,10 +84,10 @@ def _parse_warc_date(s: str) -> datetime:
     # Session timezone is UTC everywhere (conftest/session.py), so the
     # naive datetime round-trips the fixture's TIMESTAMP_NTZ exactly.
     # The canonical layout takes fromisoformat, an order of magnitude
-    # cheaper than strptime. Everything else, and any value fromisoformat rejects,
-    # goes to strptime, so accepted values and error messages are
-    # strptime's: it also takes lower-case t/z, unpadded fields and
-    # non-ASCII digits.
+    # cheaper than strptime. Everything else, and any value that
+    # fromisoformat rejects, goes to strptime, so accepted values and
+    # error messages are strptime's: it also takes lower-case t/z,
+    # unpadded fields and non-ASCII digits.
     if _WARC_DATE_CANON.fullmatch(s):
         try:
             return datetime.fromisoformat(s[:19])

@@ -421,14 +421,11 @@ def parse_warc_file(data: bytes,
 # path. A reader distinguishes the two layouts by the first two bytes.
 
 GZIP_MAGIC = b"\x1f\x8b"
-# Per-member decompress feed: the first slice is _GZ_FIRST bytes and each
-# further slice _GZ_GROW times the last, up to _GZ_CHUNK. When a member
-# ends, zlib copies the rest of its last slice into unused_data, so that
-# copy stays within a constant factor of the member's own compressed size
-# (or _GZ_FIRST) instead of a fixed 256 KiB per record.
-_GZ_FIRST = 1 << 12
-_GZ_GROW = 4
-_GZ_CHUNK = 1 << 18
+# Decompress feed, in bytes per slice. When a member ends, zlib copies
+# the rest of its last slice into unused_data, so each member costs its
+# own bytes plus under _GZ_CHUNK of copy: the walk is O(bytes + members
+# x _GZ_CHUNK), and a small feed keeps that second term small.
+_GZ_CHUNK = 1 << 14
 
 
 def gzip_member(record: bytes) -> bytes:
@@ -456,16 +453,12 @@ def parse_warc_gz_file(data: bytes,
                        max_records: int | None = None,
                        start: int = 0) -> tuple[list[WarcRecord], str | None]:
     """Binary-safe .warc.gz walk: gunzip one concatenated member at a
-    time and run the plain-WARC grammar on each member's bytes. Each
-    member is fed in slices that start at _GZ_FIRST bytes and grow to
-    _GZ_CHUNK, so the slice tail zlib copies out past a member's end is
-    proportional to that member: the walk is linear in the archive
-    however small its records are. A record's offset is its gzip
-    member's COMPRESSED byte offset — the number a CC-style index
-    stores. Error contract matches parse_warc_file: the first
-    corrupt/truncated member stops the walk with a position-stamped
-    reason; everything before it is returned. max_records and start
-    are parse_warc_file's."""
+    time, fed in _GZ_CHUNK slices, and run the plain-WARC grammar on
+    each member's bytes. A record's offset is its gzip member's
+    COMPRESSED byte offset — the number a CC-style index stores. Error
+    contract matches parse_warc_file: the first corrupt/truncated
+    member stops the walk with a position-stamped reason; everything
+    before it is returned. max_records and start are parse_warc_file's."""
     import zlib
     out: list[WarcRecord] = []
     if max_records is not None and max_records <= 0:
@@ -478,15 +471,13 @@ def parse_warc_gz_file(data: bytes,
             return out, f"bad gzip magic at byte {pos}"
         d = zlib.decompressobj(16 + zlib.MAX_WBITS)
         parts: list[bytes] = []
-        feed = _GZ_FIRST
         try:
             while not d.eof:
                 if pos >= n:
                     return out, f"truncated gzip member at byte {member_at}"
-                chunk = view[pos:pos + feed]
+                chunk = view[pos:pos + _GZ_CHUNK]
                 parts.append(d.decompress(chunk))
                 pos += len(chunk)
-                feed = min(feed * _GZ_GROW, _GZ_CHUNK)
         except zlib.error as e:
             return out, f"corrupt gzip member at byte {member_at}: {e}"
         pos -= len(d.unused_data)

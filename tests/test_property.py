@@ -264,15 +264,13 @@ def test_warc_max_records_is_exact_prefix(recs, k):
 
 # --- .warc.gz feed size and WARC-Date parsing --------------------------------
 
-# (first slice, largest slice) of parse_warc_gz_file's per-member feed:
-# 1/3 bytes runs the multi-slice loop on every member; 256 KiB/256 KiB is
-# the single fixed feed the walk used before the feed grew per member.
-_GZ_FEEDS = ((1, 3), (1 << 18, 1 << 18))
+# parse_warc_gz_file feed sizes: 1 byte runs the multi-slice loop on
+# every member; 256 KiB takes every member here in one slice.
+_GZ_FEEDS = (1, 1 << 18)
 
 
 def _walk_with_feed(feed, *args, **kw):
-    first, largest = feed
-    with mock.patch.multiple(spec, _GZ_FIRST=first, _GZ_CHUNK=largest):
+    with mock.patch.object(spec, "_GZ_CHUNK", feed):
         return spec.walk_warc(*args, **kw)
 
 
@@ -287,7 +285,7 @@ def _incompressible(seed: int) -> bytes:
        st.data())
 def test_warc_gz_walk_does_not_depend_on_feed_size(recs, data):
     """walk_warc over a .warc.gz returns the same records, offsets and
-    error string whatever the decompress feed sizes are, on valid,
+    error string whatever the decompress feed size is, on valid,
     truncated, corrupted and bad-magic archives, from any start and
     with any max_records. Some payloads are 20 KB of random bytes, so
     the default feed also runs more than one slice per member."""
