@@ -21,10 +21,24 @@ from typing import NamedTuple
 PARSE_SPEC_VERSION = 1
 
 # --- tag grammar (SURVEY.md §2.2 items 2-4) -------------------------------
-H1_RE = re.compile(r"<h1[^>]*>(.*?)</h1>", re.S | re.I)
-TITLE_RE = re.compile(r"<title[^>]*>(.*?)</title>", re.S | re.I)
-H23_RE = re.compile(r"<(h[23])[^>]*>(.*?)</\1>", re.S | re.I)
-P_RE = re.compile(r"<p[^>]*>(.*?)</p>", re.S | re.I)
+# A tag's body runs from its opener to the first closer after it, matched
+# case-insensitively: `<p[^>]*>(.*?)</p>` under re.S | re.I. Each body is
+# compiled as a possessive unrolled loop: a run of non-'<', then any '<'
+# that does not start the closer, then another run. The loop halts at
+# exactly the first '<' where the closer matches, and `re` matches that
+# closer under re.I in both the lookahead and the final literal, so case
+# folds (U+0130, U+0131, U+212A, U+017F) act as in the lazy form. Nothing
+# a possessive quantifier keeps could be given back for a match: `[^>]*+`
+# never holds a '>', and the loop holds no '<' that starts the closer. So
+# each body is scanned once, with no backtracking on an unclosed opener.
+H1_RE = re.compile(
+    r"<h1[^>]*+>([^<]*+(?:<(?!/h1>)[^<]*+)*+)</h1>", re.S | re.I)
+TITLE_RE = re.compile(
+    r"<title[^>]*+>([^<]*+(?:<(?!/title>)[^<]*+)*+)</title>", re.S | re.I)
+H23_RE = re.compile(
+    r"<(h[23])[^>]*+>([^<]*+(?:<(?!/\1>)[^<]*+)*+)</\1>", re.S | re.I)
+P_RE = re.compile(
+    r"<p[^>]*+>([^<]*+(?:<(?!/p>)[^<]*+)*+)</p>", re.S | re.I)
 TAG_STRIP_RE = re.compile(r"<[^>]+>")
 
 # Decoded in this order; &amp; LAST so "&amp;lt;" -> "&lt;" not "<".
@@ -71,9 +85,7 @@ def normalize_fragment(raw: str) -> str:
     (str.isspace, checked over every code point in tests/test_property.py),
     so the join-of-split is that collapse exactly. On printable ASCII with
     no double space a lone ' ' is the only whitespace and the collapse is
-    the identity. On the benchmark's pages (10k docs, CPython 3.11, Xeon):
-    8.2 of parse_document's 19.5 us/doc went to the regex guard this
-    replaces; now this function takes 2.0 us/doc (was 9.1), the parse 11.8."""
+    the identity."""
     s = TAG_STRIP_RE.sub("", raw) if "<" in raw else raw
     if "&" in s:
         for ent, ch in ENTITY_DECODE:

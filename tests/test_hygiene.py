@@ -1,11 +1,15 @@
-"""Import hygiene of the program files (pure Python, stdlib `ast` only).
+"""Hygiene of the program files (pure Python, stdlib `ast` only).
 
 A name that a module imports but never loads is dead weight: it costs an
 import at start-up, and it reads as a dependency that is not there. The
-scan below fails on any such name in the package, the tools and the
+first scan below fails on any such name in the package, the tools and the
 top-level scripts. An import kept for its side effect or for re-export
 says so with `# noqa: F401` (or a bare `# noqa`) on its line, or is
 named in the module's `__all__`.
+
+An `assert` statement vanishes under `python -O`, so a check made with
+one is no check there. The second scan fails on any `assert` in the same
+files; a program check raises an explicit exception instead.
 """
 
 from __future__ import annotations
@@ -85,3 +89,30 @@ def test_program_files_import_nothing_unused():
              for p in _program_files()
              for ln, name in unused_imports(p.read_text(), str(p))]
     assert found == [], "imported but never used:\n" + "\n".join(found)
+
+
+def assert_lines(source: str, filename: str = "<src>") -> list[int]:
+    """Line of every `assert` statement in the module."""
+    return sorted(n.lineno for n in ast.walk(ast.parse(source, filename))
+                  if isinstance(n, ast.Assert))
+
+
+def test_assert_scanner_flags_statements_only():
+    src = ("def f(x):\n"
+           "    assert x, 'x'\n"
+           "    s = 'assert x'  # assert in a comment\n"
+           "    if not x:\n"
+           "        raise SystemExit('x')\n"
+           "class C:\n"
+           "    def g(self):\n"
+           "        assert (self,\n"
+           "                1)\n")
+    assert assert_lines(src) == [2, 8]
+
+
+def test_program_files_make_no_assert_checks():
+    found = [f"{p.relative_to(ROOT)}:{ln}"
+             for p in _program_files()
+             for ln in assert_lines(p.read_text(), str(p))]
+    assert found == [], ("assert statements, stripped by python -O:\n"
+                         + "\n".join(found))

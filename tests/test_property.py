@@ -2,7 +2,8 @@
 
 Three invariant families, fuzzed with hypothesis:
 1. The guarded fast paths in spec.normalize_fragment / split_sentences are
-   byte-equal to the unguarded reference forms on ARBITRARY text.
+   byte-equal to the unguarded reference forms on ARBITRARY text, and the
+   compiled tag scans to the lazy `(.*?)` forms on adversarial tag soup.
 2. The fixture round trip (text -> render_html -> parse_document) recovers
    extracted_text byte-identically for any single-space-separated word text
    (the documents.text shape).
@@ -105,6 +106,55 @@ def test_parse_document_total_on_arbitrary_bytes(data):
     assert isinstance(parsed.parse_ok, bool)
     if not parsed.parse_ok:
         assert parsed.parse_err
+
+
+# --- tag grammar: compiled scans == lazy reference forms ----------------------
+
+LAZY_TAG_RES = {
+    "H1_RE": re.compile(r"<h1[^>]*>(.*?)</h1>", re.S | re.I),
+    "TITLE_RE": re.compile(r"<title[^>]*>(.*?)</title>", re.S | re.I),
+    "H23_RE": re.compile(r"<(h[23])[^>]*>(.*?)</\1>", re.S | re.I),
+    "P_RE": re.compile(r"<p[^>]*>(.*?)</p>", re.S | re.I),
+}
+
+# openers and closers in both cases, `<p>` nested in `<h2>`, tags that
+# `<p[^>]*>` also opens (`<pre>`, `<param>`), closers that do not close
+# (`</h2 >`, `</h3>` after `<h2>`), stray brackets, and the non-ASCII
+# letters re.I folds onto ASCII: U+0130 and U+0131 onto 'i' (so
+# `</t\u0130tle>` closes a title), U+212A onto 'k', U+017F onto 's'
+_TAG_ATOMS = [
+    "<p>", "</p>", "<P>", "</P>", "<p class='a'>", "</p >", "</pp>",
+    "<pre>", "</pre>", "<param x>", "<PARAM>",
+    "<h1>", "</h1>", "<H1 id=t>", "</H1>",
+    "<h2>", "</h2>", "<H2>", "</H2>", "</h2 >", "<h3>", "</h3>", "</H3>",
+    "<h2><p>in</p></h2>", "<title>", "</title>", "</TITLE>", "<Title x>",
+    "</t\u0130tle>", "</t\u0131tle>", "<t\u0130tle>", "\u0130", "\u0131",
+    "\u212a", "\u017f", "<", ">", "/", "</", "<b>", "</b>",
+    "&amp;", "a", "Mr. B", " ", "\n", ".",
+]
+_tag_soup = st.lists(st.sampled_from(_TAG_ATOMS), max_size=40).map("".join)
+
+
+@settings(max_examples=500, deadline=None)
+@given(_tag_soup)
+def test_tag_scans_equal_lazy_forms(doc):
+    for name, lazy in LAZY_TAG_RES.items():
+        compiled = getattr(spec, name)
+        assert compiled.findall(doc) == lazy.findall(doc), name
+        m, ref = compiled.search(doc), lazy.search(doc)
+        assert (m is None) == (ref is None), name
+        if m is not None:
+            assert (m.span(), m.groups()) == (ref.span(), ref.groups()), name
+
+
+@settings(max_examples=300, deadline=None)
+@given(_tag_soup)
+def test_parse_document_equals_lazy_reference_parse(doc):
+    html = doc.encode("utf-8")
+    got = spec.parse_document(html)
+    with mock.patch.multiple(spec, **LAZY_TAG_RES):
+        want = spec.parse_document(html)
+    assert got == want
 
 
 # --- WARC container grammar (round 4) ----------------------------------------

@@ -30,7 +30,8 @@ def sh(cmd: list[str], **kw) -> subprocess.CompletedProcess:
 def main() -> int:
     sh(["make", "-C", REPO, "dist"])
     zip_path = os.path.join(REPO, "dist", "blog_parser_spark.zip")
-    assert os.path.exists(zip_path), zip_path
+    if not os.path.exists(zip_path):
+        raise SystemExit(zip_path)
 
     work = tempfile.mkdtemp(prefix="spark_graft_submit_")
     pages = os.path.join(work, "pages.parquet")
@@ -49,7 +50,8 @@ def main() -> int:
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)
     submit = shutil.which("spark-submit")
-    assert submit, "spark-submit not on PATH"
+    if not submit:
+        raise SystemExit("spark-submit not on PATH")
     cmd = [submit, "--master", "local[4]",
            "--conf", "spark.sql.shuffle.partitions=8",
            "--conf", "spark.sql.session.timeZone=UTC",
