@@ -2,12 +2,8 @@
 with typed metadata, processed via Arrow-batched mapInPandas.
 
 The Spark side (schema, partitioning, batch shape, UDF signatures) is real
-and tested; the codec step degrades gracefully — `decode_real` decodes
-via PIL/soundfile/av when the library is importable (a real cluster gets
-the codec for free) and raises NotImplementedError in codec-less
-environments like this container, where the pipeline uses the
-deterministic fake codec (payloads carry their own generator formula).
-The DataFrame plumbing is identical either way.
+and tested. The codec is a deterministic fake: payloads carry their own
+generator formula, so a real decoder would slot into the same batches.
 """
 
 from __future__ import annotations
@@ -64,29 +60,6 @@ def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", kind.alias("kind"),
         gen_payload("doc_id", "n_chars").alias("payload"),
         meta.alias("meta"))
-
-
-def decode_real(kind: str, payload: bytes):
-    """Real codec hook: decodes with PIL / soundfile / av when the library
-    is importable (a real cluster gets the codec for free), raises
-    NotImplementedError in codec-less environments like this sandbox.
-
-    Returns: image -> PIL.Image, audio -> (numpy samples, sample_rate),
-    video -> an open av container."""
-    import io as _io
-    try:
-        if kind == "image":
-            import PIL.Image
-            return PIL.Image.open(_io.BytesIO(payload))
-        if kind == "audio":
-            import soundfile
-            return soundfile.read(_io.BytesIO(payload))
-        if kind == "video":
-            import av
-            return av.open(_io.BytesIO(payload))
-        raise ValueError(f"unknown media kind: {kind!r}")
-    except ImportError as e:
-        raise NotImplementedError(f"no codec library for {kind}") from e
 
 
 FEATURES_SCHEMA = StructType([

@@ -1,14 +1,14 @@
 """Structured Streaming variant (SURVEY.md §2.3 streaming ops, §3.4).
 
-The batch transforms are reused verbatim inside foreachBatch — one code
-path, two execution modes. Checkpoints give resumability; the
-availableNow trigger gives batch-like runs with streaming checkpoints
-(the kill-and-resume acceptance path).
-
-Watermark caveat (SURVEY.md §2.3 stream_watermark): rows later than the
-watermark are dropped from streaming aggregates by design; exact-match
-acceptance therefore runs on the batch/availableNow path, and late data
-is reconciled by batch backfill.
+Sources: pages parquet, landed WARC archives, and the crawl-delta
+classifier. Sinks: the routed fan-out, the CDC snapshot, the count-min
+sketch and the inverted index, each folded in foreachBatch. The batch
+transforms are reused verbatim inside foreachBatch — one code path, two
+execution modes. Checkpoints give resumability; the availableNow trigger
+gives batch-like runs with streaming checkpoints (the kill-and-resume
+acceptance path). No operator here keeps streaming state or a
+watermark: each micro-batch is stateless, and sink state lives in the
+written tables.
 """
 
 from __future__ import annotations
@@ -34,12 +34,6 @@ def stream_pages(spark: SparkSession, src_dir: str,
     if max_files_per_trigger:
         r = r.option("maxFilesPerTrigger", max_files_per_trigger)
     return r.parquet(src_dir)
-
-
-def stream_events(spark: SparkSession, src_dir: str) -> DataFrame:
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    return spark.readStream.schema(schema).parquet(src_dir)
 
 
 def stream_warc_archives(spark: SparkSession, src_dir: str,
@@ -120,245 +114,7 @@ def stream_crawl_delta(spark: SparkSession, src_dir: str,
                      .otherwise("same").alias("status")))
 
 
-# --- windowed aggregates ------------------------------------------------------
-
-def tumbling_counts(events: DataFrame, window: str = "1 hour",
-                    watermark: str = "2 hours") -> DataFrame:
-    """stream_tumbling: events per type per tumbling window, late rows
-    beyond the watermark dropped (bounded state)."""
-    return (events.withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window).alias("win"), "event_type")
-            .agg(F.count(F.lit(1)).alias("events"))
-            .select(F.col("win.start").alias("win_start"),
-                    F.col("win.end").alias("win_end"),
-                    "event_type", "events"))
-
-
-def sliding_counts(events: DataFrame, window: str = "1 hour",
-                   slide: str = "15 minutes", watermark: str = "2 hours") -> DataFrame:
-    return (events.withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window, slide).alias("win"), "event_type")
-            .agg(F.count(F.lit(1)).alias("events"))
-            .select(F.col("win.start").alias("win_start"),
-                    F.col("win.end").alias("win_end"),
-                    "event_type", "events"))
-
-
-def session_counts(events: DataFrame, gap: str = "30 minutes",
-                   watermark: str = "2 hours") -> DataFrame:
-    """stream_session: per-user sessionization with a gap timeout."""
-    return (events.withWatermark("ts", watermark)
-            .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
-            .agg(F.count(F.lit(1)).alias("events"),
-                 F.sum(F.col("value").cast("decimal(18,4)"))
-                 .cast("double").alias("value"))
-            .select(F.col("win.start").alias("session_start"),
-                    F.col("win.end").alias("session_end"),
-                    "user_id", "events", "value"))
-
-
-def dedup_urls(pages: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """stream_dedup: stateful url dedup bounded by the watermark."""
-    return (pages.withWatermark("warc_ts", watermark)
-            .dropDuplicatesWithinWatermark(["url"]))
-
-
-def enrich_stream_static(pages: DataFrame, lang_dim: DataFrame) -> DataFrame:
-    """stream-static join: the streaming side joins a STATIC broadcast dim
-    inside the streaming query itself (no foreachBatch hop) — Spark plans
-    this as a stateless per-microbatch broadcast hash join, so it needs no
-    watermark and no state store. This is the enrich shape for dims that
-    change rarely; fast-changing dims go through foreachBatch (re-read per
-    batch) or a stream-stream join. Same transform as the batch enrich —
-    one code path, two execution modes."""
-    from ..operators import enrich as enrich_ops
-
-    return enrich_ops.join_lang_norm(pages, lang_dim)
-
-
-def stream_stream_join(left: DataFrame, right: DataFrame,
-                       max_lag: str = "1 hour",
-                       watermark: str = "2 hours") -> DataFrame:
-    """stream-stream inner join: pair each left event with the right
-    events of the SAME user that happened in [left_ts - max_lag, left_ts].
-    Both sides carry watermarks AND the join condition bounds event time —
-    together they let Spark evict join state (without the time bound the
-    state store grows forever). Inner-join output is exactly the matched
-    pairs, so batch parity is exact (tested)."""
-    l = left.select(F.col("event_id").alias("l_id"), "user_id",
-                    F.col("ts").alias("l_ts")).withWatermark("l_ts", watermark)
-    r = right.select(F.col("event_id").alias("r_id"),
-                     F.col("user_id").alias("r_user_id"),
-                     F.col("ts").alias("r_ts")).withWatermark("r_ts", watermark)
-    cond = ((F.col("user_id") == F.col("r_user_id"))
-            & (F.col("r_ts") <= F.col("l_ts"))
-            & (F.col("r_ts") >= F.col("l_ts") - F.expr(f"INTERVAL {max_lag}")))
-    return (l.join(r, cond, "inner")
-            .select("l_id", "r_id", "user_id", "l_ts", "r_ts"))
-
-
-def stateful_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState): running per-user
-    event count + value total, kept in the state store across micro-batches.
-
-    This is the escape-hatch shape for stateful logic the built-in windowed
-    aggregates can't express; state is keyed per user_id and lives
-    per-partition on executors, checkpointed with the query. The value
-    total is accumulated in integer basis points (round(value*10^4)) so the
-    running sum is order-independent and exactly reproducible vs a batch
-    aggregate — float accumulation across micro-batches would drift in the
-    last ulp and break exact parity checks. Rounding is half-away-from-zero
-    (sign * floor(|x| + 0.5)) to match Spark's F.round/ROUND exactly —
-    pandas' .round() is IEEE half-to-even and would disagree with the batch
-    aggregate on exact-.5 products."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = "user_id long, events long, value_bp long"
-    state_schema = "events long, value_bp long"
-
-    def fn(key, pdfs, state):
-        events_n, value_bp = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            events_n += len(pdf)
-            bp = pdf["value"].fillna(0.0).to_numpy() * 10_000
-            value_bp += int((np.sign(bp) * np.floor(np.abs(bp) + 0.5))
-                            .astype("int64").sum())
-        state.update((events_n, value_bp))
-        yield pd.DataFrame({"user_id": [key[0]], "events": [events_n],
-                            "value_bp": [value_bp]})
-
-    return (events.groupBy("user_id")
-            .applyInPandasWithState(fn, out_schema, state_schema, "update",
-                                    GroupStateTimeout.NoTimeout))
-
-
-def user_activity_profile_legacy(events: DataFrame) -> DataFrame:
-    """The user_activity_profile semantics on applyInPandasWithState (the
-    API that runs in this sandbox): per-user running (event count, exact
-    basis-point value total, distinct event_type count). State is ONE
-    tuple (events, value_bp, seen_types array) — and that is the
-    documented limitation this op exists to illustrate against
-    transformWithState: adding a field to this tuple on restart fails
-    the state-schema compatibility check, whereas transformWithState
-    evolves by registering a new named variable. Kill/resume across >=3
-    micro-batches is asserted in tests/test_streaming.py."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = "user_id long, events long, value_bp long, n_types long"
-    state_schema = "events long, value_bp long, seen_types array<string>"
-
-    def fn(key, pdfs, state):
-        if state.exists:
-            ev_n, value_bp, seen_list = state.get
-            seen = set(seen_list)
-        else:
-            ev_n, value_bp, seen = 0, 0, set()
-        for pdf in pdfs:
-            ev_n += len(pdf)
-            bp = pdf["value"].fillna(0.0).to_numpy() * 10_000
-            value_bp += int((np.sign(bp) * np.floor(np.abs(bp) + 0.5))
-                            .astype("int64").sum())
-            seen.update(pdf["event_type"].dropna().unique().tolist())
-        state.update((ev_n, value_bp, sorted(seen)))
-        yield pd.DataFrame({"user_id": [key[0]], "events": [ev_n],
-                            "value_bp": [value_bp], "n_types": [len(seen)]})
-
-    return (events.groupBy("user_id")
-            .applyInPandasWithState(fn, out_schema, state_schema, "update",
-                                    GroupStateTimeout.NoTimeout))
-
-
-def user_activity_profile(events: DataFrame,
-                          with_last_event: bool = False) -> DataFrame:
-    """Second custom stateful operator, on the Spark 4 transformWithState
-    API (requires the RocksDB state store provider): per-user running
-    profile combining TWO typed state variables — a ValueState holding
-    (event count, exact basis-point value total) and a MapState of
-    per-event_type counts whose key count gives the running distinct-type
-    cardinality. transformWithState supersedes applyInPandasWithState:
-    state is a set of independently-schema'd named variables instead of
-    one opaque tuple, which is what makes STATE-SCHEMA EVOLUTION
-    practical — restarting from the same checkpoint with
-    `with_last_event=True` registers an additional ValueState
-    ("last_event_id") in init(); pre-existing variables keep their data
-    across the restart (kill/resume + evolution asserted in
-    tests/test_streaming.py).
-
-    Exactness: the value total accumulates in integer basis points with
-    half-away-from-zero rounding (matches F.round), so the final state
-    per user equals the batch aggregate bit-for-bit regardless of
-    micro-batch boundaries.
-
-    Sandbox gap (same class as Iceberg jar / media codecs): executing
-    transformWithStateInPandas needs `google.protobuf` (the TWS Python
-    state-server protocol), which this container lacks — the operator
-    and its kill/resume/evolution test are written and gated on a
-    protobuf probe (tests skip with the recorded reason until the dep
-    appears); `user_activity_profile_legacy` runs the same semantics on
-    applyInPandasWithState today."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    out_cols = "user_id long, events long, value_bp long, n_types long"
-    if with_last_event:
-        out_cols += ", last_event_id long"
-
-    class Profile(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.totals = handle.getValueState(
-                "totals", "events long, value_bp long")
-            self.type_counts = handle.getMapState(
-                "type_counts", "event_type string", "n long")
-            if with_last_event:
-                # schema evolution: a NEW state variable added on restart;
-                # existing variables above are untouched
-                self.last_event = handle.getValueState(
-                    "last_event_id", "event_id long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            ev_n, value_bp = self.totals.get() or (0, 0)
-            last_id = None
-            for pdf in rows:
-                ev_n += len(pdf)
-                bp = pdf["value"].fillna(0.0).to_numpy() * 10_000
-                value_bp += int((np.sign(bp) * np.floor(np.abs(bp) + 0.5))
-                                .astype("int64").sum())
-                for et, n in pdf.groupby("event_type").size().items():
-                    prev = self.type_counts.getValue((et,))
-                    self.type_counts.updateValue(
-                        (et,), ((prev[0] if prev else 0) + int(n),))
-                if with_last_event:
-                    m = int(pdf["event_id"].max())
-                    last_id = m if last_id is None else max(last_id, m)
-            self.totals.update((ev_n, value_bp))
-            row = {"user_id": [key[0]], "events": [ev_n],
-                   "value_bp": [value_bp],
-                   "n_types": [sum(1 for _ in self.type_counts.keys())]}
-            if with_last_event:
-                prev = self.last_event.get()
-                best = max([v for v in (prev[0] if prev else None, last_id)
-                            if v is not None])
-                self.last_event.update((best,))
-                row["last_event_id"] = [best]
-            yield pd.DataFrame(row)
-
-        def close(self) -> None:
-            pass
-
-    return (events.groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=Profile(),
-                outputStructType=out_cols,
-                outputMode="Update", timeMode="None"))
-
-
-# --- the streaming flagship ---------------------------------------------------
+# --- sinks -------------------------------------------------------------------
 
 def start_pipeline(spark: SparkSession, pages_stream: DataFrame, out_dir: str,
                    checkpoint: str, available_now: bool = True) -> StreamingQuery:
@@ -452,69 +208,6 @@ def start_cdc_snapshot(changes: DataFrame, snapshot_dir: str,
     if available_now:
         w = w.trigger(availableNow=True)
     return w.start()
-
-
-def start_windowed(df: DataFrame, out_dir: str, checkpoint: str,
-                   available_now: bool = True,
-                   output_mode: str = "append") -> StreamingQuery:
-    w = (df.writeStream.outputMode(output_mode)
-         .format("parquet").option("path", out_dir)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def anomaly_zscore_stream(events: DataFrame) -> DataFrame:
-    """Online volume-anomaly scoring (the streaming dual of batch
-    log_anomaly_zscore): per event_type, each completed hour's count is
-    z-scored against the hours seen SO FAR (prequential — the score uses
-    only information available at that point in the stream), then folded
-    into the running state.
-
-    State per key is three BIGINTs (sum, sum-of-squares, n of hourly
-    counts) — integer-exact, so the derived mean/variance doubles are
-    bit-reproducible across retries and restarts, and the state size is
-    O(1) per event_type regardless of stream length.
-
-    Contract: hours must not straddle micro-batches (replay/backfill
-    alignment, e.g. hourly files). A production tail with late data
-    would put a watermarked tumbling-window count in front and feed the
-    CLOSED windows here; this operator is the scoring state machine.
-    Emits one row per (event_type, hour): zscore is NULL until 2 prior
-    hours exist and variance is positive.
-    """
-    import math
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = "event_type string, hr timestamp, cnt long, zscore double"
-    state_schema = "s long, sq long, n long"
-
-    def fn(key, pdfs, state):
-        s, sq, n = state.get if state.exists else (0, 0, 0)
-        pdf = pd.concat(list(pdfs))
-        counts = pdf["ts"].dt.floor("h").value_counts().sort_index()
-        rows = []
-        for hr, cnt in counts.items():
-            cnt = int(cnt)
-            z = None
-            if n >= 2:
-                mean = s / n
-                var = (sq - s * s / n) / (n - 1)
-                if var > 0:
-                    z = round((cnt - mean) / math.sqrt(var), 6)
-            rows.append((key[0], hr, cnt, z))
-            s, sq, n = s + cnt, sq + cnt * cnt, n + 1
-        state.update((s, sq, n))
-        out = pd.DataFrame(rows, columns=["event_type", "hr", "cnt", "zscore"])
-        # all-None zscore batches must still be float64, not object
-        yield out.astype({"zscore": "float64"})
-
-    return (events.groupBy("event_type")
-            .applyInPandasWithState(fn, out_schema, state_schema, "update",
-                                    GroupStateTimeout.NoTimeout))
 
 
 def read_count_min(spark: SparkSession, sketch_dir: str) -> DataFrame:

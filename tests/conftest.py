@@ -5,8 +5,6 @@ import pytest
 from blog_parser_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
-SF_DIR_001 = "/root/testdata/sf0.01"
-FUZZ_DIR = f"{__file__.rsplit('/', 1)[0]}/fuzz_corpus"
 
 
 @pytest.fixture(scope="session")

@@ -10,6 +10,15 @@ named in the module's `__all__`.
 An `assert` statement vanishes under `python -O`, so a check made with
 one is no check there. The second scan fails on any `assert` in the same
 files; a program check raises an explicit exception instead.
+
+A function or class that only tests call is code the system does not
+run. The third scan fails on any top-level, undecorated `def` or `class`
+in the package whose name no program file (the package, the tools, the
+top-level scripts and the benchmark harness outside its tests) loads
+outside the definition itself. Reference code and fixtures that tests
+compare against, and the few kept entry points no program calls yet, are
+exempt by name in `CALLER_EXEMPT`, each with its reason; an exemption
+that is no longer needed fails the scan too.
 """
 
 from __future__ import annotations
@@ -116,3 +125,105 @@ def test_program_files_make_no_assert_checks():
              for ln in assert_lines(p.read_text(), str(p))]
     assert found == [], ("assert statements, stripped by python -O:\n"
                          + "\n".join(found))
+
+
+# file:name -> why it may have no program caller
+_PKG = "blog_parser_spark/"
+CALLER_EXEMPT = {
+    _PKG + "oracle.py:run_pipeline":
+        "the pure-Python reference the Spark pipeline is compared against",
+    _PKG + "oracle.py:document_to_page":
+        "the fixture row -> page mapping of the reference run",
+    _PKG + "sources/fixtures.py:expected_sentence_counts":
+        "the expected values of the adversarial pages",
+    _PKG + "spec.py:extract_canonical":
+        "the reference canonical-link extraction Spark is compared against",
+    _PKG + "spec.py:extract_alternates":
+        "the reference hreflang extraction Spark is compared against",
+    _PKG + "operators/aggregate.py:multiset_equal":
+        "the row-multiset equality the parity checks use",
+    _PKG + "sources/io.py:adversarial_pages_df":
+        "the adversarial pages fixture that tests share",
+    _PKG + "streaming/stream.py:read_count_min":
+        "the read side of the kept count-min stream",
+    _PKG + "streaming/stream.py:read_inverted_index":
+        "the read side of the kept inverted-index stream",
+    _PKG + "operators/cdc.py:live_rows":
+        "the read side of the kept CDC snapshot stream",
+    _PKG + "streaming/stream.py:stream_pages_from_warc":
+        "the crawl-to-pipeline bridge the cross-batch streaming dedup "
+        "builds on",
+}
+
+
+def _caller_files() -> list[Path]:
+    bench = [p for p in sorted((ROOT / "webbench").rglob("*.py"))
+             if "tests" not in p.relative_to(ROOT / "webbench").parts]
+    return _program_files() + bench
+
+
+def _loaded_names(node: ast.AST) -> set[str]:
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
+            out.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            out.update(a.name for a in n.names)
+    return out
+
+
+def uncalled_defs(sources: dict[str, str], package: set[str]) -> list[str]:
+    """`file:name` of every top-level undecorated def/class in the
+    `package` files that no source (filename -> text) loads outside the
+    definition itself."""
+    defs: list[tuple[str, str]] = []
+    loaded: set[str] = set()
+    for fname, src in sources.items():
+        for node in ast.parse(src, fname).body:
+            if (fname in package
+                    and isinstance(node, (ast.FunctionDef,
+                                          ast.AsyncFunctionDef, ast.ClassDef))
+                    and not node.decorator_list):
+                defs.append((fname, node.name))
+                loaded |= _loaded_names(node) - {node.name}
+            else:
+                loaded |= _loaded_names(node)
+    return sorted(f"{fname}:{name}" for fname, name in defs
+                  if name not in loaded)
+
+
+def test_caller_scanner_flags_only_defs_nothing_loads():
+    pkg = ("def used(): pass\n"
+           "def via_attr(): pass\n"
+           "def imported(): pass\n"
+           "def recursive(n): return recursive(n - 1)\n"
+           "def _helper(): pass\n"
+           "def dead(): return _helper()\n"
+           "class Dead: pass\n"
+           "@register('q')\n"
+           "def q_registered(): pass\n"
+           "def shadowed(): pass\n")
+    caller = ("from pkg import imported\n"
+              "import pkg\n"
+              "used()\n"
+              "pkg.via_attr()\n"
+              "pkg.shadowed = None\n")
+    found = uncalled_defs({"pkg.py": pkg, "caller.py": caller}, {"pkg.py"})
+    assert found == ["pkg.py:Dead", "pkg.py:dead", "pkg.py:recursive",
+                     "pkg.py:shadowed"]
+
+
+def test_package_defs_have_a_program_caller():
+    sources = {str(p.relative_to(ROOT)): p.read_text()
+               for p in _caller_files()}
+    package = {f for f in sources if f.startswith("blog_parser_spark/")}
+    found = set(uncalled_defs(sources, package))
+    uncalled = sorted(found - CALLER_EXEMPT.keys())
+    assert uncalled == [], ("defined in the package but called by no program "
+                            "file (delete it, or exempt it with a reason):\n"
+                            + "\n".join(uncalled))
+    stale = sorted(CALLER_EXEMPT.keys() - found)
+    assert stale == [], ("exempt, but gone or now called by a program file "
+                         "(drop the exemption):\n" + "\n".join(stale))

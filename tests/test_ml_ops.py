@@ -102,32 +102,6 @@ def test_multimodal_resize_and_frames(spark):
     assert ts[0] == 0 and all(b - a == 1000 for a, b in zip(ts, ts[1:]))
 
 
-def test_decode_real_behavior_matches_environment():
-    """Codec-less env -> NotImplementedError; codec present -> a real
-    decode attempt (garbage bytes then raise the library's own error,
-    NOT NotImplementedError)."""
-    try:
-        import PIL.Image  # noqa: F401
-        has_pil = True
-    except ImportError:
-        has_pil = False
-    if has_pil:
-        with pytest.raises(Exception) as ei:
-            multimodal.decode_real("image", b"\x89PNG not a real image")
-        assert not isinstance(ei.value, NotImplementedError)
-    else:
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_real("image", b"\x89PNG...")
-    try:
-        import soundfile  # noqa: F401
-        has_sf = True
-    except ImportError:
-        has_sf = False
-    if not has_sf:
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_real("audio", b"RIFF...")
-
-
 def test_connected_components_clusters_and_converges(spark):
     """CC over a synthetic 3-component graph: chain, triangle, singleton —
     labels converge to the min id of each component, including across

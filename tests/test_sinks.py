@@ -1,5 +1,5 @@
-"""Bucketed sink layout + partition pruning (SURVEY.md §2.3 sink_bucketed)
-and the sliding-window streaming op."""
+"""Pages schema-drift check and the approximate and exact distinct
+sketches (SURVEY.md §2.3)."""
 
 from __future__ import annotations
 
@@ -7,50 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blog_parser_spark.sources import io
-from blog_parser_spark.streaming import stream
 from tests.conftest import SF_DIR
-
-
-def test_bucketed_write_prunes_on_read(spark, tmp_path):
-    out = str(tmp_path / "bucketed")
-    pages = io.synth_pages(spark, SF_DIR).select("url", "lang")
-    io.write_bucketed_by_url(pages, out, buckets=16)
-
-    whole = spark.read.parquet(out)
-    assert whole.count() == pages.count()
-
-    # a url-keyed lookup prunes to exactly one bucket directory
-    url = pages.limit(1).collect()[0]["url"]
-    bucket = whole.filter(F.col("url") == url).collect()[0]["url_bucket"]
-    one = spark.read.parquet(out).filter(F.col("url_bucket") == bucket)
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "url_bucket" in plan  # partition filter present
-    assert one.filter(F.col("url") == url).count() == 1
-    # physical layout: one directory per bucket
-    import os
-    dirs = [d for d in os.listdir(out) if d.startswith("url_bucket=")]
-    assert len(dirs) == 16
-
-
-def test_sliding_window_matches_batch(spark, tmp_path):
-    src = str(tmp_path / "ev")
-    io.read_table(spark, SF_DIR, "events").coalesce(1).write.mode("overwrite").parquet(src)
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = stream.start_windowed(
-        stream.sliding_counts(stream.stream_events(spark, src)), out, ck)
-    q.awaitTermination(300)
-    got = spark.read.parquet(out)
-    exp = (spark.read.parquet(src)
-           .groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"), "event_type")
-           .agg(F.count(F.lit(1)).alias("events"))
-           .select(F.col("win.start").alias("win_start"),
-                   F.col("win.end").alias("win_end"), "event_type", "events"))
-    # append mode withholds windows the final watermark hasn't passed
-    assert got.exceptAll(exp).isEmpty()
-    max_ts = spark.read.parquet(src).agg(F.max("ts")).collect()[0][0]
-    import datetime
-    cutoff = max_ts - datetime.timedelta(hours=2)
-    assert exp.filter(F.col("win_end") <= F.lit(cutoff)).exceptAll(got).isEmpty()
 
 
 def test_read_pages_schema_drift_fails_loudly(spark, tmp_path):
@@ -70,27 +27,6 @@ def test_read_pages_schema_drift_fails_loudly(spark, tmp_path):
      .coalesce(1).write.parquet(renamed))
     with pytest.raises(io.SchemaDriftError):
         io.read_pages(spark, renamed)
-
-
-def test_compaction_preserves_content_and_reduces_files(spark, tmp_path):
-    import os
-    out = str(tmp_path / "sink")
-    docs = io.read_table(spark, SF_DIR, "documents").select("doc_id", "lang", "text")
-    # simulate many-small-files: 8 writers per lang partition
-    docs.repartition(8).write.partitionBy("lang").parquet(out)
-    before = docs.orderBy("doc_id").collect()
-    n_before = sum(len([f for f in os.listdir(os.path.join(out, d))
-                        if f.endswith(".parquet")])
-                   for d in os.listdir(out) if d.startswith("lang="))
-
-    stats = io.compact_partition_dir(spark, out, "lang")
-    n_after = sum(stats.values())
-    assert n_after < n_before and n_after == len(stats)  # 1 file per lang here
-
-    # content byte-equal (lang comes back as partition column)
-    after = (spark.read.option("basePath", out).parquet(out)
-             .select("doc_id", "lang", "text").orderBy("doc_id").collect())
-    assert [tuple(r) for r in after] == [tuple(r) for r in before]
 
 
 def test_approx_distinct_within_error_bound(spark):
@@ -115,35 +51,6 @@ def test_approx_percentile_within_rank_error_bound(spark):
     w = math.ceil(n / A) + 1              # guaranteed rank error + slack
     lo, hi = vals[max(0, k - w)], vals[min(n - 1, k + 1 + w)]
     assert lo <= ap <= hi
-
-
-def test_compaction_recovers_from_simulated_crashes(spark, tmp_path):
-    import os, shutil
-    out = str(tmp_path / "sink")
-    docs = io.read_table(spark, SF_DIR, "documents").select("doc_id", "lang", "text")
-    docs.repartition(4).write.partitionBy("lang").parquet(out)
-    expected = [tuple(r) for r in docs.orderBy("doc_id").collect()]
-    parts = sorted(d for d in os.listdir(out) if d.startswith("lang="))
-
-    # crash window 1: rewrite committed to tmp only -> must be discarded
-    shutil.copytree(os.path.join(out, parts[0]),
-                    os.path.join(out, f".compact_tmp_{parts[0]}"))
-    # crash window 2: partition renamed away, new files not yet in place
-    os.rename(os.path.join(out, parts[1]),
-              os.path.join(out, f".compact_old_{parts[1]}"))
-    # crash window 3: swap done but old not yet deleted
-    shutil.copytree(os.path.join(out, parts[2]),
-                    os.path.join(out, f".compact_old_{parts[2]}"))
-
-    # scratch dirs are invisible to Spark partition discovery (dot prefix);
-    # window-2's partition is temporarily missing, windows 1+3 must not
-    # duplicate rows
-    stats = io.compact_partition_dir(spark, out, "lang")
-    assert set(stats) == {p.split("=", 1)[1] for p in parts}
-    after = (spark.read.option("basePath", out).parquet(out)
-             .select("doc_id", "lang", "text").orderBy("doc_id").collect())
-    assert [tuple(r) for r in after] == expected
-    assert not any(d.startswith(".compact") for d in os.listdir(out))
 
 
 def test_hll_union_estimate_within_error_bound(spark):
@@ -192,188 +99,3 @@ def test_bitmap_rollup_persisted_daily_merge(spark, tmp_path):
             .groupBy("event_type")
             .agg(F.countDistinct("user_id").alias("n")).collect()}
     assert got == want and len(got) > 0
-
-
-def test_threshold_compaction_multilevel_touches_only_fragmented(spark, tmp_path):
-    import os
-    from blog_parser_spark.sources import compact
-
-    out = str(tmp_path / "ml_sink")
-    docs = io.read_table(spark, SF_DIR, "documents") \
-        .select("doc_id", "lang", "source", "text")
-    # fragment ONE (lang, source) partition with 3 appends x 4 writers;
-    # everything else gets a single clean append
-    frag = docs.filter((F.col("lang") == "en"))
-    first = frag.select("source").limit(1).collect()[0]["source"]
-    hot = frag.filter(F.col("source") == first)
-    docs.subtract(hot).repartition(1) \
-        .write.partitionBy("lang", "source").parquet(out)
-    hot.repartition(12).write.mode("append") \
-       .partitionBy("lang", "source").parquet(out)
-
-    before = sorted(tuple(r) for r in docs.collect())
-    stats0 = compact.partition_file_stats(spark, out, ["lang", "source"])
-    healthy_files = {(r["lang"], r["source"]): r["n_files"]
-                     for r in stats0.collect() if r["n_files"] <= 4}
-
-    res = compact.compact_partitions(spark, out, ["lang", "source"],
-                                     max_files=4)
-    assert res["partitions_compacted"] == 1
-    assert res["files_before"] > 4  # the fragmented partition's files
-
-    stats1 = {(r["lang"], r["source"]): r["n_files"]
-              for r in compact.partition_file_stats(
-                  spark, out, ["lang", "source"]).collect()}
-    assert stats1[("en", first)] == 1
-    # healthy partitions untouched (same file counts)
-    for k, v in healthy_files.items():
-        assert stats1[k] == v
-    # content identical
-    after = sorted(
-        tuple(r) for r in spark.read.option("basePath", out).parquet(out)
-        .select("doc_id", "lang", "source", "text").collect())
-    assert after == before
-    # idempotent: second run is a no-op
-    assert compact.compact_partitions(spark, out, ["lang", "source"],
-                                      max_files=4)["partitions_compacted"] == 0
-
-
-def test_sorted_layout_rowgroup_skipping(spark, tmp_path):
-    """Row-group min/max stats must let a point predicate on the sort
-    column skip (almost) everything in the sorted layout while the
-    scrambled layout overlaps (almost) every row group — measured from
-    the parquet footers themselves, engine-independent."""
-    import glob
-    import pyarrow.parquet as pq
-
-    from tests.conftest import SF_DIR_001
-
-    ev = io.read_table(spark, SF_DIR_001, "events") \
-        .select("event_id", "ts", "user_id", "event_type", "value")
-    sorted_dir = str(tmp_path / "by_user")
-    scrambled_dir = str(tmp_path / "scrambled")
-    # tiny row groups so each file carries many (finer skip granularity)
-    io.write_sorted_layout(ev.repartition(2), sorted_dir, ["user_id"],
-                           rowgroup_bytes=32 * 1024)
-    io.write_sorted_layout(ev.repartition(2), scrambled_dir,
-                           ["event_id"],  # ~random wrt user_id
-                           rowgroup_bytes=32 * 1024)
-
-    def overlap_fraction(d, lo, hi):
-        tot = hit = 0
-        for f in glob.glob(f"{d}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = {name: i for i, name in enumerate(md.schema.names)}
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(idx["user_id"]).statistics
-                tot += 1
-                if st.min <= hi and st.max >= lo:
-                    hit += 1
-        return hit / tot, tot
-
-    probe = ev.select("user_id").limit(1).collect()[0]["user_id"]
-    frac_sorted, n_sorted = overlap_fraction(sorted_dir, probe, probe)
-    frac_scrambled, n_scrambled = overlap_fraction(scrambled_dir, probe, probe)
-    assert n_sorted >= 8 and n_scrambled >= 8  # enough groups to mean anything
-    assert frac_sorted <= 0.25
-    assert frac_scrambled >= 0.75
-    # and the pruned read returns exactly the right rows
-    got = (spark.read.parquet(sorted_dir).filter(F.col("user_id") == probe)
-           .count())
-    want = ev.filter(F.col("user_id") == probe).count()
-    assert got == want
-
-
-def test_zorder_layout_skips_on_both_columns(spark, tmp_path):
-    """The z-order claim: row-group stats are selective on BOTH z
-    columns, where a single-column sort is selective on its sort column
-    only. Measured from parquet footers (engine-independent), then the
-    pruned read is value-checked."""
-    import glob
-    import pyarrow.parquet as pq
-
-    from tests.conftest import SF_DIR_001
-
-    ev = io.read_table(spark, SF_DIR_001, "events") \
-        .select("event_id", "user_id", "value")
-    zdir = str(tmp_path / "zord")
-    sdir = str(tmp_path / "single")
-    io.write_zorder_layout(ev, zdir, ["user_id", "value"],
-                           rowgroup_bytes=8 * 1024)
-    io.write_sorted_layout(ev.repartition(2), sdir, ["user_id"],
-                           rowgroup_bytes=16 * 1024)
-
-    def overlap_fraction(d, col, lo, hi):
-        tot = hit = 0
-        for f in glob.glob(f"{d}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = {name: i for i, name in enumerate(md.schema.names)}
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(idx[col]).statistics
-                tot += 1
-                if st.min <= hi and st.max >= lo:
-                    hit += 1
-        return hit / tot, tot
-
-    u_probe = ev.select("user_id").limit(1).collect()[0]["user_id"]
-    # ~10% of ROWS (quantile band, not min-max fraction: value is skewed,
-    # so a min-max band would legitimately hit most groups)
-    vband = tuple(ev.stat.approxQuantile("value", [0.45, 0.55], 0.001))
-
-    fz_u, nz = overlap_fraction(zdir, "user_id", u_probe, u_probe)
-    fz_v, _ = overlap_fraction(zdir, "value", *vband)
-    fs_u, ns = overlap_fraction(sdir, "user_id", u_probe, u_probe)
-    fs_v, _ = overlap_fraction(sdir, "value", *vband)
-    assert nz >= 16 and ns >= 16
-    # z-order: meaningful skipping on BOTH dimensions
-    assert fz_u <= 0.5 and fz_v <= 0.5
-    # single-column sort: perfect on its column, blind on the other
-    assert fs_u <= 0.25 and fs_v >= 0.75
-    # pruned reads return exactly the right rows
-    got = (spark.read.parquet(zdir)
-           .filter((F.col("value") >= vband[0]) & (F.col("value") <= vband[1]))
-           .count())
-    want = ev.filter((F.col("value") >= vband[0])
-                     & (F.col("value") <= vband[1])).count()
-    assert got == want
-
-
-def test_jsonl_and_csv_landing_readers_quarantine_corrupt_rows(spark, tmp_path):
-    """Declared-schema landing readers: clean rows round-trip exactly;
-    a malformed line becomes a quarantine row carrying the raw text in
-    _corrupt — never silently dropped, never a job kill."""
-    import json
-    import os
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-    schema = StructType([StructField("doc_id", LongType(), True),
-                         StructField("text", StringType(), True)])
-    rows = [{"doc_id": i, "text": f"doc {i}"} for i in range(10)]
-
-    jdir = str(tmp_path / "j"); os.makedirs(jdir)
-    with open(os.path.join(jdir, "a.jsonl"), "w") as f:
-        for r in rows[:5]:
-            f.write(json.dumps(r) + "\n")
-        f.write('{"doc_id": "NOT A NUMBER, unterminated\n')
-        for r in rows[5:]:
-            f.write(json.dumps(r) + "\n")
-    got = io.read_jsonl(spark, jdir, schema)
-    clean = {r["doc_id"]: r["text"]
-             for r in got.filter("_corrupt IS NULL").collect()}
-    assert clean == {r["doc_id"]: r["text"] for r in rows}
-    bad = got.filter("_corrupt IS NOT NULL").collect()
-    assert len(bad) == 1 and "NOT A NUMBER" in bad[0]["_corrupt"]
-
-    cdir = str(tmp_path / "c"); os.makedirs(cdir)
-    with open(os.path.join(cdir, "a.csv"), "w") as f:
-        f.write("doc_id,text\n")
-        for r in rows[:5]:
-            f.write(f"{r['doc_id']},{r['text']}\n")
-        f.write("not_a_number,too,many,columns,here\n")
-        for r in rows[5:]:
-            f.write(f"{r['doc_id']},{r['text']}\n")
-    gotc = io.read_csv_strict(spark, cdir, schema)
-    cleanc = {r["doc_id"]: r["text"]
-              for r in gotc.filter("_corrupt IS NULL").collect()}
-    assert cleanc == {r["doc_id"]: r["text"] for r in rows}
-    badc = gotc.filter("_corrupt IS NOT NULL").collect()
-    assert len(badc) == 1 and "not_a_number" in badc[0]["_corrupt"]

@@ -6,8 +6,7 @@ files and converge to the batch result over the union."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from blog_parser_spark.operators import aggregate
 from blog_parser_spark.plans import pipeline
@@ -94,301 +93,6 @@ def test_streaming_flagship_from_warc_resume(spark, tmp_path):
     assert aggregate.multiset_equal(got.select(*cols), batch.select(*cols))
 
 
-def test_streaming_windows_match_batch(spark, tmp_path):
-    src = str(tmp_path / "ev")
-    io.read_table(spark, SF_DIR, "events").coalesce(2).write.mode("overwrite").parquet(src)
-
-    ev_stream = stream.stream_events(spark, src)
-    ev_batch = spark.read.parquet(src)
-
-    max_ts = ev_batch.agg(F.max("ts")).collect()[0][0]
-    import datetime
-    cutoff = max_ts - datetime.timedelta(hours=2)
-
-    # tumbling: append mode emits exactly the windows the final watermark
-    # (max_ts - 2h) has passed; anything newer is withheld by design —
-    # the documented exactness caveat (batch backfill reconciles it)
-    out1, ck1 = str(tmp_path / "tumb"), str(tmp_path / "ck1")
-    _await(stream.start_windowed(stream.tumbling_counts(ev_stream), out1, ck1))
-    got = spark.read.parquet(out1)
-    exp = (ev_batch.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-           .agg(F.count(F.lit(1)).alias("events"))
-           .select(F.col("win.start").alias("win_start"),
-                   F.col("win.end").alias("win_end"), "event_type", "events"))
-    exp_closed = exp.filter(F.col("win_end") <= F.lit(cutoff))
-    missing = exp.exceptAll(got)
-    assert got.exceptAll(exp).isEmpty()              # nothing invented
-    assert exp_closed.exceptAll(got).isEmpty()       # all closed windows out
-    assert missing.filter(F.col("win_end") <= F.lit(cutoff)).isEmpty()
-
-    # session windows per user — same closed-window criterion
-    out2, ck2 = str(tmp_path / "sess"), str(tmp_path / "ck2")
-    _await(stream.start_windowed(stream.session_counts(ev_stream), out2, ck2))
-    got2 = spark.read.parquet(out2)
-    exp2 = (ev_batch.groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
-            .agg(F.count(F.lit(1)).alias("events"),
-                 F.sum(F.col("value").cast("decimal(18,4)"))
-                 .cast("double").alias("value"))
-            .select(F.col("win.start").alias("session_start"),
-                    F.col("win.end").alias("session_end"),
-                    "user_id", "events", "value"))
-    assert got2.exceptAll(exp2).isEmpty()
-    assert (exp2.filter(F.col("session_end") <= F.lit(cutoff))
-            .exceptAll(got2).isEmpty())
-
-
-def test_stateful_user_totals_matches_batch(spark, tmp_path):
-    """applyInPandasWithState across multiple micro-batches: the final
-    per-user running totals must equal the batch aggregate exactly
-    (integer basis-point accumulation — no float drift)."""
-    src = str(tmp_path / "ev")
-    ev = io.read_table(spark, SF_DIR, "events")
-    # two files + maxFilesPerTrigger=1 => at least two micro-batches, so
-    # state genuinely carries across batches
-    ev.filter("event_id % 2 = 0").coalesce(1).write.mode("overwrite").parquet(src)
-    ev.filter("event_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    stream_ev = (spark.readStream.schema(schema)
-                 .option("maxFilesPerTrigger", 1).parquet(src))
-    totals = stream.stateful_user_totals(stream_ev)
-    q = (totals.writeStream.outputMode("update").format("memory")
-         .queryName("user_totals").trigger(availableNow=True).start())
-    _await(q)
-
-    # updates are monotone in `events`; the final state per user is the max
-    got = spark.sql("""
-        SELECT user_id, max_by(value_bp, events) AS value_bp,
-               max(events) AS events
-        FROM user_totals GROUP BY user_id""")
-    exp = (ev.groupBy("user_id")
-           .agg(F.sum(F.round(F.coalesce(F.col("value"), F.lit(0.0))
-                              * 10_000).cast("long")).alias("value_bp"),
-                F.count(F.lit(1)).alias("events")))
-    assert got.exceptAll(exp).isEmpty() and exp.exceptAll(got).isEmpty()
-
-
-def _has_protobuf() -> bool:
-    """transformWithStateInPandas runs a Python state-server driver that
-    imports google.protobuf; absent in this sandbox (gap watch: probe
-    each round, same as the Iceberg jar / media codecs)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def _seed_event_files(spark, base: str, n: int = 4) -> list[str]:
-    import os
-    ev = io.read_table(spark, SF_DIR, "events")
-    for part in range(n):
-        (ev.filter(F.col("event_id") % n == part).coalesce(1)
-         .write.mode("append" if part else "overwrite").parquet(base))
-    files = sorted(f for f in os.listdir(base) if f.endswith(".parquet"))
-    assert len(files) == n
-    return files
-
-
-_EV_SCHEMA = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-
-
-def test_stateful_profile_kill_resume_across_microbatches(spark, tmp_path):
-    """The second stateful op (per-user profile: count + exact bp total +
-    distinct event types) across 4 one-file micro-batches with a
-    kill/resume in the middle: run 1 sees two files and terminates; two
-    more files arrive; run 2 resumes from the SAME checkpoint. Final
-    per-user state must equal the batch aggregate over ALL events exactly
-    — possible only if run-1 state survived the restart."""
-    import os
-    import shutil
-    src = str(tmp_path / "ev")
-    files = _seed_event_files(spark, src)
-    live = str(tmp_path / "live")
-    os.makedirs(live)
-    ckpt = str(tmp_path / "ckpt")
-
-    out = str(tmp_path / "profiles")
-
-    def run() -> int:
-        stream_ev = (spark.readStream.schema(_EV_SCHEMA)
-                     .option("maxFilesPerTrigger", 1).parquet(live))
-        seen = []
-
-        def write_batch(df, bid):  # memory sink can't recover; files can
-            seen.append(bid)
-            df.write.mode("append").parquet(out)
-
-        q = (stream.user_activity_profile_legacy(stream_ev)
-             .writeStream.outputMode("update").foreachBatch(write_batch)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        _await(q)
-        return len(seen)
-
-    for f in files[:2]:
-        shutil.copy(os.path.join(src, f), os.path.join(live, f))
-    n1 = run()
-    for f in files[2:]:
-        shutil.copy(os.path.join(src, f), os.path.join(live, f))
-    n2 = run()
-    assert n1 >= 2 and n2 >= 2  # >=4 one-file micro-batches total
-
-    spark.read.parquet(out).createOrReplaceTempView("profile_updates")
-    final = spark.sql("""
-        SELECT user_id, max(events) AS events,
-               max_by(value_bp, events) AS value_bp,
-               max_by(n_types, events) AS n_types
-        FROM profile_updates
-        GROUP BY user_id""")
-    exp = (spark.read.parquet(live).groupBy("user_id")
-           .agg(F.count(F.lit(1)).alias("events"),
-                F.sum(F.round(F.coalesce(F.col("value"), F.lit(0.0))
-                              * 10_000).cast("long")).alias("value_bp"),
-                F.countDistinct("event_type").alias("n_types")))
-    assert final.exceptAll(exp).isEmpty() and exp.exceptAll(final).isEmpty()
-
-
-@pytest.mark.skipif(not _has_protobuf(),
-                    reason="transformWithStateInPandas needs google.protobuf"
-                           " (absent in sandbox; probed each round)")
-def test_transform_with_state_resume_and_schema_evolution(spark, tmp_path):
-    """transformWithStateInPandas (RocksDB state store) across >=3
-    micro-batches with a kill/resume AND state-schema evolution on
-    restart: run 2 resumes from the same checkpoint with a processor
-    that registers an ADDITIONAL state variable in init(). The final
-    per-user profile equals the batch aggregate over ALL events exactly —
-    which can only happen if run-1 state survived both the restart and
-    the evolution."""
-    import os
-    import shutil
-    src = str(tmp_path / "ev")
-    files = _seed_event_files(spark, src)
-    live = str(tmp_path / "live")
-    os.makedirs(live)
-    ckpt = str(tmp_path / "ckpt")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try:
-        out1, out2 = str(tmp_path / "tws1"), str(tmp_path / "tws2")
-
-        def run(with_last_event: bool, out: str) -> None:
-            stream_ev = (spark.readStream.schema(_EV_SCHEMA)
-                         .option("maxFilesPerTrigger", 1).parquet(live))
-            prof = stream.user_activity_profile(
-                stream_ev, with_last_event=with_last_event)
-
-            def write_batch(df, bid):
-                df.write.mode("append").parquet(out)
-
-            q = (prof.writeStream.outputMode("update")
-                 .foreachBatch(write_batch)
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            _await(q)
-
-        for f in files[:2]:
-            shutil.copy(os.path.join(src, f), os.path.join(live, f))
-        run(with_last_event=False, out=out1)
-        for f in files[2:]:
-            shutil.copy(os.path.join(src, f), os.path.join(live, f))
-        run(with_last_event=True, out=out2)
-
-        spark.read.parquet(out1).createOrReplaceTempView("tws_run1")
-        spark.read.parquet(out2).createOrReplaceTempView("tws_run2")
-        final = spark.sql("""
-            SELECT user_id, max(events) AS events,
-                   max_by(value_bp, events) AS value_bp,
-                   max_by(n_types, events) AS n_types
-            FROM (SELECT * FROM tws_run1 UNION ALL
-                  SELECT user_id, events, value_bp, n_types
-                  FROM tws_run2)
-            GROUP BY user_id""")
-        exp = (spark.read.parquet(live).groupBy("user_id")
-               .agg(F.count(F.lit(1)).alias("events"),
-                    F.sum(F.round(F.coalesce(F.col("value"), F.lit(0.0))
-                                  * 10_000).cast("long")).alias("value_bp"),
-                    F.countDistinct("event_type").alias("n_types")))
-        assert final.exceptAll(exp).isEmpty() and exp.exceptAll(final).isEmpty()
-        # the evolved variable is populated for users seen after resume
-        assert (spark.sql("SELECT count(*) FROM tws_run2 "
-                          "WHERE last_event_id IS NULL").collect()[0][0] == 0)
-        assert spark.sql("SELECT count(*) FROM tws_run2").collect()[0][0] > 0
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider)
-
-
-def test_streaming_dedup_urls(spark, tmp_path):
-    src = str(tmp_path / "dup")
-    pages = io.adversarial_pages_df(spark)
-    pages.coalesce(1).write.mode("overwrite").parquet(src)
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    dd = stream.dedup_urls(stream.stream_pages(spark, src))
-    _await(stream.start_windowed(dd.select("url", "warc_ts"), out, ck))
-    got = spark.read.parquet(out)
-    assert got.count() == pages.select("url").distinct().count()
-
-
-def test_stream_static_broadcast_join_matches_batch(spark, tmp_path):
-    """Stream-static broadcast enrich inside the streaming query (no
-    foreachBatch) must equal the batch broadcast join over the same
-    input, and needs no watermark (stateless join)."""
-    from blog_parser_spark.operators import enrich as enrich_ops
-
-    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
-    pages = io.synth_pages(spark, SF_DIR)
-    pages.coalesce(2).write.mode("overwrite").parquet(src)
-
-    enriched = stream.enrich_stream_static(
-        stream.stream_pages(spark, src), io.lang_norm_df(spark))
-    _await(stream.start_windowed(
-        enriched.select("url", "lang", "lang_norm"), out, ck))
-
-    got = spark.read.parquet(out)
-    exp = (enrich_ops.join_lang_norm(spark.read.parquet(src),
-                                     io.lang_norm_df(spark))
-           .select("url", "lang", "lang_norm"))
-    assert aggregate.multiset_equal(got, exp)
-
-
-def test_stream_stream_join_matches_batch(spark, tmp_path):
-    """Watermarked stream-stream inner join (clicks x prior views of the
-    same user within 1h) must equal the batch join exactly — inner output
-    is the matched-pair set, independent of state eviction timing."""
-    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
-    ev = io.read_table(spark, SF_DIR, "events")
-    ev.coalesce(2).write.mode("overwrite").parquet(src)
-
-    s = stream.stream_events(spark, src)
-    joined = stream.stream_stream_join(
-        s.filter("event_type = 'click'"), s.filter("event_type = 'view'"))
-    _await(stream.start_windowed(joined, out, ck))
-
-    got = spark.read.parquet(out)
-    b = spark.read.parquet(src)
-    l = (b.filter("event_type = 'click'")
-         .select(F.col("event_id").alias("l_id"), "user_id",
-                 F.col("ts").alias("l_ts")))
-    r = (b.filter("event_type = 'view'")
-         .select(F.col("event_id").alias("r_id"),
-                 F.col("user_id").alias("r_user_id"), F.col("ts").alias("r_ts")))
-    exp = (l.join(r, (F.col("user_id") == F.col("r_user_id"))
-                  & (F.col("r_ts") <= F.col("l_ts"))
-                  & (F.col("r_ts") >= F.col("l_ts") - F.expr("INTERVAL 1 HOUR")))
-           .select("l_id", "r_id", "user_id", "l_ts", "r_ts"))
-    assert exp.count() > 0
-    assert aggregate.multiset_equal(got, exp)
-
-
 def test_cdc_snapshot_stream_matches_batch_and_survives_late_batches(
         spark, tmp_path):
     """Streaming CDC snapshot maintenance: micro-batches fold into a
@@ -439,142 +143,6 @@ def test_cdc_snapshot_stream_matches_batch_and_survives_late_batches(
     assert 0 not in live and 10 not in live        # deletes stick
     assert live[2] == "v2-2"                        # late seq lost
     assert state.filter("op = 'd'").count() == 20   # tombstones persist
-
-
-def test_anomaly_zscore_stream_matches_prequential_batch(spark, tmp_path):
-    """Streaming prequential z-scores across day-aligned micro-batches
-    must match the batch window formulation (score each hour against
-    STRICTLY PRIOR hours) — integer state makes the doubles identical up
-    to the documented round(6)."""
-    import os
-    src = str(tmp_path / "ev")
-    os.makedirs(src)
-    ev = io.read_table(spark, SF_DIR, "events")
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    span_days = (hi - lo).days + 1
-    # 4 chronological slices on day boundaries -> hours never straddle files
-    cuts = [0, span_days // 4, span_days // 2, 3 * span_days // 4, span_days + 1]
-    day = F.datediff(F.col("ts").cast("date"), F.lit(lo.date().isoformat()))
-    for i in range(4):
-        (ev.filter((day >= cuts[i]) & (day < cuts[i + 1])).coalesce(1)
-         .write.mode("append").parquet(src))
-
-    stream_ev = (spark.readStream.schema(_EV_SCHEMA)
-                 .option("maxFilesPerTrigger", 1).parquet(src))
-    q = (stream.anomaly_zscore_stream(stream_ev)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("anom_stream").trigger(availableNow=True).start())
-    _await(q)
-    got = {(r["event_type"], r["hr"]): (r["cnt"], r["zscore"])
-           for r in spark.sql("SELECT * FROM anom_stream").collect()}
-
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.count(F.lit(1)).alias("cnt")))
-    w = (Window.partitionBy("event_type").orderBy("hr")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    s = F.sum("cnt").over(w).cast("double")
-    sq = F.sum(F.col("cnt") * F.col("cnt")).over(w).cast("double")
-    n = F.count(F.lit(1)).over(w)
-    var = (sq - s * s / n) / (n - 1)
-    z = F.when((n >= 2) & (var > 0),
-               F.round((F.col("cnt") - s / n) / F.sqrt(var), 6))
-    exp = {(r["event_type"], r["hr"]): (r["cnt"], r["z"])
-           for r in hourly.select("event_type", "hr", "cnt",
-                                  z.alias("z")).collect()}
-    assert set(got) == set(exp) and len(got) > 100
-    n_scored = 0
-    for k, (cnt_g, z_g) in got.items():
-        cnt_e, z_e = exp[k]
-        assert cnt_g == cnt_e, k
-        if z_e is None:
-            assert z_g is None, k
-        else:
-            assert z_g is not None and abs(z_g - z_e) < 1e-9, k
-            n_scored += 1
-    assert n_scored > 100  # the parity isn't vacuous
-
-
-def test_anomaly_zscore_stream_kill_resume(spark, tmp_path):
-    """Anomaly state (sum/sumsq/n per event_type) must survive a
-    kill/resume: run 1 scores the first half of the day-aligned slices
-    and terminates; the rest arrives; run 2 resumes from the SAME
-    checkpoint. The union of emitted rows must equal the one-shot
-    prequential batch formulation — possible only if run-1 state
-    (and its scored hours) carried over."""
-    import os
-    import shutil
-    src = str(tmp_path / "ev")
-    os.makedirs(src)
-    ev = io.read_table(spark, SF_DIR, "events")
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    span_days = (hi - lo).days + 1
-    cuts = [0, span_days // 4, span_days // 2, 3 * span_days // 4,
-            span_days + 1]
-    day = F.datediff(F.col("ts").cast("date"), F.lit(lo.date().isoformat()))
-    # deterministic slice names: part-file UUIDs sort randomly, and the
-    # prequential semantics need chronological arrival
-    for i in range(4):
-        part_dir = str(tmp_path / f"part{i}")
-        (ev.filter((day >= cuts[i]) & (day < cuts[i + 1])).coalesce(1)
-         .write.mode("overwrite").parquet(part_dir))
-        part = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
-        shutil.move(os.path.join(part_dir, part),
-                    os.path.join(src, f"slice{i}.parquet"))
-    files = [f"slice{i}.parquet" for i in range(4)]
-
-    live = str(tmp_path / "live")
-    os.makedirs(live)
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "scores")
-
-    def run():
-        stream_ev = (spark.readStream.schema(_EV_SCHEMA)
-                     .option("maxFilesPerTrigger", 1).parquet(live))
-        q = (stream.anomaly_zscore_stream(stream_ev)
-             .writeStream.outputMode("update")
-             .foreachBatch(lambda df, bid: df.write.mode("append").parquet(out))
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        _await(q)
-
-    # chronological arrival order so the prequential semantics are
-    # defined; the file source orders pending files by mtime, so pin
-    # strictly increasing mtimes rather than rely on copy timing
-    def land(i):
-        dst = os.path.join(live, files[i])
-        shutil.copy(os.path.join(src, files[i]), dst)
-        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-
-    land(0)
-    land(1)
-    run()
-    land(2)
-    land(3)
-    run()
-
-    got = {(r["event_type"], r["hr"]): (r["cnt"], r["zscore"])
-           for r in spark.read.parquet(out).collect()}
-    hourly = (ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hr"))
-              .agg(F.count(F.lit(1)).alias("cnt")))
-    w = (Window.partitionBy("event_type").orderBy("hr")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    s = F.sum("cnt").over(w).cast("double")
-    sq = F.sum(F.col("cnt") * F.col("cnt")).over(w).cast("double")
-    n = F.count(F.lit(1)).over(w)
-    var = (sq - s * s / n) / (n - 1)
-    z = F.when((n >= 2) & (var > 0),
-               F.round((F.col("cnt") - s / n) / F.sqrt(var), 6))
-    exp = {(r["event_type"], r["hr"]): (r["cnt"], r["z"]) for r in
-           hourly.select("event_type", "hr", "cnt", z.alias("z")).collect()}
-    assert set(got) == set(exp)
-    for k, (cnt_g, z_g) in got.items():
-        cnt_e, z_e = exp[k]
-        assert cnt_g == cnt_e, k
-        if z_e is None:
-            assert z_g is None, k
-        else:
-            assert z_g is not None and abs(z_g - z_e) < 1e-9, k
 
 
 def test_inverted_index_maintenance_matches_batch_and_is_replay_safe(
