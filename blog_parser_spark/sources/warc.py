@@ -24,10 +24,10 @@ one source of truth for both directions):
 
 Scale shape: both directions are ONE Arrow-batched Python stage and zero
 shuffles beyond pack's repartition on file id. Payload bytes cross Arrow
-once; a malformed file never throws — it yields its good prefix plus a
-position-stamped quarantine row (url NULL, warc_err set), so corrupt
-archives are counted, never silently dropped (same contract as the
-JSONL/CSV landing readers in io.py).
+once. Quarantine contract: a malformed file never throws — it yields
+every record before its first framing error plus one quarantine row
+(url NULL, the position-stamped reason in warc_err), so corrupt
+archives are counted, never silently dropped.
 """
 
 from __future__ import annotations
@@ -247,9 +247,10 @@ def read_warc(files: DataFrame, rec_type: str = "response") -> DataFrame:
     magic (never by name) and walks those member-by-member in the same
     Arrow stage — plain and .warc.gz files mix freely in one ingest. A
     framing error emits the file's good prefix AND one quarantine row
-    carrying the position-stamped reason — the resume/metrics story is
-    identical to the landing-zone readers: count failures, never
-    silently drop bytes.
+    (url, warc_ts, html and rec_offset NULL; warc_err the
+    position-stamped reason), so a failure is counted, never a silent
+    drop of bytes. A payload whose declared digest mismatches is not a
+    framing error: its row keeps url and payload and carries warc_err.
 
     Sizing note (measured, tools/warc_scale_curve.py): archive rows are
     100s-of-KB blobs, so the session's pages-tuned scan split
@@ -317,8 +318,7 @@ def cdx_index(files: DataFrame, rec_type: str = "response") -> DataFrame:
                         ok = "seek recovered a different record"
                     else:
                         ok = "ok"
-                    rows.append((r.url, name, i, r.offset,
-                                 spec.payload_digest(r.payload), ok))
+                    rows.append((r.url, name, i, r.offset, r.digest, ok))
                 if err is not None:
                     rows.append((None, name, None, None, None, None))
             yield pd.DataFrame(rows, columns=[f.name for f in CDX_SCHEMA])

@@ -10,12 +10,15 @@ reference parser's exact regexes are unavailable; SURVEY.md §2.2 pins this
 deterministic, locale-free spec instead. If the reference materializes,
 regenerate goldens from it and bump PARSE_SPEC_VERSION.
 
-Pure Python + `re` only — importable on executors without Spark.
+Pure Python + the standard library (`re`, `hashlib`, `zlib`) — importable
+on executors without Spark.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
+import zlib
 from typing import NamedTuple
 
 PARSE_SPEC_VERSION = 1
@@ -308,6 +311,7 @@ class WarcRecord(NamedTuple):
     warc_date: str      # ISO-8601 Zulu string, parsed verbatim from the header
     payload: bytes
     offset: int         # byte offset of the record's version line in the file
+    digest: str         # payload_digest(payload), computed once by the walk
     digest_err: str | None = None  # set when WARC-Payload-Digest mismatches
 
 
@@ -315,7 +319,6 @@ def payload_digest(payload: bytes) -> str:
     """WARC-Payload-Digest value (md5 here: the hash the rest of the repo
     standardizes on for value fingerprints; real CC uses sha1 — swap the
     algorithm label and fn together if interop ever matters)."""
-    import hashlib
     return "md5:" + hashlib.md5(payload).hexdigest()
 
 
@@ -344,6 +347,120 @@ def render_warc_file(records: list[tuple[str, str, bytes]],
     return b"".join(buf)
 
 
+# The header block render_warc_record writes, as one bytes pattern: the
+# version line, then "Name: value" lines for WARC-Type, an optional
+# WARC-Target-URI, WARC-Date, Content-Length and an optional
+# WARC-Payload-Digest, in this order, then the blank line. On a match
+# the groups are exactly the fields _header_general returns, and
+# m.end() is its body start, because:
+# - the block is ASCII and every line has a colon, so none of the
+#   general grammar's errors can arise;
+# - a value is [!-~]+, so it holds no whitespace and the general
+#   grammar's strip() is the identity on it;
+# - a value holds no CR, so the match ends at the first CRLFCRLF after
+#   pos, which is where the general grammar ends the block;
+# - each name appears once, so the general grammar's last-wins on a
+#   duplicate name never applies;
+# - int() reads the digits of Content-Length alike in both; past 18
+#   digits the block takes the general grammar, which owns int()'s
+#   too-many-digits error.
+# Any other block, including another case, spacing or field order,
+# misses and takes the general grammar.
+_WARC_HDR_CANON = re.compile(
+    re.escape(WARC_VERSION) + rb"\r\n"
+    rb"WARC-Type: ([!-~]+)\r\n"
+    rb"(?:WARC-Target-URI: ([!-~]+)\r\n)?"
+    rb"WARC-Date: ([!-~]+)\r\n"
+    rb"Content-Length: ([0-9]{1,18})\r\n"
+    rb"(?:WARC-Payload-Digest: ([!-~]+)\r\n)?"
+    rb"\r\n")
+
+
+def _header_general(data: bytes, pos: int) -> tuple | str:
+    """The WARC header grammar at data[pos:] -> (warc_type, uri, date,
+    content_length, declared_digest, body_start), or a position-stamped
+    error string. Names match case-insensitively, values are stripped,
+    and the last of duplicate names wins."""
+    if not data.startswith(WARC_VERSION + b"\r\n", pos):
+        return f"bad version line at byte {pos}"
+    hdr_end = data.find(b"\r\n\r\n", pos)
+    if hdr_end < 0:
+        return f"unterminated header block at byte {pos}"
+    fields: dict[str, str] = {}
+    try:
+        hdr_lines = data[pos + len(WARC_VERSION) + 2: hdr_end].decode("ascii")
+    except UnicodeDecodeError:
+        return f"non-ascii header block at byte {pos}"
+    for line in hdr_lines.split("\r\n"):
+        name, sep, value = line.partition(":")
+        if not sep:
+            return f"malformed header line at byte {pos}: {line!r}"
+        fields[name.strip().lower()] = value.strip()
+    try:
+        length = int(fields["content-length"])
+    except (KeyError, ValueError):
+        return f"missing/bad Content-Length at byte {pos}"
+    return (fields.get("warc-type"), fields.get("warc-target-uri"),
+            fields.get("warc-date"), length,
+            fields.get("warc-payload-digest"), hdr_end + 4)
+
+
+def _header(data: bytes, pos: int) -> tuple | str:
+    """_header_general's result, read by one match when the block has
+    the canonical layout (_WARC_HDR_CANON)."""
+    m = _WARC_HDR_CANON.match(data, pos)
+    if m is None:
+        return _header_general(data, pos)
+    wtype, uri, date, length, declared = m.groups()
+    return (wtype.decode("ascii"), uri and uri.decode("ascii"),
+            date.decode("ascii"), int(length),
+            declared and declared.decode("ascii"), m.end())
+
+
+def _walk_records(data: bytes, pos: int, rec_type: str,
+                  max_records: int | None, out: list[WarcRecord],
+                  offset: int | None = None) -> str | None:
+    """Walk plain WARC records from data[pos:], appending the rec_type
+    ones to out until out holds max_records. Each record is stamped
+    with `offset` when given, else its own byte position. Returns the
+    first framing error, or None."""
+    n = len(data)
+    while pos < n:
+        h = _header(data, pos)
+        if type(h) is str:
+            return h
+        wtype, url, date, length, declared, body_start = h
+        body_end = body_start + length
+        if body_end + 2 > n or data[body_end:body_end + 2] != b"\r\n":
+            return f"truncated payload at byte {pos}"
+        # two CRLFs end a record, but tolerate exactly one at EOF
+        tail = data[body_end:body_end + 4]
+        step = 4 if tail == b"\r\n\r\n" else 2
+        if step == 2 and body_end + 2 != n:
+            return f"missing record trailer at byte {pos}"
+        if wtype == rec_type:
+            if url is None or date is None:
+                return f"{rec_type} record missing URI/Date at byte {pos}"
+            body = data[body_start:body_end]
+            # Per-record integrity: Content-Length framing catches
+            # truncation/desync, but a bit flip INSIDE a well-framed
+            # payload only the digest can catch. Absent digest = older
+            # writer, accepted; present-and-wrong = flagged on the
+            # record (the walk continues — framing is still sound).
+            digest = payload_digest(body)
+            derr = None
+            if declared is not None and declared != digest:
+                derr = (f"payload digest mismatch at byte {pos}: "
+                        f"declared {declared}")
+            out.append(WarcRecord(url, date, body,
+                                  pos if offset is None else offset,
+                                  digest, derr))
+            if max_records is not None and len(out) >= max_records:
+                return None
+        pos = body_end + step
+    return None
+
+
 def parse_warc_file(data: bytes,
                     rec_type: str = "response",
                     max_records: int | None = None,
@@ -369,58 +486,7 @@ def parse_warc_file(data: bytes,
     out: list[WarcRecord] = []
     if max_records is not None and max_records <= 0:
         return out, None
-    pos = start
-    n = len(data)
-    while pos < n:
-        if not data.startswith(WARC_VERSION + b"\r\n", pos):
-            return out, f"bad version line at byte {pos}"
-        hdr_end = data.find(b"\r\n\r\n", pos)
-        if hdr_end < 0:
-            return out, f"unterminated header block at byte {pos}"
-        fields: dict[str, str] = {}
-        try:
-            hdr_lines = data[pos + len(WARC_VERSION) + 2: hdr_end].decode("ascii")
-        except UnicodeDecodeError:
-            return out, f"non-ascii header block at byte {pos}"
-        for line in hdr_lines.split("\r\n"):
-            name, sep, value = line.partition(":")
-            if not sep:
-                return out, f"malformed header line at byte {pos}: {line!r}"
-            fields[name.strip().lower()] = value.strip()
-        try:
-            length = int(fields["content-length"])
-        except (KeyError, ValueError):
-            return out, f"missing/bad Content-Length at byte {pos}"
-        body_start = hdr_end + 4
-        body_end = body_start + length
-        if body_end + 2 > n or data[body_end:body_end + 2] != b"\r\n":
-            return out, f"truncated payload at byte {pos}"
-        # two CRLFs end a record, but tolerate exactly one at EOF
-        tail = data[body_end:body_end + 4]
-        step = 4 if tail == b"\r\n\r\n" else 2
-        if step == 2 and body_end + 2 != n:
-            return out, f"missing record trailer at byte {pos}"
-        if fields.get("warc-type") == rec_type:
-            url = fields.get("warc-target-uri")
-            date = fields.get("warc-date")
-            if url is None or date is None:
-                return out, f"{rec_type} record missing URI/Date at byte {pos}"
-            body = data[body_start:body_end]
-            # Per-record integrity: Content-Length framing catches
-            # truncation/desync, but a bit flip INSIDE a well-framed
-            # payload only the digest can catch. Absent digest = older
-            # writer, accepted; present-and-wrong = flagged on the
-            # record (the walk continues — framing is still sound).
-            derr = None
-            declared = fields.get("warc-payload-digest")
-            if declared is not None and declared != payload_digest(body):
-                derr = (f"payload digest mismatch at byte {pos}: "
-                        f"declared {declared}")
-            out.append(WarcRecord(url, date, body, pos, derr))
-            if max_records is not None and len(out) >= max_records:
-                return out, None
-        pos = body_end + step
-    return out, None
+    return out, _walk_records(data, start, rec_type, max_records, out)
 
 
 # .warc.gz framing — Common Crawl's actual on-disk layout: every record is
@@ -442,7 +508,6 @@ _GZ_CHUNK = 1 << 14
 
 def gzip_member(record: bytes) -> bytes:
     """One record -> one deterministic gzip member."""
-    import zlib
     c = zlib.compressobj(6, zlib.DEFLATED, 16 + zlib.MAX_WBITS)
     return c.compress(record) + c.flush()
 
@@ -471,7 +536,6 @@ def parse_warc_gz_file(data: bytes,
     contract matches parse_warc_file: the first corrupt/truncated
     member stops the walk with a position-stamped reason; everything
     before it is returned. max_records and start are parse_warc_file's."""
-    import zlib
     out: list[WarcRecord] = []
     if max_records is not None and max_records <= 0:
         return out, None
@@ -493,8 +557,8 @@ def parse_warc_gz_file(data: bytes,
         except zlib.error as e:
             return out, f"corrupt gzip member at byte {member_at}: {e}"
         pos -= len(d.unused_data)
-        recs, err = parse_warc_file(b"".join(parts), rec_type=rec_type)
-        out.extend(r._replace(offset=member_at) for r in recs)
+        member = parts[0] if len(parts) == 1 else b"".join(parts)
+        err = _walk_records(member, 0, rec_type, max_records, out, member_at)
         if err is not None:
             return out, f"in gzip member at byte {member_at}: {err}"
         if max_records is not None and len(out) >= max_records:

@@ -431,3 +431,107 @@ def test_warc_date_fast_path_equals_strptime(case):
     assert _parse_or_error(warc._parse_warc_date, s) == want
     if dt is not None and kind == "canonical":
         assert want == dt
+
+
+# --- WARC header fast path ---------------------------------------------------
+
+def _hdr_mutant(lines: list[bytes], kind: str, i: int, b: int) -> list[bytes]:
+    """One edit to a header block's lines (lines[0] is the version line);
+    i picks the field line and b a byte value where the edit needs one."""
+    f = 1 + i % (len(lines) - 1) if len(lines) > 1 else 0
+    name, sep, value = lines[f].partition(b": ")
+    out = list(lines)
+    if kind == "name_case":
+        out[f] = name.swapcase() + sep + value
+    elif kind in ("tab", "double_space", "trailing_space", "inner_space",
+                  "no_space"):
+        out[f] = {"tab": name + b":\t" + value,
+                  "double_space": name + b":  " + value,
+                  "trailing_space": lines[f] + b" ",
+                  "inner_space": lines[f][:-1] + b" " + lines[f][-1:],
+                  "no_space": name + b":" + value}[kind]
+    elif kind == "swap":
+        g = 1 + (i + 1) % (len(lines) - 1) if len(lines) > 1 else 0
+        out[f], out[g] = out[g], out[f]
+    elif kind == "duplicate":
+        out.insert(f + 1 + b % 2, name + sep + value + b"x" * (b % 3))
+    elif kind == "drop":
+        del out[f]
+    elif kind == "leading_zero":
+        zeros = b"0" * (1 + b % 20)
+        out = [ln.replace(b"Content-Length: ", b"Content-Length: " + zeros)
+               for ln in out]
+    elif kind == "non_ascii":
+        out[f] = lines[f] + bytes([128 + b % 128])
+    elif kind == "no_colon":
+        out[f] = name + b" " + value
+    elif kind == "stray_cr":
+        out[f] = lines[f] + b"\r\n\r" + bytes([b])
+    elif kind == "no_version":
+        del out[0]
+    elif kind == "byte":
+        j = b % (len(lines[f]) + 1)
+        out[f] = lines[f][:j] + bytes([b]) + lines[f][j + 1:]
+    return out
+
+
+_HDR_EDITS = ("name_case", "tab", "double_space", "trailing_space",
+              "inner_space", "no_space", "swap", "duplicate", "drop",
+              "leading_zero", "non_ascii", "no_colon", "stray_cr",
+              "no_version", "byte")
+
+
+@settings(max_examples=600, deadline=None)
+@given(st.sampled_from(["response", "warcinfo", "conversion"]),
+       st.one_of(st.none(), _warc_url), _warc_url, _warc_payload,
+       st.booleans(), st.binary(max_size=3),
+       st.lists(st.tuples(st.sampled_from(_HDR_EDITS),
+                          st.integers(0, 7), st.integers(0, 255)),
+                max_size=3))
+def test_warc_header_fast_path_equals_general_grammar(
+        wtype, url, date, payload, with_digest, lead, edits):
+    """spec._header (one canonical-layout match, else the general
+    grammar) returns exactly what spec._header_general returns — the
+    same fields, body start and error string — on canonical header
+    blocks with up to three edits: name case, tab or extra spaces
+    around values, field order, duplicate and missing fields, a
+    leading-zero Content-Length, non-ASCII bytes, a line with no colon,
+    a stray CR line, a missing version line and arbitrary byte flips. An unedited
+    block takes the fast path."""
+    rec = spec.render_warc_record(wtype, url, date, payload, with_digest)
+    block, _, body = rec.partition(b"\r\n\r\n")
+    lines = block.split(b"\r\n")
+    for kind, i, b in edits:
+        lines = _hdr_mutant(lines, kind, i, b)
+    data = lead + b"\r\n".join(lines) + b"\r\n\r\n" + body
+    pos = len(lead)
+    assert spec._header(data, pos) == spec._header_general(data, pos)
+    if not edits:
+        assert spec._WARC_HDR_CANON.match(data, pos) is not None
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.tuples(_warc_url, _warc_payload), min_size=1, max_size=4),
+       st.sampled_from(["response", "conversion"]), st.data())
+def test_warc_walk_equals_general_grammar_walk_on_flipped_bytes(
+        recs, rec_type, data):
+    """A full walk with the header fast path returns the same records,
+    digests, offsets and error as a walk that runs only the general
+    header grammar, on archives with byte flips anywhere (most of them
+    in header blocks, where the fast path decides)."""
+    date = "2024-05-06T07:08:09Z"
+    arc = bytearray(spec.render_warc_file([(u, date, p) for u, p in recs],
+                                          rec_type=rec_type))
+    heads = [m.start() for m in re.finditer(rb"WARC/1\.0\r\n", arc)]
+    for _ in range(data.draw(st.integers(1, 3))):
+        at = data.draw(st.one_of(
+            st.sampled_from(heads).flatmap(
+                lambda h: st.integers(h, min(h + 180, len(arc) - 1))),
+            st.integers(0, len(arc) - 1)))
+        arc[at] = data.draw(st.integers(0, 255))
+    arc = bytes(arc)
+    for rt in (rec_type, "warcinfo"):
+        got = spec.parse_warc_file(arc, rec_type=rt)
+        with mock.patch.object(spec, "_header", spec._header_general):
+            want = spec.parse_warc_file(arc, rec_type=rt)
+        assert got == want

@@ -12,10 +12,8 @@ import sys
 
 import duckdb
 
+from blog_parser_spark.sources.io import TABLES
 from tests.conftest import SF_DIR
-
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
 
 
 def test_driver_window_is_50_oracle_bearing_real_queries():

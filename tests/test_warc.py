@@ -1,7 +1,7 @@
 """WARC archive layer (sources/warc.py + spec WARC grammar): pure-Python
 framing edge cases, Spark pack->parse round trip, and loud quarantine of
-malformed archives (no silent byte loss — same contract as the JSONL/CSV
-landing readers)."""
+malformed archives (no silent byte loss: a malformed archive yields its
+good prefix plus one position-stamped quarantine row)."""
 
 from __future__ import annotations
 
@@ -289,6 +289,19 @@ def test_gz_round_trip_and_member_offsets():
         assert err2 is None and alone[0].payload == r.payload
 
 
+def test_gz_max_records_counts_records_inside_a_member():
+    """max_records caps the records returned even when one gzip member
+    holds several: the gz walk returns what the plain walk of the same
+    bytes returns."""
+    two = _one("u1", b"a") + _one("u2", b"b")
+    for data, walk in ((two, spec.parse_warc_file),
+                       (spec.gzip_member(two), spec.parse_warc_gz_file)):
+        for k in (1, 2, 3):
+            recs, err = walk(data, max_records=k)
+            assert err is None
+            assert [r.url for r in recs] == ["u1", "u2"][:k]
+
+
 def test_gz_render_is_deterministic_and_magic_detectable():
     recs = [("u1", _D, b"payload")]
     a, b = spec.render_warc_gz_file(recs), spec.render_warc_gz_file(recs)
@@ -483,10 +496,17 @@ def test_cdx_index_offsets_digests_and_quarantine(spark):
     plain = spec.render_warc_file([("u1", _D, b"aaa"), ("u2", _D, b"bb")])
     gz = spec.render_warc_gz_file([("u3", _D, b"cc")])
     cut = spec.render_warc_file([("u4", _D, b"dd")]) + b"garbage"
+    # one record declares a wrong digest, the next declares none
+    wrong = spec.render_warc_record("response", "u5", _D, b"ee").replace(
+        spec.payload_digest(b"ee").encode(),
+        spec.payload_digest(b"ff").encode())
+    dig = wrong + spec.render_warc_record("response", "u6", _D, b"gg",
+                                          with_digest=False)
     files = spark.createDataFrame(
         [Row(warc_file="p.warc", content=bytearray(plain)),
          Row(warc_file="g.warc.gz", content=bytearray(gz)),
-         Row(warc_file="cut.warc", content=bytearray(cut))],
+         Row(warc_file="cut.warc", content=bytearray(cut)),
+         Row(warc_file="dig.warc", content=bytearray(dig))],
         schema=warc.WARC_FILE_SCHEMA)
     rows = {(r.warc_file, r.url): r for r in warc.cdx_index(files).collect()}
 
@@ -507,7 +527,15 @@ def test_cdx_index_offsets_digests_and_quarantine(spark):
     assert rows[("cut.warc", "u4")].seek_ok == "ok"
     q = rows[("cut.warc", None)]
     assert q.rec_idx is None and q.seek_ok is None
-    assert len(rows) == 5
+    # the digest column is the payload's own digest, never the declared
+    # one, whether the declared one is wrong or absent
+    assert rows[("dig.warc", "u5")].digest == spec.payload_digest(b"ee")
+    assert rows[("dig.warc", "u6")].digest == spec.payload_digest(b"gg")
+    recs, err = spec.walk_warc(dig)
+    assert err is None
+    assert "digest mismatch" in recs[0].digest_err
+    assert recs[1].digest_err is None
+    assert len(rows) == 7
 
 
 def test_fetch_by_index_recovers_wanted_urls_only(spark):

@@ -15,9 +15,6 @@ import duckdb
 
 sys.path.insert(0, ".")
 
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
-
 
 def _canon(v):
     # FULL-precision float canon (repr = shortest round-trip string): a
@@ -45,6 +42,7 @@ def main() -> int:
 
     import __spark_entry__ as e
     from blog_parser_spark.session import get_spark
+    from blog_parser_spark.sources.io import TABLES
 
     qs, osql = e.queries(), e.oracle_sql()
     unknown = sorted(only - set(qs))
