@@ -17,7 +17,7 @@ bench-test:
 	python -m pytest webbench/tests -q
 
 scaling:
-	python tools/scaling_bench.py --docs 2000000 --n 2 --runs 3
+	python tools/scaling_bench.py flagship --docs 2000000 --runs 3
 
 clean:
 	rm -rf dist /tmp/bench_pages_* /tmp/scaling_pages_*

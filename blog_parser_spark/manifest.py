@@ -159,11 +159,9 @@ def run_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
     by_name = {f.name: f for f in stamped.schema.fields}
     read_schema = StructType([by_name[c] for c in mcols])
     written_new = (spark.read.schema(read_schema)
-                   .option("basePath", sink_dir).parquet(sink_dir)
-                   .filter(~F.col("bucket").isin(done_ids))
-                   if done_ids else
-                   spark.read.schema(read_schema)
                    .option("basePath", sink_dir).parquet(sink_dir))
+    if done_ids:
+        written_new = written_new.filter(~F.col("bucket").isin(done_ids))
     mrows = manifest_rows(written_new, run_id)
     mrows.coalesce(1).write.mode("append").parquet(manifest_dir)
 

@@ -86,13 +86,6 @@ def _dedup_max_by(df: DataFrame, order_cols: list) -> DataFrame:
             .filter(F.col("_rn") == 1).drop("_rn"))
 
 
-def dedup_latest(pages: DataFrame) -> DataFrame:
-    """Newest crawl per url over raw pages, md5(html)
-    tie-break. One shuffle on url (duplicates collapse map-side)."""
-    df = pages.withColumn("_md5", F.coalesce(F.md5("html"), F.lit("")))
-    return _dedup_max_by(df, [F.col("warc_ts"), F.col("_md5")]).drop("_md5")
-
-
 def parse_pages(pages: DataFrame, keep_text: bool = False,
                 with_html_md5: bool = False) -> DataFrame:
     """pages -> parsed (SURVEY.md §1.2). Filter/prune BEFORE calling this so
@@ -135,11 +128,12 @@ def parse_pages_metrics(pages: DataFrame, with_html_md5: bool = False) -> DataFr
 
 
 def dedup_latest_parsed(parsed: DataFrame) -> DataFrame:
-    """Dedup AFTER parse: shuffles parsed rows (small, or at least
-    html-free) instead of raw html — at corpus scale, re-parsing the few
-    duplicate crawls costs far less than shuffling every html payload.
-    Requires the html_md5 tie-break column (with_html_md5=True upstream);
-    winner is identical to dedup_latest (same (warc_ts, md5) max)."""
+    """Newest crawl per url, md5(html) tie-break, run AFTER parse: it
+    shuffles parsed rows (small, or at least html-free) instead of raw
+    html — at corpus scale, re-parsing the few duplicate crawls costs far
+    less than shuffling every html payload. Requires the html_md5 column
+    (with_html_md5=True upstream); the winner is the oracle's
+    (warc_ts, md5) max (oracle._dedup_key)."""
     return (_dedup_max_by(parsed, [F.col("warc_ts"), F.col("html_md5")])
             .drop("html_md5"))
 

@@ -15,8 +15,7 @@ from ..sources import io
 
 
 def routed_pages(spark: SparkSession, pages: DataFrame, *, dedup: bool = True,
-                 with_meta: bool = False, keep_text: bool = False,
-                 full: bool = False) -> DataFrame:
+                 with_meta: bool = False, full: bool = False) -> DataFrame:
     """pages -> routed (enriched rows + sink), the shared spine.
 
     full=False (default) runs the metrics-only parse — the right plan when
@@ -25,9 +24,8 @@ def routed_pages(spark: SparkSession, pages: DataFrame, *, dedup: bool = True,
     extracted_text for sink fan-out and byte-identity checks. Dedup runs
     AFTER parse in both: re-parsing rare duplicate crawls is cheaper than
     shuffling every html payload at corpus scale."""
-    if full or keep_text:
-        parsed = parse.parse_pages(pages, keep_text=keep_text,
-                                   with_html_md5=dedup)
+    if full:
+        parsed = parse.parse_pages(pages, with_html_md5=dedup)
     else:
         parsed = parse.parse_pages_metrics(pages, with_html_md5=dedup)
     if dedup:

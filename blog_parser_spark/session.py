@@ -82,8 +82,9 @@ def get_spark(app: str = "blog_parser_spark", master: str | None = None,
     """Build (or reuse) a SparkSession with the engine confs applied.
 
     master defaults to $SPARK_GRAFT_MASTER or local[$SPARK_GRAFT_CPUS|*].
-    shuffle_partitions defaults to 4x the local core count (AQE coalesces
-    down at runtime; on a real cluster set it ~2-4x total cores).
+    shuffle_partitions defaults to 4x the cores this process may run on
+    (its affinity mask, which local[*] also sizes by; AQE coalesces down
+    at runtime; on a real cluster set it ~2-4x total cores).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -92,8 +93,7 @@ def get_spark(app: str = "blog_parser_spark", master: str | None = None,
     for k, v in ENGINE_CONFS.items():
         b = b.config(k, v)
     if shuffle_partitions is None:
-        n = os.cpu_count() or 8
-        shuffle_partitions = 4 * n
+        shuffle_partitions = 4 * len(os.sched_getaffinity(0))
     b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in (extra or {}).items():
         b = b.config(k, v)

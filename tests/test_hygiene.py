@@ -162,36 +162,43 @@ def _caller_files() -> list[Path]:
     return _program_files() + bench
 
 
-def _loaded_names(node: ast.AST) -> set[str]:
-    out: set[str] = set()
+def _loaded_names(node: ast.AST) -> tuple[set[str], set[str]]:
+    """(bare names loaded, attribute names loaded or names imported)."""
+    bare: set[str] = set()
+    reach: set[str] = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
-            out.add(n.id)
+            bare.add(n.id)
         elif isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
-            out.add(n.attr)
+            reach.add(n.attr)
         elif isinstance(n, ast.ImportFrom):
-            out.update(a.name for a in n.names)
-    return out
+            reach.update(a.name for a in n.names)
+    return bare, reach
 
 
 def uncalled_defs(sources: dict[str, str], package: set[str]) -> list[str]:
     """`file:name` of every top-level undecorated def/class in the
     `package` files that no source (filename -> text) loads outside the
-    definition itself."""
+    definition itself. A bare name counts only in the defining file: in
+    another file it is a local (a parameter, say) unless it was imported,
+    and the import is counted."""
     defs: list[tuple[str, str]] = []
-    loaded: set[str] = set()
+    bare_in: dict[str, set[str]] = {}
+    reach: set[str] = set()
     for fname, src in sources.items():
+        bare = bare_in.setdefault(fname, set())
         for node in ast.parse(src, fname).body:
+            b, r = _loaded_names(node)
             if (fname in package
                     and isinstance(node, (ast.FunctionDef,
                                           ast.AsyncFunctionDef, ast.ClassDef))
                     and not node.decorator_list):
                 defs.append((fname, node.name))
-                loaded |= _loaded_names(node) - {node.name}
-            else:
-                loaded |= _loaded_names(node)
+                b, r = b - {node.name}, r - {node.name}
+            bare |= b
+            reach |= r
     return sorted(f"{fname}:{name}" for fname, name in defs
-                  if name not in loaded)
+                  if name not in bare_in[fname] | reach)
 
 
 def test_caller_scanner_flags_only_defs_nothing_loads():
@@ -204,15 +211,18 @@ def test_caller_scanner_flags_only_defs_nothing_loads():
            "class Dead: pass\n"
            "@register('q')\n"
            "def q_registered(): pass\n"
-           "def shadowed(): pass\n")
+           "def shadowed(): pass\n"
+           "def param(): pass\n"
+           "used()\n")
     caller = ("from pkg import imported\n"
               "import pkg\n"
-              "used()\n"
               "pkg.via_attr()\n"
-              "pkg.shadowed = None\n")
+              "pkg.shadowed = None\n"
+              "def run(param=True):\n"
+              "    return param\n")
     found = uncalled_defs({"pkg.py": pkg, "caller.py": caller}, {"pkg.py"})
-    assert found == ["pkg.py:Dead", "pkg.py:dead", "pkg.py:recursive",
-                     "pkg.py:shadowed"]
+    assert found == ["pkg.py:Dead", "pkg.py:dead", "pkg.py:param",
+                     "pkg.py:recursive", "pkg.py:shadowed"]
 
 
 def test_package_defs_have_a_program_caller():

@@ -39,7 +39,8 @@ def oracle_result():
 def test_byte_identity_per_url(spark, pages_df):
     """Flagship per-row invariant: extracted_text == ground-truth text,
     byte-identical, for every parse-ok row (BASELINE.json input_hint)."""
-    parsed = parse.parse_pages(parse.dedup_latest(pages_df), keep_text=True)
+    parsed = parse.dedup_latest_parsed(
+        parse.parse_pages(pages_df, keep_text=True, with_html_md5=True))
     bad = parsed.filter(
         F.col("parse_ok") & F.col("text").isNotNull()
         & (F.col("extracted_text") != F.col("text")))
@@ -115,12 +116,12 @@ def test_dedup_latest_keeps_newest_and_breaks_ties(spark):
         ("https://a/tie", datetime(2024, 1, 1), b"<p>B</p>", None, "en"),
     ]
     df = spark.createDataFrame(rows, io.PAGES_SCHEMA)
-    kept = {r["url"]: bytes(r["html"]) for r in parse.dedup_latest(df).collect()}
-    assert kept["https://a/dup"] == b"<p>new</p>"
+    kept = {r["url"]: r["extracted_text"] for r in parse.dedup_latest_parsed(
+        parse.parse_pages(df, with_html_md5=True)).collect()}
+    assert kept["https://a/dup"] == "new"
     # tie-break = md5 desc; must match the oracle's pick exactly
-    routed_o, _ = [], None
     import hashlib
-    exp = max([b"<p>A</p>", b"<p>B</p>"], key=lambda h: hashlib.md5(h).hexdigest())
+    exp = max("AB", key=lambda t: hashlib.md5(f"<p>{t}</p>".encode()).hexdigest())
     assert kept["https://a/tie"] == exp
 
 

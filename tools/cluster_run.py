@@ -40,8 +40,9 @@ def main() -> None:
     best = runs[0]
     print(json.dumps({
         "total_cores": total_cores,
-        "executors": spark.sparkContext.defaultParallelism // max(
-            1, int(spark.conf.get("spark.executor.cores", "1"))),
+        # defaultParallelism is at least 2, so it miscounts 1-core legs
+        "executors": total_cores // int(
+            spark.conf.get("spark.executor.cores", "1")),
         "docs": n_docs,
         "runs_sec": [round(r, 2) for r in runs],
         "best_sec": round(best, 3),

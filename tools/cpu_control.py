@@ -3,9 +3,10 @@ P pinned worker processes each parse a DISTINCT stream of rendered docs
 with the same spec.parse_document the engine runs, giving the box's raw
 parse capacity at P active cores. The ratio control(4N)/4*control(N) is the
 pure-CPU/memory ceiling against which the engine's measured Spark scaling
-is judged (BENCH/BASELINE.md).
+is judged (BENCH/BASELINE.md). P runs over 1, N and 4N (N = a quarter
+of this box's cores), each worker pinned to its own CPU of the mask.
 
-    python tools/cpu_control.py [--procs 2 8 32] [--docs-per-proc 60000]
+    python tools/cpu_control.py [--docs-per-proc 60000]
 """
 
 from __future__ import annotations
@@ -17,7 +18,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import box  # noqa: E402
 
 
 def _worker(args) -> float:
@@ -44,19 +47,18 @@ def _worker(args) -> float:
 def measure(procs: int, docs_per_proc: int) -> float:
     with mp.get_context("spawn").Pool(procs) as pool:
         walls = pool.map(_worker,
-                         [(i, docs_per_proc, i % os.cpu_count())
-                          for i in range(procs)])
+                         [(i, docs_per_proc, cpu) for i, cpu
+                          in enumerate(box.cpu_ids()[:procs])])
     total_docs = procs * docs_per_proc
     return total_docs / max(walls)
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--procs", type=int, nargs="+", default=[2, 8, 32])
     ap.add_argument("--docs-per-proc", type=int, default=60000)
     args = ap.parse_args()
     out = {}
-    for p in args.procs:
+    for p in box.widths():
         qps = measure(p, args.docs_per_proc)
         out[p] = round(qps, 1)
         print(json.dumps({"procs": p, "docs_per_sec": out[p],

@@ -6,9 +6,10 @@ per 10x docs to all 32 threads sharing ONE virtio disk for shuffle
 spill. This harness measures that disk's actual capacity with zero
 Spark, the same way tools/cpu_control.py measures the CPU ceiling:
 
-- sequential fsync'd WRITE bandwidth at 1 / 8 / 32 pinned writer
-  processes (distinct files, 4 MiB chunks, fsync included in the timed
-  window so the page cache cannot hide the device);
+- sequential fsync'd WRITE bandwidth at 1, N and 4N pinned writer
+  processes, N a quarter of this box's cores (distinct files, 4 MiB
+  chunks, fsync included in the timed window so the page cache cannot
+  hide the device);
 - sequential READ bandwidth at the same widths after a global
   drop_caches (so reads hit the device, not the 125 GiB page cache);
 - a MIXED leg (half writers, half readers, concurrent) — the closest
@@ -27,15 +28,14 @@ import json
 import multiprocessing as mp
 import os
 import shutil
+import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import box  # noqa: E402
+
 CHUNK = 4 * 1024 * 1024
-
-
-def _cpu_ticks() -> tuple[int, int]:
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    return int(parts[1]), int(parts[8])
 
 
 def _drop_caches() -> bool:
@@ -85,21 +85,20 @@ def _run_pool(worker, tasks) -> float:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--gb-per-proc", type=float, default=1.0)
-    ap.add_argument("--procs", type=int, nargs="+", default=[1, 8, 32])
     ap.add_argument("--dir", default="/tmp/diskctl")
     args = ap.parse_args()
 
     os.makedirs(args.dir, exist_ok=True)
     n_bytes = int(args.gb_per_proc * (1 << 30))
-    ncpu = os.cpu_count() or 32
+    cpus = box.cpu_ids()
     out: dict[str, object] = {"leg": "disk_control",
                               "gb_per_proc": args.gb_per_proc,
                               "chunk_mb": CHUNK // (1 << 20)}
-    user0, steal0 = _cpu_ticks()
+    user0, steal0 = box.steal_ticks()
 
-    for p in args.procs:
+    for p in box.widths():
         paths = [os.path.join(args.dir, f"w{p}_{i}.bin") for i in range(p)]
-        tasks = [(i, paths[i], n_bytes, i % ncpu) for i in range(p)]
+        tasks = [(i, paths[i], n_bytes, cpus[i]) for i in range(p)]
         out[f"write_{p}p_mbps"] = round(_run_pool(_write_worker, tasks), 1)
         dropped = _drop_caches()
         out[f"read_{p}p_mbps"] = round(_run_pool(_read_worker, tasks), 1)
@@ -109,15 +108,15 @@ def main() -> None:
 
     # mixed leg at the widest width: half write fresh files while half
     # read just-written-then-dropped ones — concurrent spill + fetch
-    p = max(args.procs)
+    p = max(box.widths())
     half = p // 2
     rpaths = [os.path.join(args.dir, f"m_r{i}.bin") for i in range(half)]
-    rtasks = [(i, rpaths[i], n_bytes, i % ncpu) for i in range(half)]
+    rtasks = [(i, rpaths[i], n_bytes, cpus[i]) for i in range(half)]
     for t in rtasks:
         _write_worker(t)
     dropped = _drop_caches()
     wpaths = [os.path.join(args.dir, f"m_w{i}.bin") for i in range(half)]
-    wtasks = [(i, wpaths[i], n_bytes, (half + i) % ncpu)
+    wtasks = [(i, wpaths[i], n_bytes, cpus[half + i])
               for i in range(half)]
     with mp.get_context("spawn").Pool(p) as pool:
         t0 = time.time()
@@ -130,7 +129,7 @@ def main() -> None:
     out["mixed_worker_walls_sec"] = [round(w, 2) for w in sorted(walls)]
     shutil.rmtree(args.dir, ignore_errors=True)
 
-    user1, steal1 = _cpu_ticks()
+    user1, steal1 = box.steal_ticks()
     out["vm_user_ticks"] = user1 - user0
     out["vm_steal_ticks"] = steal1 - steal0
     print(json.dumps(out), flush=True)

@@ -15,7 +15,8 @@ Protocol: build an N-doc corpus packed as .warc.gz archives of
                     per archive is gunzipped) — isolates the
                     member-seek saving from the archive-pruning saving.
 
-Run:  taskset -c 0-31 python tools/fetch_bench.py [--docs 1000000]
+Run:  python tools/fetch_bench.py [--docs 1000000]
+(local[cores] of the affinity mask; pin it with taskset to run smaller).
 Emits one JSON line; paste into BENCH/BASELINE.md.
 """
 
@@ -30,13 +31,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools import box  # noqa: E402
+
 WORK = "/tmp/fetch_bench"
-
-
-def _cpu_ticks() -> tuple[int, int]:
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    return int(parts[1]), int(parts[8])
 
 
 def main() -> None:
@@ -44,7 +41,6 @@ def main() -> None:
     ap.add_argument("--docs", type=int, default=1_000_000)
     ap.add_argument("--docs-per-file", type=int, default=1000)
     ap.add_argument("--wanted", type=int, default=1000)
-    ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--runs", type=int, default=3)
     args = ap.parse_args()
@@ -57,10 +53,9 @@ def main() -> None:
 
     shutil.rmtree(WORK, ignore_errors=True)
     os.makedirs(WORK)
-    spark = get_spark("fetch-bench", master=f"local[{args.cpus}]",
-                      shuffle_partitions=2 * args.cpus)
+    spark = get_spark("fetch-bench", master=f"local[{box.cores()}]")
     spark.sparkContext.setLogLevel("ERROR")
-    user0, steal0 = _cpu_ticks()
+    user0, steal0 = box.steal_ticks()
 
     n_base = io.read_table(spark, args.sf_dir, "documents").count()
     pages = io.synth_pages(spark, args.sf_dir,
@@ -106,7 +101,7 @@ def main() -> None:
     sca_sec, sca_rows = timed(
         lambda: warc_src.fetch_by_index(archives, index, scattered).count())
 
-    user1, steal1 = _cpu_ticks()
+    user1, steal1 = box.steal_ticks()
     touched = max(1, args.wanted // args.docs_per_file)
     print(json.dumps({
         "leg": "fetch_bench", "docs": n_docs, "files": n_files,

@@ -1,12 +1,12 @@
-"""One leg-runner pass: a fresh JVM at local[cores] (shuffle partitions
-4 x cores) builds one named leg set over pre-materialized corpora, then
+"""One leg-runner pass: a fresh JVM at local[cores], cores being this
+process's affinity mask (shuffle partitions: the session default, 4 x
+cores), builds one named leg set over pre-materialized corpora, then
 runs each leg once as warmup and n_runs more times to a noop sink.
-Spawned taskset-pinned by tools/scaling_bench.py (`flagship`) and
-tools/weblog_scale_bench.py (`weblog`); prints one JSON line:
+Spawned taskset-pinned by tools/scaling_bench.py; prints one JSON line:
 {"cores": N, <input row counts>, <leg>: {"runs_sec", "best_sec",
 "median_sec", "warmup_sec"}, ...}.
 
-Usage: python tools/leg_run.py <leg_set> <cores> <n_runs> <path> ...
+Usage: taskset -c <cpus> python tools/leg_run.py <leg_set> <n_runs> <path> ...
 
     flagship  <pages_parquet>
     weblog    <docs_parquet> <events_parquet>
@@ -20,10 +20,13 @@ partial set is an argument error, not a silent skip of the WARC legs.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import box  # noqa: E402
 
 
 def flagship_legs(spark, pages_path: str):
@@ -122,13 +125,13 @@ LEG_SETS = {"flagship": flagship_legs, "weblog": weblog_legs}
 
 
 def main() -> None:
-    leg_set, cores, n_runs = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
+    leg_set, n_runs = sys.argv[1], int(sys.argv[2])
     from blog_parser_spark.session import get_spark
 
-    spark = get_spark(f"{leg_set}-{cores}", master=f"local[{cores}]",
-                      shuffle_partitions=4 * cores)
+    cores = box.cores()
+    spark = get_spark(f"{leg_set}-{cores}", master=f"local[{cores}]")
     spark.sparkContext.setLogLevel("ERROR")
-    counts, legs = LEG_SETS[leg_set](spark, *sys.argv[4:])
+    counts, legs = LEG_SETS[leg_set](spark, *sys.argv[3:])
 
     out: dict[str, object] = {"cores": cores, **counts}
     for name, df in legs.items():

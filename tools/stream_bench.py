@@ -19,7 +19,8 @@ micro-batches, pinned protocol (run under taskset), fresh checkpoints:
 Per leg: rows/s end-to-end, micro-batch count, and sec/batch — the
 per-batch overhead a production trigger interval must amortize.
 
-Run:  taskset -c 0-31 python tools/stream_bench.py [--cpus 32]
+Run:  python tools/stream_bench.py [--batches 8]
+(local[cores] of the affinity mask; pin it with taskset to run smaller).
 Emits one JSON line; paste into BENCH/BASELINE.md.
 """
 
@@ -34,13 +35,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools import box  # noqa: E402
+
 WORK = "/tmp/stream_bench"
-
-
-def _cpu_ticks() -> tuple[int, int]:
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    return int(parts[1]), int(parts[8])
 
 
 def _await_done(q) -> int:
@@ -50,7 +47,6 @@ def _await_done(q) -> int:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--grok-lines", type=int, default=4_000_000)
     ap.add_argument("--cdc-rows", type=int, default=1_000_000)
@@ -68,12 +64,11 @@ def main() -> None:
 
     shutil.rmtree(WORK, ignore_errors=True)
     os.makedirs(WORK)
-    spark = get_spark("stream-bench", master=f"local[{args.cpus}]",
-                      shuffle_partitions=4 * args.cpus)
+    spark = get_spark("stream-bench", master=f"local[{box.cores()}]")
     spark.sparkContext.setLogLevel("ERROR")
-    out: dict[str, object] = {"leg": "stream_bench", "cpus": args.cpus,
+    out: dict[str, object] = {"leg": "stream_bench", "cpus": box.cores(),
                               "batches": args.batches}
-    user0, steal0 = _cpu_ticks()
+    user0, steal0 = box.steal_ticks()
 
     def land(df, name: str, n_files: int) -> str:
         """Materialize a source dir with exactly n_files part files so
@@ -262,7 +257,7 @@ def main() -> None:
                                  "rows_per_sec": round(n_warc_docs / wall, 1),
                                  "sec_per_batch": round(wall / max(b, 1), 3)}
 
-    user1, steal1 = _cpu_ticks()
+    user1, steal1 = box.steal_ticks()
     out["vm_user_ticks"] = user1 - user0
     out["vm_steal_ticks"] = steal1 - steal0
     print(json.dumps(out), flush=True)

@@ -25,11 +25,12 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import box  # noqa: E402
 
 MEMBERS = 20
 BASE_DOCS = 5000
@@ -39,9 +40,6 @@ def build_neardup_corpus(spark, sf_dir: str, n_docs: int) -> str:
     from pyspark.sql import functions as F
     from blog_parser_spark.sources import io
 
-    path = f"/tmp/scale_neardup_{n_docs}.parquet"
-    if os.path.exists(path):
-        return path
     groups = n_docs // MEMBERS
     base = (io.read_table(spark, sf_dir, "documents")
             .select((F.col("doc_id") % BASE_DOCS).alias("base_id"),
@@ -62,20 +60,15 @@ def build_neardup_corpus(spark, sf_dir: str, n_docs: int) -> str:
               .select((F.col("g") * MEMBERS + F.col("j")).alias("doc_id"),
                       F.concat("gt", F.lit(" m"),
                                F.col("j").cast("string")).alias("text")))
-    tmp = path + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    corpus.repartition(max(32, n_docs // 100_000)).write.parquet(tmp)
-    os.rename(tmp, path)
-    return path
+    return box.cached_parquet(
+        f"/tmp/scale_neardup_{n_docs}.parquet",
+        lambda: corpus.repartition(max(32, n_docs // 100_000)))
 
 
 def build_curation_corpus(spark, sf_dir: str, n_docs: int) -> str:
     from pyspark.sql import functions as F
     from blog_parser_spark.sources import io
 
-    path = f"/tmp/scale_curation_{n_docs}.parquet"
-    if os.path.exists(path):
-        return path
     rep = n_docs // BASE_DOCS
     base = (io.read_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < BASE_DOCS)
@@ -91,11 +84,9 @@ def build_curation_corpus(spark, sf_dir: str, n_docs: int) -> str:
                                   F.concat(F.lit("v"),
                                            F.col("i").cast("string")))
                       .alias("text")))
-    tmp = path + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    corpus.repartition(max(32, n_docs // 100_000)).write.parquet(tmp)
-    os.rename(tmp, path)
-    return path
+    return box.cached_parquet(
+        f"/tmp/scale_curation_{n_docs}.parquet",
+        lambda: corpus.repartition(max(32, n_docs // 100_000)))
 
 
 def stage_bytes(spark) -> dict[str, int]:
@@ -126,8 +117,6 @@ def main() -> None:
     ap.add_argument("--legs", nargs="+", type=int,
                     default=[100_000, 1_000_000, 10_000_000])
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
 
     # shuffle to DISK for every leg: the 10M near-dup leg's live shuffle
@@ -143,8 +132,7 @@ def main() -> None:
     # zstd shuffle compression: the verify join shuffles shingle arrays
     # (highly compressible word text); zstd roughly halves the on-disk
     # footprint vs lz4 at these sizes, and every leg pays the same cost.
-    spark = get_spark("training-scale", master=f"local[{args.cpus}]",
-                      shuffle_partitions=4 * args.cpus,
+    spark = get_spark("training-scale", master=f"local[{box.cores()}]",
                       extra={"spark.io.compression.codec": "zstd"})
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
@@ -155,13 +143,8 @@ def main() -> None:
         df.write.mode("overwrite").format("noop").save()
         return time.time() - t0
 
-    def cpu_ticks() -> tuple[int, int]:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        return int(parts[1]), int(parts[8])  # (user, steal)
-
     for n in args.legs:
-        user0, steal0 = cpu_ticks()
+        user0, steal0 = box.steal_ticks()
         nd = spark.read.parquet(build_neardup_corpus(spark, args.sf_dir, n))
         cu = spark.read.parquet(build_curation_corpus(spark, args.sf_dir, n))
         r: dict[str, float | int] = {"docs": n}
@@ -196,7 +179,7 @@ def main() -> None:
                                         "doc_id", 500_000)
         r["curation_sec"] = round(noop(kept), 2)
 
-        user1, steal1 = cpu_ticks()
+        user1, steal1 = box.steal_ticks()
         r["vm_user_ticks"] = user1 - user0
         r["vm_steal_ticks"] = steal1 - steal0
         print(json.dumps(r), flush=True)

@@ -12,7 +12,8 @@ Protocol: materialize each corpus as a parquet archive table ONCE
 (excluded from timing), then one warmup + best-of-N timed full parses
 (count() over read_warc). Pinned taskset, steal bookends recorded.
 
-Run:  taskset -c 0-31 python tools/warc_scale_curve.py [--runs 3]
+Run:  python tools/warc_scale_curve.py [--runs 3]
+(local[cores] of the affinity mask; pin it with taskset to run smaller).
 Emits one JSON line per corpus plus a summary line; paste into
 BENCH/BASELINE.md.
 """
@@ -28,13 +29,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools import box  # noqa: E402
+
 WORK = "/tmp/warc_scale_curve"
-
-
-def _cpu_ticks() -> tuple[int, int]:
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    return int(parts[1]), int(parts[8])
 
 
 def _du(path: str) -> int:
@@ -47,7 +44,6 @@ def _du(path: str) -> int:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--sizes", type=int, nargs="+",
                     default=[1_000_000, 10_000_000])
@@ -70,9 +66,9 @@ def main() -> None:
     # N executor threads, so heap must be N x split x 3 + headroom —
     # the 8g pages-workload default OOMs at 32 cores with 128 MB splits.
     # (On a real cluster this is per-executor memory x cores-per-executor.)
-    heap_gb = max(8, args.cpus * args.max_partition_mb * 3 // 1024 + 8)
-    spark = get_spark("warc-curve", master=f"local[{args.cpus}]",
-                      shuffle_partitions=2 * args.cpus,
+    cores = box.cores()
+    heap_gb = max(8, cores * args.max_partition_mb * 3 // 1024 + 8)
+    spark = get_spark("warc-curve", master=f"local[{cores}]",
                       extra={"spark.driver.memory": f"{heap_gb}g",
                              "spark.sql.files.maxPartitionBytes":
                                  str(args.max_partition_mb * 1024 * 1024)})
@@ -96,7 +92,7 @@ def main() -> None:
         n_files = archives.count()
         corpus_bytes = _du(arch_dir)
 
-        user0, steal0 = _cpu_ticks()
+        user0, steal0 = box.steal_ticks()
         times, rows = [], None
         for i in range(args.runs + 1):  # first run = warmup
             t0 = time.time()
@@ -104,7 +100,7 @@ def main() -> None:
             dt = time.time() - t0
             if i:
                 times.append(round(dt, 2))
-        user1, steal1 = _cpu_ticks()
+        user1, steal1 = box.steal_ticks()
         best = min(times)
         rec = {"leg": "warc_gz_read", "docs": rows, "files": n_files,
                "max_partition_mb": args.max_partition_mb,
