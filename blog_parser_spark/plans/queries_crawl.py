@@ -26,7 +26,7 @@ _URL_SQL = "'https://' || source || '.example.com/post/' || CAST(doc_id AS VARCH
 # ---------------------------------------------------------------------------
 # scan_warc_pages — the full WARC loop: synthesize pages, pack them into
 # warcinfo-led WARC/1.0 archives (sorted-partition mapInPandas assembler,
-# see warc._pack_records), parse the raw archive bytes back (mapInPandas,
+# see warc._pack_records), parse the raw archive bytes back (mapInArrow,
 # Content-Length framing), and compare
 # each recovered record byte-for-byte against its source page. The
 # oracle expects exactly one byte_identical=true row per document: a

@@ -24,10 +24,17 @@ one source of truth for both directions):
 
 Scale shape: both directions are ONE Arrow-batched Python stage and zero
 shuffles beyond pack's repartition on file id. Payload bytes cross Arrow
-once. Quarantine contract: a malformed file never throws — it yields
-every record before its first framing error plus one quarantine row
-(url NULL, the position-stamped reason in warc_err), so corrupt
-archives are counted, never silently dropped.
+once. The three reading stages run on mapInArrow, one archive at a time:
+each archive's bytes are copied out of the input batch alone, and its
+rows go back as one Arrow batch (_record_batch) before the next archive
+is walked, so a Python worker holds one archive's records, never a
+whole split's in a pandas frame. The packers stay on mapInPandas: they
+already emit per finished archive.
+
+Quarantine contract: a malformed file never throws — it yields every
+record before its first framing error plus one quarantine row (url
+NULL, the position-stamped reason in warc_err), so corrupt archives are
+counted, never silently dropped.
 """
 
 from __future__ import annotations
@@ -37,7 +44,9 @@ from collections.abc import Iterator
 from datetime import datetime
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType, BinaryType, LongType, StringType, StructField, StructType,
     TimestampType,
@@ -59,6 +68,7 @@ WARC_RECORD_SCHEMA = StructType([
     StructField("rec_offset", LongType(), True),
     StructField("warc_err", StringType(), True),   # set only on quarantine rows
 ])
+WARC_RECORD_ARROW = to_arrow_schema(WARC_RECORD_SCHEMA)
 
 _DOC_ID_RE = r"/post/(\d+)$"
 
@@ -81,19 +91,39 @@ _WARC_DATE_CANON = re.compile(r"\d{4}-\d\d-\d\dT\d\d:\d\d:\d\dZ", re.ASCII)
 
 
 def _parse_warc_date(s: str) -> datetime:
-    # Session timezone is UTC everywhere (conftest/session.py), so the
-    # naive datetime round-trips the fixture's TIMESTAMP_NTZ exactly.
-    # The canonical layout takes fromisoformat, an order of magnitude
-    # cheaper than strptime. Everything else, and any value that
-    # fromisoformat rejects, goes to strptime, so accepted values and
-    # error messages are strptime's: it also takes lower-case t/z,
-    # unpadded fields and non-ASCII digits.
+    # Naive UTC: _record_batch's timestamp[us, UTC] column reads it as
+    # that instant whatever the session zone. The canonical layout takes
+    # fromisoformat, an order of magnitude cheaper than strptime.
+    # Everything else, and any value that fromisoformat rejects, goes to
+    # strptime, so accepted values and error messages are strptime's: it
+    # also takes lower-case t/z, unpadded fields and non-ASCII digits.
     if _WARC_DATE_CANON.fullmatch(s):
         try:
             return datetime.fromisoformat(s[:19])
         except ValueError:
             pass
     return datetime.strptime(s, spec.WARC_DATE_FMT)
+
+
+def _archives(batches: Iterator[pa.RecordBatch], *cols: str) -> Iterator[tuple]:
+    """The named columns of each input row as Python values, one archive
+    at a time: only the current archive's bytes are copied out of the
+    Arrow batch, never the whole scan split."""
+    for b in batches:
+        arrays = [b.column(c) for c in cols]
+        for i in range(b.num_rows):
+            yield tuple(a[i].as_py() for a in arrays)
+
+
+def _record_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
+    """Row tuples -> one Arrow batch of `schema` (Spark's own mapping of
+    the stage's StructType). TimestampType maps to timestamp[us, UTC],
+    which reads a naive datetime as UTC: WARC-Date is Zulu, so warc_ts
+    is the same instant whatever the session time zone."""
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema)
 
 
 def _pack_records(prefix: str, rec_type: str, gz: bool = False):
@@ -252,31 +282,36 @@ def read_warc(files: DataFrame, rec_type: str = "response") -> DataFrame:
     drop of bytes. A payload whose declared digest mismatches is not a
     framing error: its row keeps url and payload and carries warc_err.
 
-    Sizing note (measured, tools/warc_scale_curve.py): archive rows are
-    100s-of-KB blobs, so the session's pages-tuned scan split
+    Sizing note: a task's Python worker holds its input Arrow batch
+    (the split's archive bytes, up to maxRecordsPerBatch archives) plus
+    ONE archive's bytes and decoded records; each archive's rows leave
+    as their own Arrow batch before the next is walked. So worker
+    memory grows with split size plus the largest archive, not with
+    the records of the whole split. Records are still materialized one
+    whole archive at a time: for a ~1 GB Common Crawl archive one worker
+    holds its bytes, its decoded records and their Arrow batch at once.
+    Archive rows are 100s-of-KB blobs, so the pages-tuned scan split
     (maxPartitionBytes=128m) yields FEW heavyweight tasks — at 10M docs
-    the job collapsed to one 32-task wave (GC-bound, 1.66x per-doc
-    bend) and needs heap = concurrent tasks x split x ~3 in-flight
-    copies. Right-size so each core gets >=3-4 waves (32m splits
-    flattened the curve to 0.93); at cluster scale the knob is the
-    .warc.gz object size itself — gzip members don't split mid-record,
-    so ~100 MB-1 GB objects x one task each balance automatically.
+    one 32-task wave, GC-bound, a 1.66x per-doc bend
+    (tools/warc_scale_curve.py). Right-size so each core gets >=3-4
+    waves (32m splits flattened the curve to 0.93); at cluster scale
+    the knob is the .warc.gz object size itself — gzip members don't
+    split mid-record, so ~100 MB-1 GB objects x one task each balance
+    automatically.
     """
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for name, content in zip(pdf["warc_file"], pdf["content"]):
-                recs, err = spec.walk_warc(bytes(content), rec_type=rec_type)
-                # digest_err rides on the record row itself (url/payload
-                # present): framing is sound, the payload is suspect —
-                # the caller decides whether to quarantine or refetch
-                rows.extend((r.url, _parse_warc_date(r.warc_date), r.payload,
-                             name, r.offset, r.digest_err) for r in recs)
-                if err is not None:
-                    rows.append((None, None, None, name, None, err))
-            yield pd.DataFrame(rows, columns=[f.name for f in WARC_RECORD_SCHEMA])
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for name, content in _archives(batches, "warc_file", "content"):
+            recs, err = spec.walk_warc(content, rec_type=rec_type)
+            # digest_err rides on the record row itself (url/payload
+            # present): framing is sound, the payload is suspect — the
+            # caller decides whether to quarantine or refetch
+            rows = [(r.url, _parse_warc_date(r.warc_date), r.payload, name,
+                     r.offset, r.digest_err) for r in recs]
+            if err is not None:
+                rows.append((None, None, None, name, None, err))
+            yield _record_batch(rows, WARC_RECORD_ARROW)
 
-    return files.mapInPandas(parse, WARC_RECORD_SCHEMA)
+    return files.mapInArrow(parse, WARC_RECORD_SCHEMA)
 
 
 CDX_SCHEMA = StructType([
@@ -287,6 +322,7 @@ CDX_SCHEMA = StructType([
     StructField("digest", StringType(), True),     # payload digest (md5:…)
     StructField("seek_ok", StringType(), True),    # 'ok' | reason | NULL(err)
 ])
+CDX_ARROW = to_arrow_schema(CDX_SCHEMA)
 
 
 def cdx_index(files: DataFrame, rec_type: str = "response") -> DataFrame:
@@ -302,28 +338,28 @@ def cdx_index(files: DataFrame, rec_type: str = "response") -> DataFrame:
     the same 100 TB shape as read_warc. A malformed archive yields its
     good prefix plus a position-stamped quarantine row (url NULL,
     seek_ok NULL), the read_warc contract."""
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def walk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for name, raw in _archives(batches, "warc_file", "content"):
+            recs, err = spec.walk_warc(raw, rec_type=rec_type)
             rows = []
-            for name, content in zip(pdf["warc_file"], pdf["content"]):
-                raw = bytes(content)
-                recs, err = spec.walk_warc(raw, rec_type=rec_type)
-                for i, r in enumerate(recs):
-                    sub, serr = spec.walk_warc(raw, rec_type=rec_type,
-                                               start=r.offset, max_records=1)
-                    if not sub:
-                        ok = f"seek recovered no record ({serr})"
-                    elif (sub[0].url != r.url
-                          or sub[0].payload != r.payload):
-                        ok = "seek recovered a different record"
-                    else:
-                        ok = "ok"
-                    rows.append((r.url, name, i, r.offset, r.digest, ok))
-                if err is not None:
-                    rows.append((None, name, None, None, None, None))
-            yield pd.DataFrame(rows, columns=[f.name for f in CDX_SCHEMA])
+            for i, r in enumerate(recs):
+                # the verify compares url and payload bytes only, so the
+                # seek skips the payload digest the full walk just took
+                sub, serr = spec.walk_warc(raw, rec_type=rec_type,
+                                           start=r.offset, max_records=1,
+                                           _digest=False)
+                if not sub:
+                    ok = f"seek recovered no record ({serr})"
+                elif sub[0].url != r.url or sub[0].payload != r.payload:
+                    ok = "seek recovered a different record"
+                else:
+                    ok = "ok"
+                rows.append((r.url, name, i, r.offset, r.digest, ok))
+            if err is not None:
+                rows.append((None, name, None, None, None, None))
+            yield _record_batch(rows, CDX_ARROW)
 
-    return files.mapInPandas(walk, CDX_SCHEMA)
+    return files.mapInArrow(walk, CDX_SCHEMA)
 
 
 def fetch_by_index(files: DataFrame, index: DataFrame, wanted: DataFrame,
@@ -357,9 +393,8 @@ def fetch_by_index(files: DataFrame, index: DataFrame, wanted: DataFrame,
     silent miss, so fetched-row count == hit count always holds.
     """
     from .. import limits
-    hits = (index.join(wanted.select("url").distinct(), "url")
-            .where(F.col("rec_offset").isNotNull())
-            .select("warc_file", "rec_offset").distinct())
+    hits = (index.join(wanted.select("url"), "url", "left_semi")
+            .where(F.col("rec_offset").isNotNull()))
     per_file = (hits.groupBy("warc_file")
                 .agg(F.sort_array(F.collect_set("rec_offset"))
                      .alias("_offsets")))
@@ -376,33 +411,29 @@ def fetch_by_index(files: DataFrame, index: DataFrame, wanted: DataFrame,
               .where(F.col("warc_file").isin([r.warc_file for r in plan]))
               .join(F.broadcast(per_file_local), "warc_file"))
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for name, raw, offsets in _archives(batches, "warc_file", "content",
+                                            "_offsets"):
             rows = []
-            for name, content, offsets in zip(
-                    pdf["warc_file"], pdf["content"], pdf["_offsets"]):
-                raw = bytes(content)
-                for off in offsets:
-                    off = int(off)
-                    if not 0 <= off < len(raw):
-                        rows.append((None, None, None, name, off,
-                                     f"index offset {off} outside archive "
-                                     f"(len {len(raw)})"))
-                        continue
-                    recs, err = spec.walk_warc(raw, rec_type=rec_type,
-                                               start=off, max_records=1)
-                    if recs:
-                        r = recs[0]
-                        rows.append((r.url, _parse_warc_date(r.warc_date),
-                                     r.payload, name, off, r.digest_err))
-                    else:
-                        rows.append((None, None, None, name, off,
-                                     f"no {rec_type} record at offset "
-                                     f"{off}: {err}"))
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in WARC_RECORD_SCHEMA])
+            for off in offsets:
+                if not 0 <= off < len(raw):
+                    rows.append((None, None, None, name, off,
+                                 f"index offset {off} outside archive "
+                                 f"(len {len(raw)})"))
+                    continue
+                recs, err = spec.walk_warc(raw, rec_type=rec_type,
+                                           start=off, max_records=1)
+                if recs:
+                    r = recs[0]
+                    rows.append((r.url, _parse_warc_date(r.warc_date),
+                                 r.payload, name, off, r.digest_err))
+                else:
+                    rows.append((None, None, None, name, off,
+                                 f"no {rec_type} record at offset "
+                                 f"{off}: {err}"))
+            yield _record_batch(rows, WARC_RECORD_ARROW)
 
-    return tagged.mapInPandas(fetch, WARC_RECORD_SCHEMA)
+    return tagged.mapInArrow(fetch, WARC_RECORD_SCHEMA)
 
 
 def index_delta(prior: DataFrame, current: DataFrame) -> DataFrame:

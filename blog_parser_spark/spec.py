@@ -311,7 +311,7 @@ class WarcRecord(NamedTuple):
     warc_date: str      # ISO-8601 Zulu string, parsed verbatim from the header
     payload: bytes
     offset: int         # byte offset of the record's version line in the file
-    digest: str         # payload_digest(payload), computed once by the walk
+    digest: str | None  # payload_digest(payload); None if the walk skipped it
     digest_err: str | None = None  # set when WARC-Payload-Digest mismatches
 
 
@@ -419,11 +419,12 @@ def _header(data: bytes, pos: int) -> tuple | str:
 
 def _walk_records(data: bytes, pos: int, rec_type: str,
                   max_records: int | None, out: list[WarcRecord],
-                  offset: int | None = None) -> str | None:
+                  offset: int | None = None, digest: bool = True) -> str | None:
     """Walk plain WARC records from data[pos:], appending the rec_type
     ones to out until out holds max_records. Each record is stamped
-    with `offset` when given, else its own byte position. Returns the
-    first framing error, or None."""
+    with `offset` when given, else its own byte position. digest=False
+    leaves each record's digest and digest_err None. Returns the first
+    framing error, or None."""
     n = len(data)
     while pos < n:
         h = _header(data, pos)
@@ -447,14 +448,15 @@ def _walk_records(data: bytes, pos: int, rec_type: str,
             # payload only the digest can catch. Absent digest = older
             # writer, accepted; present-and-wrong = flagged on the
             # record (the walk continues — framing is still sound).
-            digest = payload_digest(body)
-            derr = None
-            if declared is not None and declared != digest:
-                derr = (f"payload digest mismatch at byte {pos}: "
-                        f"declared {declared}")
+            dig = derr = None
+            if digest:
+                dig = payload_digest(body)
+                if declared is not None and declared != dig:
+                    derr = (f"payload digest mismatch at byte {pos}: "
+                            f"declared {declared}")
             out.append(WarcRecord(url, date, body,
                                   pos if offset is None else offset,
-                                  digest, derr))
+                                  dig, derr))
             if max_records is not None and len(out) >= max_records:
                 return None
         pos = body_end + step
@@ -464,7 +466,8 @@ def _walk_records(data: bytes, pos: int, rec_type: str,
 def parse_warc_file(data: bytes,
                     rec_type: str = "response",
                     max_records: int | None = None,
-                    start: int = 0) -> tuple[list[WarcRecord], str | None]:
+                    start: int = 0, *,
+                    _digest: bool = True) -> tuple[list[WarcRecord], str | None]:
     """Binary-safe WARC walk. Returns (rec_type records in file order, err).
 
     rec_type="response" reads WARC page archives; "conversion" reads WET
@@ -481,12 +484,15 @@ def parse_warc_file(data: bytes,
     validated). start begins the walk at that byte of data, so offsets
     and error positions stay absolute. Together they are the seek
     primitive: start=<CDX offset>, max_records=1 costs O(record) and
-    copies nothing of the archive suffix.
+    copies nothing of the archive suffix. _digest=False skips the
+    payload digest (digest and digest_err None), for an internal re-walk
+    that already holds it.
     """
     out: list[WarcRecord] = []
     if max_records is not None and max_records <= 0:
         return out, None
-    return out, _walk_records(data, start, rec_type, max_records, out)
+    return out, _walk_records(data, start, rec_type, max_records, out,
+                              digest=_digest)
 
 
 # .warc.gz framing — Common Crawl's actual on-disk layout: every record is
@@ -528,14 +534,16 @@ def render_warc_gz_file(records: list[tuple[str, str, bytes]],
 def parse_warc_gz_file(data: bytes,
                        rec_type: str = "response",
                        max_records: int | None = None,
-                       start: int = 0) -> tuple[list[WarcRecord], str | None]:
+                       start: int = 0, *,
+                       _digest: bool = True) -> tuple[list[WarcRecord], str | None]:
     """Binary-safe .warc.gz walk: gunzip one concatenated member at a
     time, fed in _GZ_CHUNK slices, and run the plain-WARC grammar on
     each member's bytes. A record's offset is its gzip member's
     COMPRESSED byte offset — the number a CC-style index stores. Error
     contract matches parse_warc_file: the first corrupt/truncated
     member stops the walk with a position-stamped reason; everything
-    before it is returned. max_records and start are parse_warc_file's."""
+    before it is returned. max_records, start and _digest are
+    parse_warc_file's."""
     out: list[WarcRecord] = []
     if max_records is not None and max_records <= 0:
         return out, None
@@ -558,7 +566,8 @@ def parse_warc_gz_file(data: bytes,
             return out, f"corrupt gzip member at byte {member_at}: {e}"
         pos -= len(d.unused_data)
         member = parts[0] if len(parts) == 1 else b"".join(parts)
-        err = _walk_records(member, 0, rec_type, max_records, out, member_at)
+        err = _walk_records(member, 0, rec_type, max_records, out, member_at,
+                            _digest)
         if err is not None:
             return out, f"in gzip member at byte {member_at}: {err}"
         if max_records is not None and len(out) >= max_records:
@@ -567,13 +576,14 @@ def parse_warc_gz_file(data: bytes,
 
 
 def walk_warc(data: bytes, rec_type: str = "response", start: int = 0,
-              max_records: int | None = None) -> tuple[list[WarcRecord], str | None]:
+              max_records: int | None = None, *,
+              _digest: bool = True) -> tuple[list[WarcRecord], str | None]:
     """Walk a WARC archive of either layout from byte `start`: the
     file's own first two bytes (never its name) pick parse_warc_gz_file
     or parse_warc_file, so plain and .warc.gz archives mix freely."""
     walker = parse_warc_gz_file if data[:2] == GZIP_MAGIC else parse_warc_file
     return walker(data, rec_type=rec_type, max_records=max_records,
-                  start=start)
+                  start=start, _digest=_digest)
 
 
 def render_html(text: str, doc_id: int | None = None,

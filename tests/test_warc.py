@@ -5,7 +5,7 @@ good prefix plus one position-stamped quarantine row)."""
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timezone
 
 from pyspark.sql import Row, functions as F
 
@@ -151,7 +151,7 @@ def test_wet_export_round_trip_spark(spark):
 
 def test_warc_ingest_stream_matches_batch_and_resumes(spark, tmp_path):
     """WARC archives ARE a stream (crawlers land them continuously):
-    read_warc is a stateless mapInPandas transform, so it runs unchanged
+    read_warc is a stateless mapInArrow transform, so it runs unchanged
     inside a streaming query — availableNow ingest must equal the batch
     parse, and a restart must process ONLY newly-landed archives from
     the checkpoint."""
@@ -639,6 +639,119 @@ def test_fetch_plan_broadcasts_a_local_table_scan(spark):
     fetched, plan = fetch("https://a.com/none")
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
     assert fetched.collect() == []
+
+
+def _mixed_corpus(spark):
+    """Plain and gz archives, a truncated archive, one payload whose
+    declared digest is wrong, and a warcinfo-only archive (no rows)."""
+    plain = spec.render_warc_file([("https://m.com/1", _D, b"aaa"),
+                                   ("https://m.com/2", "2024-01-01T00:00:00Z",
+                                    b"bb")])
+    gz = spec.render_warc_gz_file([("https://m.com/3", _D, b"c"),
+                                   ("https://m.com/4", _D, b"")])
+    cut = spec.render_warc_file([("https://m.com/5", _D, b"dd"),
+                                 ("https://m.com/6", _D, b"ee")])[:-30]
+    wrong = spec.render_warc_file([("https://m.com/7", _D, b"ff")]).replace(
+        spec.payload_digest(b"ff").encode(), spec.payload_digest(b"gg").encode())
+    raw = {"p.warc": plain, "g.warc.gz": gz, "cut.warc": cut,
+           "dig.warc": wrong, "info.warc": spec.render_warc_file([])}
+    files = spark.createDataFrame(
+        [Row(warc_file=k, content=bytearray(v)) for k, v in raw.items()],
+        schema=warc.WARC_FILE_SCHEMA)
+    return raw, files
+
+
+def _epoch(warc_date: str) -> int:
+    return int(datetime.strptime(warc_date, spec.WARC_DATE_FMT)
+               .replace(tzinfo=timezone.utc).timestamp())
+
+
+def _rows(df) -> list[tuple]:
+    """Rows with warc_ts as epoch seconds and bytes as bytes, sorted."""
+    if "warc_ts" in df.columns:
+        df = df.withColumn("warc_ts", F.col("warc_ts").cast("long"))
+    rows = [tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+            for r in df.collect()]
+    return sorted(rows, key=repr)
+
+
+def test_warc_stages_plan_map_in_arrow(spark):
+    """read_warc, cdx_index and fetch_by_index each run one MapInArrow
+    stage and no MapInPandas one."""
+    from blog_parser_spark.plans.explain import plan_formatted, plan_nodes
+
+    _, files = _mixed_corpus(spark)
+    index = warc.cdx_index(files)
+    wanted = spark.createDataFrame([Row(url="https://m.com/1")])
+    for df in (warc.read_warc(files), index,
+               warc.fetch_by_index(files, index, wanted)):
+        nodes = plan_nodes(plan_formatted(df))
+        assert nodes.count("MapInArrow") == 1, nodes
+        assert "MapInPandas" not in nodes, nodes
+
+
+def test_warc_stages_equal_spec_walk_on_mixed_corpus(spark):
+    """Every stage's rows equal the spec walk of each archive, row for
+    row and warc_ts included; quarantine rows follow the stage contract."""
+    raw, files = _mixed_corpus(spark)
+    read, cdx, fetch = [], [], []
+    for name, data in raw.items():
+        recs, err = spec.walk_warc(data)
+        for i, r in enumerate(recs):
+            row = (r.url, _epoch(r.warc_date), r.payload, name, r.offset,
+                   r.digest_err)
+            read.append(row)
+            fetch.append(row)
+            cdx.append((r.url, name, i, r.offset, r.digest, "ok"))
+        if err is not None:
+            read.append((None, None, None, name, None, err))
+            cdx.append((None, name, None, None, None, None))
+    assert {r[3] for r in read} == set(raw) - {"info.warc"}
+    assert any(r[5] and "digest mismatch" in r[5] for r in read)
+
+    index = warc.cdx_index(files)
+    wanted = index.where(F.col("url").isNotNull()).select("url")
+    assert _rows(warc.read_warc(files)) == sorted(read, key=repr)
+    assert _rows(index) == sorted(cdx, key=repr)
+    assert _rows(warc.fetch_by_index(files, index, wanted)) == \
+        sorted(fetch, key=repr)
+
+
+def test_warc_ts_is_utc_instant_under_non_utc_session(spark):
+    """WARC-Date is Zulu: 2024-01-01T00:00:00Z reads as epoch 1704067200
+    whatever the session time zone."""
+    raw = spec.render_warc_gz_file(
+        [("https://z.com/1", "2024-01-01T00:00:00Z", b"z")])
+    files = spark.createDataFrame(
+        [Row(warc_file="z.warc.gz", content=bytearray(raw))],
+        schema=warc.WARC_FILE_SCHEMA)
+    wanted = spark.createDataFrame([Row(url="https://z.com/1")])
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        index = warc.cdx_index(files)
+        for df in (warc.read_warc(files),
+                   warc.fetch_by_index(files, index, wanted)):
+            got = [r[0] for r in
+                   df.select(F.col("warc_ts").cast("long")).collect()]
+            assert got == [1704067200]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_walk_without_digest_keeps_records():
+    """_digest=False walks the same records with digest and digest_err
+    left None, for both layouts."""
+    wrong = _one(payload=b"xy").replace(spec.payload_digest(b"xy").encode(),
+                                        spec.payload_digest(b"yx").encode())
+    for data in (wrong + _one(), spec.gzip_member(wrong) + spec.gzip_member(_one())):
+        full, err = spec.walk_warc(data)
+        bare, berr = spec.walk_warc(data, _digest=False)
+        assert err is None and berr is None
+        assert full[0].digest_err is not None
+        assert [(r.url, r.warc_date, r.payload, r.offset) for r in bare] == \
+            [(r.url, r.warc_date, r.payload, r.offset) for r in full]
+        assert all(r.digest is None and r.digest_err is None for r in bare)
 
 
 def test_index_delta_statuses_and_quarantine_exclusion(spark):

@@ -50,7 +50,7 @@ def main() -> int:
         print(f"unknown queries: {', '.join(unknown)} ({len(qs)} registered)")
         return 1
 
-    spark = get_spark("check-queries", master="local[8]", shuffle_partitions=16)
+    spark = get_spark("check-queries")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -27,8 +27,9 @@ def props(plan: str) -> list[str]:
     out = [f"- physical nodes: {', '.join(sorted(set(nodes)))}"]
     out.append(f"- shuffle exchanges: {nodes.count('Exchange')}; "
                f"broadcast exchanges: {nodes.count('BroadcastExchange')}")
-    out.append(f"- Python stages (ArrowEvalPython/MapInPandas/FlatMapGroupsInPandas): "
-               f"{sum(nodes.count(n) for n in ('ArrowEvalPython', 'MapInPandas', 'FlatMapGroupsInPandas'))}")
+    py = ("ArrowEvalPython", "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas")
+    out.append(f"- Python stages ({'/'.join(py)}): "
+               f"{sum(nodes.count(n) for n in py)}")
     pf = re.findall(r"PushedFilters: (\[.*?\])", plan)
     if pf:
         out.append(f"- pushed filters: {pf[0]}")
