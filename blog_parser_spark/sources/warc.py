@@ -26,10 +26,18 @@ Scale shape: both directions are ONE Arrow-batched Python stage and zero
 shuffles beyond pack's repartition on file id. Payload bytes cross Arrow
 once. The three reading stages run on mapInArrow, one archive at a time:
 each archive's bytes are copied out of the input batch alone, and its
-rows go back as one Arrow batch (_record_batch) before the next archive
-is walked, so a Python worker holds one archive's records, never a
-whole split's in a pandas frame. The packers stay on mapInPandas: they
-already emit per finished archive.
+rows go back as Arrow batches of at most BATCH_BYTES each (_batches)
+before the next archive is walked, so a Python worker holds one
+archive's records, never a whole split's in a pandas frame. The packers
+stay on mapInPandas: they already emit per finished archive.
+
+Worker footprint: a reading stage's worker never imports pandas (~40 MB
+of a ~100 MB worker). This module imports it only inside the packers,
+and _column builds each output column from Arrow buffers, because in
+pyarrow 16 `pa.array` on a Python sequence imports pandas. A pandas UDF
+that runs later in the same session still loads pandas into the reused
+workers, so the saving holds for WARC-only jobs: CDX indexing,
+fetch/refresh and WARC-to-table landing.
 
 Quarantine contract: a malformed file never throws — it yields every
 record before its first framing error plus one quarantine row (url
@@ -40,10 +48,13 @@ counted, never silently dropped.
 from __future__ import annotations
 
 import re
+from array import array
 from collections.abc import Iterator
 from datetime import datetime
+from itertools import accumulate, repeat
+from operator import attrgetter, is_not
 
-import pandas as pd
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -53,7 +64,6 @@ from pyspark.sql.types import (
 )
 
 from .. import spec
-from . import io
 
 WARC_FILE_SCHEMA = StructType([
     StructField("warc_file", StringType(), False),
@@ -77,7 +87,9 @@ def _fmt_warc_date(ts) -> str:
     # Pack contract: WARC_DATE_FMT is second-precision, so a sub-second
     # timestamp cannot round-trip — rejecting it here is a loud contract
     # (like NULL payloads), not a silent truncation that surfaces later
-    # as a byte_identical/ts-equality failure.
+    # as a byte_identical/ts-equality failure. pandas is imported here,
+    # not at module level: only the packers' mapInPandas workers call this.
+    import pandas as pd
     t = pd.Timestamp(ts)
     if t.microsecond or t.nanosecond:
         raise ValueError(f"warc_ts {ts!r} has sub-second precision; the "
@@ -115,6 +127,72 @@ def _archives(batches: Iterator[pa.RecordBatch], *cols: str) -> Iterator[tuple]:
             yield tuple(a[i].as_py() for a in arrays)
 
 
+# Bytes of a batch's widest column that one output batch may hold. Arrow
+# binary and string columns carry int32 offsets, so one batch stops at
+# 2 GiB; a ~1 GB .warc.gz archive holds several times that once gunzipped.
+BATCH_BYTES = 64 << 20
+
+_STRING, _BINARY, _INT64 = pa.string(), pa.binary(), pa.int64()
+_TIMESTAMP = pa.timestamp("us", tz="UTC")
+_EPOCH = datetime(1970, 1, 1)
+# What a null slot holds under the validity bitmap, per column type.
+_NULL_FILL = {_STRING: "", _BINARY: b"", _INT64: 0, _TIMESTAMP: _EPOCH}
+_CLOCK = tuple(map(attrgetter, ("hour", "minute", "second", "microsecond")))
+
+
+def _epoch_us(values) -> np.ndarray:
+    """Naive-UTC datetimes -> int64 microseconds since the epoch, one
+    C-level pass per field instead of datetime arithmetic per row."""
+    n = len(values)
+
+    def field(get):
+        return np.fromiter(map(get, values), np.int64, n)
+
+    hour, minute, second, micro = (field(get) for get in _CLOCK)
+    days = field(datetime.toordinal) - _EPOCH.toordinal()
+    return ((((days * 24 + hour) * 60 + minute) * 60 + second) * 1_000_000
+            + micro)
+
+
+def _column(values, t: pa.DataType) -> pa.Array:
+    """One column of Python values -> an Arrow array of type `t`, equal
+    to `pa.array(values, type=t)` but built from buffers: in pyarrow 16
+    `pa.array` on a Python sequence imports pandas, which no WARC
+    reading stage otherwise loads into its worker. Binary and string
+    data is joined once behind int32 offsets (ASCII text is joined as
+    text and encoded once), int64 goes through array('q'), and
+    timestamp[us, UTC] through _epoch_us. Any other type raises."""
+    if t not in _NULL_FILL:
+        raise TypeError(f"no Arrow column builder for {t}")
+    n, nulls = len(values), values.count(None)
+    if nulls == n:
+        return pa.nulls(n, t)
+    valid = None
+    if nulls:
+        flags = bytes(map(is_not, values, repeat(None)))
+        valid = pa.py_buffer(np.packbits(np.frombuffer(flags, np.uint8),
+                                         bitorder="little"))
+        fill = _NULL_FILL[t]
+        values = [fill if v is None else v for v in values]
+    if t == _INT64:
+        buffers = [valid, pa.py_buffer(array("q", values))]
+    elif t == _TIMESTAMP:
+        buffers = [valid, pa.py_buffer(_epoch_us(values))]
+    else:
+        if t == _BINARY:
+            data = b"".join(values)
+        else:
+            data = "".join(values)
+            if data.isascii():
+                data = data.encode("ascii")
+            else:
+                values = [v.encode() for v in values]
+                data = b"".join(values)
+        offsets = array("i", accumulate(map(len, values), initial=0))
+        buffers = [valid, pa.py_buffer(offsets), pa.py_buffer(data)]
+    return pa.Array.from_buffers(t, n, buffers, null_count=nulls)
+
+
 def _record_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
     """Row tuples -> one Arrow batch of `schema` (Spark's own mapping of
     the stage's StructType). TimestampType maps to timestamp[us, UTC],
@@ -122,8 +200,26 @@ def _record_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
     is the same instant whatever the session time zone."""
     cols = list(zip(*rows)) or [()] * len(schema)
     return pa.RecordBatch.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-        schema=schema)
+        [_column(c, f.type) for c, f in zip(cols, schema)], schema=schema)
+
+
+def _batches(rows: list[tuple], schema: pa.Schema, col: int,
+             budget: int) -> Iterator[pa.RecordBatch]:
+    """One archive's rows -> Arrow batches holding at most `budget` bytes
+    of column `col` each (a row larger than that goes alone). An archive
+    within budget, every benchmark archive among them, leaves as one
+    batch, and an archive with no rows as one empty batch. Stages pass
+    BATCH_BYTES from their own body, so the value at planning time is
+    the one every worker uses."""
+    batch, size = [], 0
+    for row in rows:
+        n = len(row[col] or b"")
+        if batch and size + n > budget:
+            yield _record_batch(batch, schema)
+            batch, size = [], 0
+        batch.append(row)
+        size += n
+    yield _record_batch(batch, schema)
 
 
 def _pack_records(prefix: str, rec_type: str, gz: bool = False):
@@ -136,6 +232,8 @@ def _pack_records(prefix: str, rec_type: str, gz: bool = False):
     formulation paid ~6 ms of per-group overhead, which at 25-doc
     archives dominated the whole job (measured 3.8k docs/s packing; this
     shape measures ~10x that at the same archive size)."""
+    import pandas as pd
+
     def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cur_fid = None
         cur: list[tuple[str, str, bytes]] = []
@@ -285,11 +383,16 @@ def read_warc(files: DataFrame, rec_type: str = "response") -> DataFrame:
     Sizing note: a task's Python worker holds its input Arrow batch
     (the split's archive bytes, up to maxRecordsPerBatch archives) plus
     ONE archive's bytes and decoded records; each archive's rows leave
-    as their own Arrow batch before the next is walked. So worker
-    memory grows with split size plus the largest archive, not with
-    the records of the whole split. Records are still materialized one
-    whole archive at a time: for a ~1 GB Common Crawl archive one worker
-    holds its bytes, its decoded records and their Arrow batch at once.
+    as Arrow batches of at most BATCH_BYTES of payload (64 MiB; the
+    benchmark's ~2.4 MB archives leave as one batch each) before the
+    next archive is walked. So worker memory grows with split size plus
+    the largest archive, not with the records of the whole split, and
+    no batch nears the 2 GiB int32-offset limit of a binary column. The
+    worker loads no pandas: on the 4-core benchmark each reading worker
+    peaks near 100 MB (136-143 MB with pandas). Records are still
+    materialized one whole archive at a time (ROADMAP item 3): for a
+    ~1 GB Common Crawl archive one worker holds its bytes and its
+    decoded records at once, plus one budget's worth of Arrow batch.
     Archive rows are 100s-of-KB blobs, so the pages-tuned scan split
     (maxPartitionBytes=128m) yields FEW heavyweight tasks — at 10M docs
     one 32-task wave, GC-bound, a 1.66x per-doc bend
@@ -309,7 +412,7 @@ def read_warc(files: DataFrame, rec_type: str = "response") -> DataFrame:
                      r.offset, r.digest_err) for r in recs]
             if err is not None:
                 rows.append((None, None, None, name, None, err))
-            yield _record_batch(rows, WARC_RECORD_ARROW)
+            yield from _batches(rows, WARC_RECORD_ARROW, 2, BATCH_BYTES)
 
     return files.mapInArrow(parse, WARC_RECORD_SCHEMA)
 
@@ -357,7 +460,7 @@ def cdx_index(files: DataFrame, rec_type: str = "response") -> DataFrame:
                 rows.append((r.url, name, i, r.offset, r.digest, ok))
             if err is not None:
                 rows.append((None, name, None, None, None, None))
-            yield _record_batch(rows, CDX_ARROW)
+            yield from _batches(rows, CDX_ARROW, 0, BATCH_BYTES)
 
     return files.mapInArrow(walk, CDX_SCHEMA)
 
@@ -393,6 +496,7 @@ def fetch_by_index(files: DataFrame, index: DataFrame, wanted: DataFrame,
     silent miss, so fetched-row count == hit count always holds.
     """
     from .. import limits
+    from . import io
     hits = (index.join(wanted.select("url"), "url", "left_semi")
             .where(F.col("rec_offset").isNotNull()))
     per_file = (hits.groupBy("warc_file")
@@ -431,7 +535,7 @@ def fetch_by_index(files: DataFrame, index: DataFrame, wanted: DataFrame,
                     rows.append((None, None, None, name, off,
                                  f"no {rec_type} record at offset "
                                  f"{off}: {err}"))
-            yield _record_batch(rows, WARC_RECORD_ARROW)
+            yield from _batches(rows, WARC_RECORD_ARROW, 2, BATCH_BYTES)
 
     return tagged.mapInArrow(fetch, WARC_RECORD_SCHEMA)
 

@@ -38,8 +38,11 @@ H1_RE = re.compile(
     r"<h1[^>]*+>([^<]*+(?:<(?!/h1>)[^<]*+)*+)</h1>", re.S | re.I)
 TITLE_RE = re.compile(
     r"<title[^>]*+>([^<]*+(?:<(?!/title>)[^<]*+)*+)</title>", re.S | re.I)
+# H2 and H3 are one alternation with one body group per level and no
+# backreference; findall yields (h2 body, h3 body) with the other "".
 H23_RE = re.compile(
-    r"<(h[23])[^>]*+>([^<]*+(?:<(?!/\1>)[^<]*+)*+)</\1>", re.S | re.I)
+    r"<h(?:2[^>]*+>([^<]*+(?:<(?!/h2>)[^<]*+)*+)</h2>"
+    r"|3[^>]*+>([^<]*+(?:<(?!/h3>)[^<]*+)*+)</h3>)", re.S | re.I)
 P_RE = re.compile(
     r"<p[^>]*+>([^<]*+(?:<(?!/p>)[^<]*+)*+)</p>", re.S | re.I)
 TAG_STRIP_RE = re.compile(r"<[^>]+>")
@@ -144,7 +147,7 @@ def parse_document(html: bytes | None) -> Parsed:
 
     m = H1_RE.search(doc) or TITLE_RE.search(doc)
     title = normalize_fragment(m.group(1)) if m else ""
-    headings = [normalize_fragment(g[1]) for g in H23_RE.findall(doc)]
+    headings = [normalize_fragment(h2 or h3) for h2, h3 in H23_RE.findall(doc)]
     headings = [h for h in headings if h]
     paragraphs = [normalize_fragment(g) for g in P_RE.findall(doc)]
     paragraphs = [p for p in paragraphs if p]

@@ -19,6 +19,11 @@ outside the definition itself. Reference code and fixtures that tests
 compare against, and the few kept entry points no program calls yet, are
 exempt by name in `CALLER_EXEMPT`, each with its reason; an exemption
 that is no longer needed fails the scan too.
+
+A tool that writes a `/proc/sys` setting (dropping the page cache, say)
+changes the whole host, not its own processes. The fourth scan fails on
+any call in the package or the tools that opens a `/proc/sys` path for
+writing.
 """
 
 from __future__ import annotations
@@ -237,3 +242,67 @@ def test_package_defs_have_a_program_caller():
     stale = sorted(CALLER_EXEMPT.keys() - found)
     assert stale == [], ("exempt, but gone or now called by a program file "
                          "(drop the exemption):\n" + "\n".join(stale))
+
+
+_WRITE_MODE = re.compile(r"[wax+]")
+
+
+def proc_sys_writes(source: str, filename: str = "<src>") -> list[int]:
+    """Line of every call that opens a literal `/proc/sys` path for
+    writing: `open`/`Path.open` with a w, a, x or + mode (or a mode that
+    is not a literal), `os.open` with flags other than `O_RDONLY`, and
+    `write_text`/`write_bytes` on `Path(<path>)`."""
+    lines = []
+    for n in ast.walk(ast.parse(source, filename)):
+        if not isinstance(n, ast.Call):
+            continue
+        f = n.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        args = n.args
+        if (name in ("write_text", "write_bytes", "open")
+                and isinstance(f, ast.Attribute)
+                and isinstance(f.value, ast.Call)):
+            args = f.value.args + n.args    # Path(<path>).<call>(...)
+        if not (args and isinstance(args[0], ast.Constant)
+                and str(args[0].value).startswith("/proc/sys")):
+            continue
+        mode = args[1] if len(args) > 1 else next(
+            (k.value for k in n.keywords if k.arg in ("mode", "flags")), None)
+        if name in ("write_text", "write_bytes"):
+            writes = True
+        elif name != "open":
+            writes = False
+        elif isinstance(f, ast.Attribute) and getattr(f.value, "id", "") == "os":
+            writes = not (isinstance(mode, ast.Attribute)
+                          and mode.attr == "O_RDONLY")
+        else:
+            writes = mode is not None and not (
+                isinstance(mode, ast.Constant)
+                and not _WRITE_MODE.search(str(mode.value)))
+        if writes:
+            lines.append(n.lineno)
+    return sorted(lines)
+
+
+def test_proc_sys_scanner_flags_writes_only():
+    src = ("import os\n"
+           "from pathlib import Path\n"
+           "open('/proc/sys/vm/drop_caches', 'w')\n"
+           "open('/proc/sys/vm/swappiness')\n"
+           "open('/proc/stat', 'w')\n"
+           "open('/proc/sys/kernel/x', mode='a')\n"
+           "os.open('/proc/sys/vm/x', os.O_WRONLY)\n"
+           "os.open('/proc/sys/vm/x', os.O_RDONLY)\n"
+           "Path('/proc/sys/vm/x').write_text('1')\n"
+           "Path('/proc/sys/vm/x').read_text()\n"
+           "open('/proc/sys/vm/x', 'rb')\n"
+           "open('/proc/sys/vm/x', m)\n")
+    assert proc_sys_writes(src) == [3, 6, 7, 9, 12]
+
+
+def test_program_files_write_no_proc_sys_setting():
+    found = [f"{p.relative_to(ROOT)}:{ln}"
+             for entry in ("blog_parser_spark", "tools")
+             for p in sorted((ROOT / entry).rglob("*.py"))
+             for ln in proc_sys_writes(p.read_text(), str(p))]
+    assert found == [], "/proc/sys opened for writing:\n" + "\n".join(found)

@@ -113,7 +113,9 @@ def test_parse_document_total_on_arbitrary_bytes(data):
 LAZY_TAG_RES = {
     "H1_RE": re.compile(r"<h1[^>]*>(.*?)</h1>", re.S | re.I),
     "TITLE_RE": re.compile(r"<title[^>]*>(.*?)</title>", re.S | re.I),
-    "H23_RE": re.compile(r"<(h[23])[^>]*>(.*?)</\1>", re.S | re.I),
+    # one lazy body group per level, the group shape of spec.H23_RE
+    "H23_RE": re.compile(r"<h(?:2[^>]*>(.*?)</h2>|3[^>]*>(.*?)</h3>)",
+                         re.S | re.I),
     "P_RE": re.compile(r"<p[^>]*>(.*?)</p>", re.S | re.I),
 }
 
@@ -145,6 +147,38 @@ def test_tag_scans_equal_lazy_forms(doc):
         assert (m is None) == (ref is None), name
         if m is not None:
             assert (m.span(), m.groups()) == (ref.span(), ref.groups()), name
+
+
+# h2 and h3 openers and closers interleaved, in both cases and with
+# attributes, plus closers of the other level, `<h23>` (an h2 opener to
+# both forms) and h4, which neither form opens
+_HEADING_ATOMS = [
+    "<h2>", "<H2>", "<h2 id=a>", "</h2>", "</H2>", "</h2 >",
+    "<h3>", "<H3>", "<H3 class='b'>", "</h3>", "</H3>", "</h3 >",
+    "<h23>", "<h4>", "</h4>", "<p>", "</p>", "<", "/", "x", "Y", " ",
+]
+
+
+# the h2/h3 scan as one level group and a `\1` backreference to it
+BACKREF_H23_RE = re.compile(r"<(h[23])[^>]*>(.*?)</\1>", re.S | re.I)
+
+
+def _bodies(rx: re.Pattern, doc: str) -> list[tuple[tuple[int, int], str]]:
+    """(span, body) of every match in document order; the body is the
+    last group that took part in the match."""
+    return [(m.span(), m.group(m.lastindex)) for m in rx.finditer(doc)]
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.one_of(
+    _tag_soup,
+    st.lists(st.sampled_from(_HEADING_ATOMS), max_size=40).map("".join)))
+def test_h23_scan_equals_backreference_form_on_mixed_levels(doc):
+    want = _bodies(BACKREF_H23_RE, doc)
+    assert _bodies(spec.H23_RE, doc) == want
+    assert _bodies(LAZY_TAG_RES["H23_RE"], doc) == want
+    assert [h2 or h3 for h2, h3 in spec.H23_RE.findall(doc)] == \
+        [body for _, body in want]
 
 
 @settings(max_examples=300, deadline=None)

@@ -5,8 +5,14 @@ good prefix plus one position-stamped quarantine row)."""
 
 from __future__ import annotations
 
+import subprocess
+import sys
 from datetime import datetime, timezone
+from pathlib import Path
 
+import pyarrow as pa
+import pytest
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import Row, functions as F
 
 from blog_parser_spark import spec
@@ -870,3 +876,107 @@ def test_stream_crawl_delta_matches_batch_and_resumes(spark, tmp_path):
     assert got == exp
     # every class is actually exercised by the fixture split
     assert {s for _, s in got} == {"added", "changed", "same"}
+
+
+# --- record batches built from Arrow buffers ---------------------------------
+
+def _nullable(values: st.SearchStrategy) -> st.SearchStrategy:
+    return st.lists(st.one_of(st.none(), values), max_size=30)
+
+
+# every column type WARC_RECORD_ARROW and CDX_ARROW use; text and bytes
+# include empty and non-ASCII values, and datetimes the whole naive range
+_BUILDER_CASES = st.one_of(
+    st.tuples(st.just(pa.string()), _nullable(st.text(max_size=6))),
+    st.tuples(st.just(pa.string()), _nullable(st.sampled_from(
+        ["", "a", "https://m.com/1", "\u00e9t\u00e9", "\u4e2d", "\U0001f600"]))),
+    st.tuples(st.just(pa.binary()), _nullable(st.binary(max_size=6))),
+    st.tuples(st.just(pa.int64()), _nullable(
+        st.integers(-(1 << 63), (1 << 63) - 1))),
+    st.tuples(st.just(pa.timestamp("us", tz="UTC")), _nullable(
+        st.datetimes())),
+)
+
+
+def test_builder_covers_exactly_the_stage_column_types():
+    types = {f.type for f in (*warc.WARC_RECORD_ARROW, *warc.CDX_ARROW)}
+    assert types == {pa.string(), pa.binary(), pa.int64(),
+                     pa.timestamp("us", tz="UTC")}
+    for t in (pa.int32(), pa.large_string(), pa.timestamp("ns", tz="UTC")):
+        with pytest.raises(TypeError):
+            warc._column((1,), t)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_BUILDER_CASES)
+@example((pa.string(), []))
+@example((pa.binary(), [None, None, None]))
+@example((pa.int64(), [None]))
+@example((pa.timestamp("us", tz="UTC"), []))
+@example((pa.string(), [None, "", "\u00e9", None, "a"] * 3))
+def test_column_builder_equals_pa_array(case):
+    t, values = case
+    got = warc._column(tuple(values), t)
+    got.validate(full=True)
+    assert got.equals(pa.array(values, type=t))
+
+
+def test_warc_worker_modules_do_not_load_pandas():
+    """A fresh interpreter with the Python worker's imports builds a
+    record batch and a CDX batch without importing pandas."""
+    code = (
+        "import sys, datetime\n"
+        "import pyspark.worker\n"
+        "from blog_parser_spark.sources import warc\n"
+        "rec = warc._record_batch([('https://m.com/1', "
+        "datetime.datetime(2024, 1, 1), b'x', 'a.warc', 0, None), "
+        "(None, None, None, 'a.warc', None, 'cut')], warc.WARC_RECORD_ARROW)\n"
+        "cdx = warc._record_batch([('https://m.com/1', 'a.warc', 0, 0, "
+        "'md5:x', 'ok')], warc.CDX_ARROW)\n"
+        "print(rec.num_rows, cdx.num_rows, 'pandas' in sys.modules)\n")
+    r = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                       text=True, cwd=Path(__file__).resolve().parent.parent,
+                       timeout=120)
+    assert r.returncode == 0, r.stderr
+    assert r.stdout.split() == ["2", "1", "False"]
+
+
+def _walk_rows(raw: dict[str, bytes]) -> tuple[list, list, list]:
+    """Expected read, cdx and fetch rows of a corpus, from the spec walk
+    of each archive."""
+    read, cdx, fetch = [], [], []
+    for name, data in raw.items():
+        recs, err = spec.walk_warc(data)
+        for i, r in enumerate(recs):
+            row = (r.url, _epoch(r.warc_date), r.payload, name, r.offset,
+                   r.digest_err)
+            read.append(row)
+            fetch.append(row)
+            cdx.append((r.url, name, i, r.offset, r.digest, "ok"))
+        if err is not None:
+            read.append((None, None, None, name, None, err))
+            cdx.append((None, name, None, None, None, None))
+    return read, cdx, fetch
+
+
+def test_warc_stages_split_archives_by_byte_budget(spark, monkeypatch):
+    """With a budget of a few hundred bytes every stage's rows still
+    equal the spec walk, and a multi-record archive leaves as several
+    batches whose rows are the archive's, in order."""
+    monkeypatch.setattr(warc, "BATCH_BYTES", 300)
+    raw, files = _mixed_corpus(spark)
+    read, cdx, fetch = _walk_rows(raw)
+    index = warc.cdx_index(files)
+    wanted = index.where(F.col("url").isNotNull()).select("url")
+    assert _rows(warc.read_warc(files)) == sorted(read, key=repr)
+    assert _rows(index) == sorted(cdx, key=repr)
+    assert _rows(warc.fetch_by_index(files, index, wanted)) == \
+        sorted(fetch, key=repr)
+
+    payloads = [bytes([65 + i]) * 100 for i in range(7)]
+    rows = [(f"https://b.com/{i}", datetime(2024, 1, 1), p, "b.warc", i, None)
+            for i, p in enumerate(payloads)]
+    batches = list(warc._batches(rows, warc.WARC_RECORD_ARROW, 2, 300))
+    assert [b.num_rows for b in batches] == [3, 3, 1]
+    assert pa.Table.from_batches(batches).column("html").to_pylist() == \
+        payloads

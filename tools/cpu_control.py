@@ -6,7 +6,7 @@ pure-CPU/memory ceiling against which the engine's measured Spark scaling
 is judged (BENCH/BASELINE.md). P runs over 1, N and 4N (N = a quarter
 of this box's cores), each worker pinned to its own CPU of the mask.
 
-    python tools/cpu_control.py [--docs-per-proc 60000]
+    python tools/cpu_control.py [--docs-per-proc 600000]
 """
 
 from __future__ import annotations
@@ -55,7 +55,7 @@ def measure(procs: int, docs_per_proc: int) -> float:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--docs-per-proc", type=int, default=60000)
+    ap.add_argument("--docs-per-proc", type=int, default=600000)
     args = ap.parse_args()
     out = {}
     for p in box.widths():

@@ -10,8 +10,10 @@ Spark, the same way tools/cpu_control.py measures the CPU ceiling:
   processes, N a quarter of this box's cores (distinct files, 4 MiB
   chunks, fsync included in the timed window so the page cache cannot
   hide the device);
-- sequential READ bandwidth at the same widths after a global
-  drop_caches (so reads hit the device, not the 125 GiB page cache);
+- sequential READ bandwidth at the same widths, of files each writer
+  evicted from the page cache after its fsync (posix_fadvise
+  DONTNEED on the tool's own files, nothing host-wide), so reads hit
+  the device, not the page cache;
 - a MIXED leg (half writers, half readers, concurrent) — the closest
   zero-Spark analogue of simultaneous shuffle spill + fetch.
 
@@ -38,15 +40,6 @@ from tools import box  # noqa: E402
 CHUNK = 4 * 1024 * 1024
 
 
-def _drop_caches() -> bool:
-    try:
-        with open("/proc/sys/vm/drop_caches", "w") as f:
-            f.write("3\n")
-        return True
-    except OSError:
-        return False
-
-
 def _write_worker(args) -> float:
     wid, path, n_bytes, cpu = args
     os.sched_setaffinity(0, {cpu})
@@ -59,6 +52,9 @@ def _write_worker(args) -> float:
         os.write(fd, buf if left >= CHUNK else buf[:left])
         left -= CHUNK
     os.fsync(fd)
+    # the pages are clean after the fsync, so DONTNEED drops them: the
+    # read legs then time the device, not this file's cached copy
+    os.posix_fadvise(fd, 0, 0, os.POSIX_FADV_DONTNEED)
     os.close(fd)
     return time.time() - t0
 
@@ -100,21 +96,18 @@ def main() -> None:
         paths = [os.path.join(args.dir, f"w{p}_{i}.bin") for i in range(p)]
         tasks = [(i, paths[i], n_bytes, cpus[i]) for i in range(p)]
         out[f"write_{p}p_mbps"] = round(_run_pool(_write_worker, tasks), 1)
-        dropped = _drop_caches()
         out[f"read_{p}p_mbps"] = round(_run_pool(_read_worker, tasks), 1)
-        out[f"read_{p}p_cache_dropped"] = dropped
         for f in paths:
             os.remove(f)
 
     # mixed leg at the widest width: half write fresh files while half
-    # read just-written-then-dropped ones — concurrent spill + fetch
+    # read just-written-then-evicted ones — concurrent spill + fetch
     p = max(box.widths())
     half = p // 2
     rpaths = [os.path.join(args.dir, f"m_r{i}.bin") for i in range(half)]
     rtasks = [(i, rpaths[i], n_bytes, cpus[i]) for i in range(half)]
     for t in rtasks:
         _write_worker(t)
-    dropped = _drop_caches()
     wpaths = [os.path.join(args.dir, f"m_w{i}.bin") for i in range(half)]
     wtasks = [(i, wpaths[i], n_bytes, cpus[half + i])
               for i in range(half)]
@@ -125,7 +118,6 @@ def main() -> None:
         walls = rw.get() + ww.get()
         wall = time.time() - t0
     out["mixed_total_mbps"] = round(p * n_bytes / wall / 1e6, 1)
-    out["mixed_cache_dropped"] = dropped
     out["mixed_worker_walls_sec"] = [round(w, 2) for w in sorted(walls)]
     shutil.rmtree(args.dir, ignore_errors=True)
 
