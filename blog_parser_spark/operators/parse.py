@@ -1,25 +1,36 @@
 """Parse operators: the reference parser's entire per-document work as ONE
-vectorized pandas UDF (SURVEY.md §2.3 `parse_html`, `split_sentences`,
+vectorized Arrow UDF (SURVEY.md §2.3 `parse_html`, `split_sentences`,
 newest-capture dedup, `failure_split`).
 
 Everything per-document runs inside `spec.parse_document` (the same code
 the pure-Python oracle runs); Spark supplies batching (Arrow), scheduling,
 and parallelism. One UDF returning a struct — never five UDFs — so each row
 crosses the JVM<->Python boundary exactly once.
+
+The UDFs are `arrow_udf`s in the scalar-iterator form (pa.Array batches
+in and out): each reads its input with `to_pylist` and builds its output
+with arrow_columns.column, from Arrow buffers, as exactly the Arrow type
+Spark maps its return type to, so the worker's serializer never casts.
+No pandas enters a parse worker: not through the UDF wrapper, not
+through `pa.array`, and not through the modules the worker loads for the
+UDF body (spec, arrow_columns, and this one, which imports no pandas
+either). pandas was ~40 MB of a ~140 MB parse worker, paid once per
+executor core.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType, BooleanType, IntegerType, StringType, StructField, StructType,
 )
 
-from .. import spec
+from .. import arrow_columns, spec
 
 PARSED_STRUCT = StructType([
     StructField("title", StringType()),
@@ -30,44 +41,50 @@ PARSED_STRUCT = StructType([
     StructField("parse_ok", BooleanType()),
     StructField("parse_err", StringType()),
 ])
-
-
-@pandas_udf(PARSED_STRUCT)
-def parse_html_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """PARSE_SPEC v1 over html bytes, scalar-iterator form: per-worker setup
-    (regexes are module-level, compiled once at import) is amortized across
-    all Arrow batches of a task."""
-    for html in batches:
-        parsed = [spec.parse_document(None if h is None else bytes(h)) for h in html]
-        yield pd.DataFrame(parsed, columns=spec.Parsed._fields)
-
-
-@pandas_udf(ArrayType(StringType()))
-def split_sentences_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for paragraphs in batches:
-        yield paragraphs.map(lambda p: [] if p is None else spec.split_sentences(p))
-
-
+SENTENCES = ArrayType(StringType())
 PARSE_METRICS_STRUCT = StructType([
     StructField("extracted_len", IntegerType()),
     StructField("n_sentences", IntegerType()),
     StructField("parse_ok", BooleanType()),
     StructField("parse_err", StringType()),
 ])
+SENTS_BY_PARA = ArrayType(ArrayType(StringType()))
+_PARSED_ARROW, _SENTENCES_ARROW, _METRICS_ARROW, _SENTS_BY_PARA_ARROW = map(
+    to_arrow_type, (PARSED_STRUCT, SENTENCES, PARSE_METRICS_STRUCT,
+                    SENTS_BY_PARA))
 
 
-@pandas_udf(PARSE_METRICS_STRUCT)
-def parse_metrics_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+@arrow_udf(PARSED_STRUCT)
+def parse_html_udf(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+    """PARSE_SPEC v1 over html bytes, scalar-iterator form: per-worker setup
+    (regexes are module-level, compiled once at import) is amortized across
+    all Arrow batches of a task."""
+    for html in batches:
+        yield arrow_columns.column(
+            [spec.parse_document(h) for h in html.to_pylist()], _PARSED_ARROW)
+
+
+@arrow_udf(SENTENCES)
+def split_sentences_udf(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+    for paragraphs in batches:
+        yield arrow_columns.column(
+            [[] if p is None else spec.split_sentences(p)
+             for p in paragraphs.to_pylist()], _SENTENCES_ARROW)
+
+
+@arrow_udf(PARSE_METRICS_STRUCT)
+def parse_metrics_udf(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
     """Same parse, metrics-only return (~20B/row instead of ~1.2KB/row of
     Arrow traffic). Spark cannot column-prune inside a UDF, so the pruning
     is done by choosing this variant when downstream needs no text — the
     aggregate path's JVM-side Arrow decode cost drops ~50x."""
     for html in batches:
         rows = []
-        for h in html:
-            p = spec.parse_document(None if h is None else bytes(h))
-            rows.append((len(p.extracted_text), p.n_sentences, p.parse_ok, p.parse_err))
-        yield pd.DataFrame(rows, columns=[f.name for f in PARSE_METRICS_STRUCT.fields])
+        for h in html.to_pylist():
+            p = spec.parse_document(h)
+            rows.append((len(p.extracted_text), p.n_sentences, p.parse_ok,
+                         p.parse_err))
+        yield arrow_columns.column(rows, _METRICS_ARROW)
 
 
 def _dedup_max_by(df: DataFrame, order_cols: list) -> DataFrame:
@@ -163,11 +180,8 @@ def explode_sentences_unfused_reference(parsed: DataFrame) -> DataFrame:
             .filter(F.col("sentence").isNotNull()))
 
 
-SENTS_BY_PARA = ArrayType(ArrayType(StringType()))
-
-
-@pandas_udf(SENTS_BY_PARA)
-def parse_sentences_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+@arrow_udf(SENTS_BY_PARA)
+def parse_sentences_udf(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
     """Fused parse + sentence-split: html in, sentences-per-paragraph out,
     in ONE Python stage. The two-stage path (parse_pages →
     split_sentences_udf) ships every paragraph across Arrow twice and pays
@@ -176,10 +190,10 @@ def parse_sentences_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
     byte-identical to the two-stage path."""
     for html in batches:
         out = []
-        for h in html:
-            p = spec.parse_document(None if h is None else bytes(h))
+        for h in html.to_pylist():
+            p = spec.parse_document(h)
             out.append([spec.split_sentences(x) for x in p.paragraphs])
-        yield pd.Series(out)
+        yield arrow_columns.column(out, _SENTS_BY_PARA_ARROW)
 
 
 def sentences_from_pages(pages: DataFrame) -> DataFrame:

@@ -12,14 +12,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Tuned for the parse-heavy workload: Arrow batches feed the pandas-UDF
+# Tuned for the parse-heavy workload: Arrow batches feed the Arrow-UDF
 # parse stage; 10k rows/batch keeps per-batch html payloads ~5-50 MB.
 ARROW_BATCH_ROWS = 10_000
 
 ENGINE_CONFS: dict[str, str] = {
     # determinism / correctness
     "spark.sql.session.timeZone": "UTC",
-    # Arrow path for pandas UDFs and toPandas
+    # Arrow for toPandas and createDataFrame (UDFs cross in Arrow always);
+    # the batch size caps rows per crossing of the Arrow and pandas UDFs,
+    # mapInArrow/mapInPandas and toPandas
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
     # AQE: runtime re-plan, shuffle-partition coalescing, skew-join split

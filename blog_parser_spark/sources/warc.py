@@ -33,11 +33,13 @@ stay on mapInPandas: they already emit per finished archive.
 
 Worker footprint: a reading stage's worker never imports pandas (~40 MB
 of a ~100 MB worker). This module imports it only inside the packers,
-and _column builds each output column from Arrow buffers, because in
-pyarrow 16 `pa.array` on a Python sequence imports pandas. A pandas UDF
-that runs later in the same session still loads pandas into the reused
-workers, so the saving holds for WARC-only jobs: CDX indexing,
-fetch/refresh and WARC-to-table landing.
+and arrow_columns builds each output column from Arrow buffers, because
+in pyarrow 16 `pa.array` on a Python sequence imports pandas. The parse
+UDFs (operators/parse.py) build their output the same way, so a job
+that reads WARC and parses pages keeps pandas out of its reused workers
+too; in a `job.py` run the one stage left that loads it is the sink
+write's per-partition stamp (manifest._with_task_metrics, ROADMAP
+item 1).
 
 Quarantine contract: a malformed file never throws — it yields every
 record before its first framing error plus one quarantine row (url
@@ -48,13 +50,9 @@ counted, never silently dropped.
 from __future__ import annotations
 
 import re
-from array import array
 from collections.abc import Iterator
 from datetime import datetime
-from itertools import accumulate, repeat
-from operator import attrgetter, is_not
 
-import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -63,7 +61,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .. import spec
+from .. import arrow_columns, spec
 
 WARC_FILE_SCHEMA = StructType([
     StructField("warc_file", StringType(), False),
@@ -103,7 +101,7 @@ _WARC_DATE_CANON = re.compile(r"\d{4}-\d\d-\d\dT\d\d:\d\d:\d\dZ", re.ASCII)
 
 
 def _parse_warc_date(s: str) -> datetime:
-    # Naive UTC: _record_batch's timestamp[us, UTC] column reads it as
+    # Naive UTC: record_batch's timestamp[us, UTC] column reads it as
     # that instant whatever the session zone. The canonical layout takes
     # fromisoformat, an order of magnitude cheaper than strptime.
     # Everything else, and any value that fromisoformat rejects, goes to
@@ -132,76 +130,6 @@ def _archives(batches: Iterator[pa.RecordBatch], *cols: str) -> Iterator[tuple]:
 # 2 GiB; a ~1 GB .warc.gz archive holds several times that once gunzipped.
 BATCH_BYTES = 64 << 20
 
-_STRING, _BINARY, _INT64 = pa.string(), pa.binary(), pa.int64()
-_TIMESTAMP = pa.timestamp("us", tz="UTC")
-_EPOCH = datetime(1970, 1, 1)
-# What a null slot holds under the validity bitmap, per column type.
-_NULL_FILL = {_STRING: "", _BINARY: b"", _INT64: 0, _TIMESTAMP: _EPOCH}
-_CLOCK = tuple(map(attrgetter, ("hour", "minute", "second", "microsecond")))
-
-
-def _epoch_us(values) -> np.ndarray:
-    """Naive-UTC datetimes -> int64 microseconds since the epoch, one
-    C-level pass per field instead of datetime arithmetic per row."""
-    n = len(values)
-
-    def field(get):
-        return np.fromiter(map(get, values), np.int64, n)
-
-    hour, minute, second, micro = (field(get) for get in _CLOCK)
-    days = field(datetime.toordinal) - _EPOCH.toordinal()
-    return ((((days * 24 + hour) * 60 + minute) * 60 + second) * 1_000_000
-            + micro)
-
-
-def _column(values, t: pa.DataType) -> pa.Array:
-    """One column of Python values -> an Arrow array of type `t`, equal
-    to `pa.array(values, type=t)` but built from buffers: in pyarrow 16
-    `pa.array` on a Python sequence imports pandas, which no WARC
-    reading stage otherwise loads into its worker. Binary and string
-    data is joined once behind int32 offsets (ASCII text is joined as
-    text and encoded once), int64 goes through array('q'), and
-    timestamp[us, UTC] through _epoch_us. Any other type raises."""
-    if t not in _NULL_FILL:
-        raise TypeError(f"no Arrow column builder for {t}")
-    n, nulls = len(values), values.count(None)
-    if nulls == n:
-        return pa.nulls(n, t)
-    valid = None
-    if nulls:
-        flags = bytes(map(is_not, values, repeat(None)))
-        valid = pa.py_buffer(np.packbits(np.frombuffer(flags, np.uint8),
-                                         bitorder="little"))
-        fill = _NULL_FILL[t]
-        values = [fill if v is None else v for v in values]
-    if t == _INT64:
-        buffers = [valid, pa.py_buffer(array("q", values))]
-    elif t == _TIMESTAMP:
-        buffers = [valid, pa.py_buffer(_epoch_us(values))]
-    else:
-        if t == _BINARY:
-            data = b"".join(values)
-        else:
-            data = "".join(values)
-            if data.isascii():
-                data = data.encode("ascii")
-            else:
-                values = [v.encode() for v in values]
-                data = b"".join(values)
-        offsets = array("i", accumulate(map(len, values), initial=0))
-        buffers = [valid, pa.py_buffer(offsets), pa.py_buffer(data)]
-    return pa.Array.from_buffers(t, n, buffers, null_count=nulls)
-
-
-def _record_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
-    """Row tuples -> one Arrow batch of `schema` (Spark's own mapping of
-    the stage's StructType). TimestampType maps to timestamp[us, UTC],
-    which reads a naive datetime as UTC: WARC-Date is Zulu, so warc_ts
-    is the same instant whatever the session time zone."""
-    cols = list(zip(*rows)) or [()] * len(schema)
-    return pa.RecordBatch.from_arrays(
-        [_column(c, f.type) for c, f in zip(cols, schema)], schema=schema)
-
 
 def _batches(rows: list[tuple], schema: pa.Schema, col: int,
              budget: int) -> Iterator[pa.RecordBatch]:
@@ -215,11 +143,11 @@ def _batches(rows: list[tuple], schema: pa.Schema, col: int,
     for row in rows:
         n = len(row[col] or b"")
         if batch and size + n > budget:
-            yield _record_batch(batch, schema)
+            yield arrow_columns.record_batch(batch, schema)
             batch, size = [], 0
         batch.append(row)
         size += n
-    yield _record_batch(batch, schema)
+    yield arrow_columns.record_batch(batch, schema)
 
 
 def _pack_records(prefix: str, rec_type: str, gz: bool = False):

@@ -24,6 +24,12 @@ A tool that writes a `/proc/sys` setting (dropping the page cache, say)
 changes the whole host, not its own processes. The fourth scan fails on
 any call in the package or the tools that opens a `/proc/sys` path for
 writing.
+
+pandas is ~40 MB of a Python worker, paid once per executor core. The
+fifth scan fails on a load-time `import pandas` in any package module
+that the parse or WARC workers load (the modules defining those stages
+and, transitively, what they import); an import inside a function body,
+as in the packers, runs only when that function is called.
 """
 
 from __future__ import annotations
@@ -306,3 +312,108 @@ def test_program_files_write_no_proc_sys_setting():
              for p in sorted((ROOT / entry).rglob("*.py"))
              for ln in proc_sys_writes(p.read_text(), str(p))]
     assert found == [], "/proc/sys opened for writing:\n" + "\n".join(found)
+
+
+# The parse and WARC stages' Python workers import the modules that
+# define their UDFs, and every package module those import at load time.
+_WORKER_ROOTS = ("blog_parser_spark/operators/parse.py",
+                 "blog_parser_spark/sources/warc.py")
+
+
+def load_time_imports(source: str,
+                      filename: str = "<src>") -> list[tuple[int, int, str, list[str]]]:
+    """(line, level, module, names) of every import the module runs when
+    it loads: all but those inside a function body, which run only when
+    the function is called. `import a.b` gives ("a.b", [])."""
+    out: list[tuple[int, int, str, list[str]]] = []
+
+    def visit(node: ast.AST) -> None:
+        for n in ast.iter_child_nodes(node):
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
+                              ast.Lambda)):
+                continue
+            if isinstance(n, ast.Import):
+                out.extend((n.lineno, 0, a.name, []) for a in n.names)
+            elif isinstance(n, ast.ImportFrom):
+                out.append((n.lineno, n.level, n.module or "",
+                            [a.name for a in n.names]))
+            visit(n)
+
+    visit(ast.parse(source, filename))
+    return out
+
+
+def pandas_imports(source: str, filename: str = "<src>") -> list[int]:
+    """Line of every import of pandas (or a pandas submodule) that runs
+    when the module loads."""
+    return [ln for ln, level, mod, _ in load_time_imports(source, filename)
+            if level == 0 and mod.split(".")[0] == "pandas"]
+
+
+def _package_modules(path: Path, level: int, mod: str,
+                     names: list[str]) -> list[Path]:
+    """The package files an import in `path` loads."""
+    if level:
+        base = path.parent
+        for _ in range(level - 1):
+            base = base.parent
+    elif mod.split(".")[0] == "blog_parser_spark":
+        base = ROOT
+    else:
+        return []
+    target = base.joinpath(*mod.split(".")) if mod else base
+    cands = [target.with_suffix(".py")] if mod else []
+    cands += [target / "__init__.py"]
+    cands += [c for n in names
+              for c in (target / f"{n}.py", target / n / "__init__.py")]
+    return [c for c in cands if c.exists()]
+
+
+def worker_modules() -> set[str]:
+    """Every package file that loads with the parse or WARC stage modules:
+    their load-time package imports, followed transitively, and the
+    `__init__.py` of each package on the way."""
+    todo = [ROOT / p for p in _WORKER_ROOTS]
+    seen: set[Path] = set()
+    while todo:
+        p = todo.pop()
+        if p in seen:
+            continue
+        seen.add(p)
+        todo.extend(d / "__init__.py" for d in p.parents
+                    if d.is_relative_to(ROOT / "blog_parser_spark"))
+        for _, level, mod, names in load_time_imports(p.read_text(), str(p)):
+            todo.extend(_package_modules(p, level, mod, names))
+    return {str(p.relative_to(ROOT)) for p in seen}
+
+
+def test_pandas_scanner_flags_load_time_imports_only():
+    src = ("import pandas as pd\n"
+           "import pandasql\n"
+           "import os, pandas.api.types\n"
+           "try:\n"
+           "    from pandas import DataFrame\n"
+           "except ImportError:\n"
+           "    pass\n"
+           "class C:\n"
+           "    import pandas\n"
+           "def packer():\n"
+           "    import pandas as pd\n"
+           "    return lambda: __import__('pandas')\n"
+           "from .pandas_compat import x\n")
+    assert pandas_imports(src) == [1, 3, 5, 9]
+
+
+def test_worker_modules_import_no_pandas_at_load_time():
+    """A module that a parse or WARC worker loads must not import pandas
+    (~40 MB of each worker, paid once per executor core); the packers
+    import it inside their function bodies."""
+    mods = worker_modules()
+    assert {"blog_parser_spark/spec.py", "blog_parser_spark/arrow_columns.py",
+            "blog_parser_spark/operators/parse.py",
+            "blog_parser_spark/sources/warc.py",
+            "blog_parser_spark/__init__.py"} <= mods
+    found = [f"{m}:{ln}" for m in sorted(mods)
+             for ln in pandas_imports((ROOT / m).read_text(), m)]
+    assert found == [], ("pandas imported at load time by a module the "
+                         "parse/WARC workers load:\n" + "\n".join(found))
