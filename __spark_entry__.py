@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from blog_parser_spark.plans import pipeline, registry as qreg  # noqa: E402
-from blog_parser_spark.plans import queries, queries_analytics, queries_cdc, queries_crawl, queries_export, queries_ext, queries_ext2, queries_graph, queries_ml, queries_olap, queries_search, queries_weblog, queries_webmetrics, queries_webops  # noqa: E402,F401
+from blog_parser_spark.plans import queries, queries_analytics, queries_cdc, queries_crawl, queries_export, queries_ext, queries_graph, queries_ml, queries_olap, queries_search, queries_weblog, queries_webmetrics, queries_webops  # noqa: E402,F401
 from blog_parser_spark.sources import io  # noqa: E402
 
 

@@ -38,12 +38,12 @@ STEAL_RETRY_THRESHOLD = float(
     os.environ.get("SPARK_GRAFT_STEAL_RETRY", "0.10"))
 
 # registry queries timed by name each round: the flagship, then the
-# training-data ops layer (bucketed near-dup, LSH ANN, CC clustering, text
+# training-data ops layer (bucketed near-dup, CC clustering, text
 # quality) — the 100 TB-shaped formulations, so regressions in the
-# dedup/ANN plans show up next to the flagship — and the round-3 layers
+# dedup plans show up next to the flagship — and the round-3 layers
 # (link graph, export, CDC merge)
 REGISTRY_LEGS = (
-    "agg_sink_counts", "dedup_minhash_lsh", "ann_lsh_bucketed",
+    "agg_sink_counts", "dedup_minhash_lsh",
     "dedup_components", "text_quality",
     "graph_pagerank", "export_pack_sequences",
     "export_chunk_overlap", "cdc_apply_changes",
@@ -362,8 +362,8 @@ def main() -> None:
     from blog_parser_spark.session import get_spark
     from blog_parser_spark.sources import io
     # the registry fills as query modules import; __spark_entry__ imports
-    # them ALL (queries, ext, ext2, ml) — importing only plans.queries here
-    # would leave the dedup/ANN entries unregistered (KeyError)
+    # them ALL (queries, ext, ml, ...) — importing only plans.queries here
+    # would leave the dedup entries unregistered (KeyError)
     import __spark_entry__ as qreg
 
     spark = get_spark("bench", master=f"local[{cpus}]",

@@ -47,32 +47,6 @@ def agg_sink_counts_salted(routed: DataFrame, buckets: int = 32) -> DataFrame:
                  F.sum("_bytes").alias("bytes")))
 
 
-def bitmap_build(df: DataFrame, group_cols: list[str],
-                 key_col: str) -> DataFrame:
-    """Per-(group, bucket) EXACT-distinct bitmaps of key_col: the
-    storable/mergeable building block for incremental distinct counting.
-    Persist these per partition (e.g. per day) once; any later rollup is
-    a bitmap OR — no raw-data rescan, and unlike HLL the answer is exact.
-    One hash shuffle with map-side partial bitmap construction."""
-    return (df.groupBy(*group_cols,
-                       F.bitmap_bucket_number(key_col).alias("bkt"))
-            .agg(F.bitmap_construct_agg(
-                F.bitmap_bit_position(key_col)).alias("bm")))
-
-
-def bitmap_merge_count(bitmaps: DataFrame,
-                       group_cols: list[str]) -> DataFrame:
-    """OR-merge stored bitmaps down to group_cols and count exactly:
-    first OR per (group, bucket) — collapsing e.g. the per-day axis —
-    then sum the per-bucket cardinalities. Input size is #groups x
-    #buckets bitmap rows, not raw data."""
-    merged = (bitmaps.groupBy(*group_cols, "bkt")
-              .agg(F.bitmap_or_agg("bm").alias("bm")))
-    return (merged.groupBy(*group_cols)
-            .agg(F.sum(F.bitmap_count("bm")).cast("long")
-                 .alias("distinct_count")))
-
-
 def multiset_equal(a: DataFrame, b: DataFrame) -> bool:
     """Routed-row equality gate: exceptAll empty both directions."""
     cols = sorted(a.columns)

@@ -74,8 +74,8 @@ def allocate_budget(hosts: DataFrame, budget: int,
     1 of its exact proportional share.
 
     Scale shape: this runs on the HOST aggregate (orders of magnitude
-    smaller than the fetch log — same pattern as the attribution/trending
-    ops, whose windows also run on the tiny rollup, never the stream).
+    smaller than the fetch log — same pattern as weblog.transition_counts,
+    whose window also runs on the tiny rollup, never the stream).
     W, the leftover, and the remainder rank are all GLOBAL WINDOWS over
     that rollup — deliberately: a first formulation attached W and the
     leftover as crossJoined one-row aggregates, and because each

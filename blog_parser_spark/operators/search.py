@@ -24,8 +24,7 @@ Determinism (oracle bit-exactness): BM25/TF-IDF idf uses ln → round 12
 both engines (libm ln can differ by 1 ulp); per-document score sums fold
 LEFT over term-sorted contribution arrays (DuckDB list_reduce folds left
 from the first element; Spark F.aggregate folds left from 0.0, and
-0.0 + x == x exactly — same convention as the ANN oracles); every
-top-k ordering carries a unique tie-break.
+0.0 + x == x exactly); every top-k ordering carries a unique tie-break.
 """
 
 from __future__ import annotations

@@ -213,44 +213,6 @@ def ab_experiment(events: DataFrame) -> DataFrame:
         z.alias("z_score"))
 
 
-def synth_prop_json(events: DataFrame) -> DataFrame:
-    """Deterministic per-type JSON documents (heterogeneous key sets)
-    from events rows -> (ts, doc). The key sets drift by event_type so
-    a key census has real structure to discover."""
-    eid = F.col("event_id")
-    et = F.col("event_type")
-    k = (eid % 100).cast("string")
-    doc = (F.when(et == "view",
-                  F.concat(F.lit('{"k": '), k, F.lit(', "page": "p'),
-                           (eid % 10).cast("string"), F.lit('"}')))
-           .when(et == "click",
-                 F.concat(F.lit('{"k": '), k, F.lit(', "btn": "b'),
-                          (eid % 3).cast("string"), F.lit('"}')))
-           .when(et == "purchase",
-                 F.concat(F.lit('{"k": '), k, F.lit(', "amount": '),
-                          (eid % 500).cast("string"),
-                          F.lit(', "currency": "usd"}')))
-           .when(et == "signup", F.concat(F.lit('{"k": '), k, F.lit("}")))
-           .otherwise(F.concat(F.lit('{"k": '), k, F.lit(', "code": '),
-                               (eid % 7).cast("string"), F.lit("}"))))
-    return events.select("ts", doc.alias("doc"))
-
-
-def schema_key_census(docs: DataFrame) -> DataFrame:
-    """Schema-drift census over heterogeneous JSON: explode each doc's
-    top-level key set, report per key the doc count and the first day
-    it appeared. This is how a landing zone notices producers adding
-    fields. json_object_keys + explode stays JVM-side; the census
-    aggregate is map-side-combined and its cardinality is the number
-    of DISTINCT KEYS — tiny at any corpus size."""
-    day = F.date_format(F.col("ts").cast("timestamp"), "yyyy-MM-dd")
-    keys = docs.select(day.alias("day"),
-                       F.explode(F.json_object_keys("doc")).alias("key"))
-    return (keys.groupBy("key")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.min("day").alias("first_seen_day")))
-
-
 def classify_useragent(df: DataFrame, ua_col: str = "ua") -> DataFrame:
     """Attach (family, os, is_bot) columns from a raw UA string.
 
@@ -318,9 +280,10 @@ def rolling_distinct_users(events: DataFrame,
     aggregate attaches via broadcast to trim phantom days past the
     corpus edge.
 
-    The fan-out factor IS window_days: for 90-day windows prefer the
-    registry's mergeable exact bitmaps (agg_bitmap_rollup) or an
-    approximate HLL sketch union (hll_sketch_agg + hll_union_agg) instead."""
+    The fan-out factor IS window_days: for 90-day windows prefer
+    per-day mergeable exact bitmaps (bitmap_construct_agg +
+    bitmap_or_agg) or an approximate HLL sketch union (hll_sketch_agg +
+    hll_union_agg) instead."""
     pairs = (events.select(_day_num().alias("day_num"), "user_id")
              .distinct())
     expanded = pairs.select(
@@ -346,31 +309,6 @@ def rolling_distinct_users(events: DataFrame,
             .where(F.col("day_t") <= F.col("max_day"))
             .select(F.col("day_t").alias("day_num"),
                     "users_1d", "users_7d"))
-
-
-def trending_scores(events: DataFrame, max_age_days: int = 30) -> DataFrame:
-    """Exponential-decay trending score per event type with EXACT
-    integer arithmetic: weight(age) = 2^(max_age - age), so recent
-    days dominate geometrically and the score is a BIGINT sum —
-    order-independent (no float-summation nondeterminism) and
-    bit-identical across engines, unlike pow(0.5, age) which routes
-    through exp/ln. Per-(type, day) counts are map-side-combined; the
-    max-day scalar attaches via a one-row broadcast."""
-    per = (events.groupBy("event_type", _day_num().alias("day_num"))
-           .agg(F.count(F.lit(1)).alias("cnt")))
-    max_day = per.agg(F.max("day_num").alias("max_day"))
-    age = F.col("max_day") - F.col("day_num")
-    weighted = (per.crossJoin(F.broadcast(max_day))
-                .where(age <= max_age_days)
-                .withColumn(
-                    "w_cnt",
-                    F.col("cnt") * F.expr(
-                        f"shiftleft(cast(1 as bigint), "
-                        f"cast({max_age_days} - (max_day - day_num) "
-                        f"as int))")))
-    return (weighted.groupBy("event_type")
-            .agg(F.sum("w_cnt").alias("trend_score"),
-                 F.count(F.lit(1)).alias("days_covered")))
 
 
 def coalesce_intervals(events: DataFrame) -> DataFrame:

@@ -1,22 +1,18 @@
-"""Acquisition/engagement web metrics: referrer-channel classification,
-entry-page bounce rates, and linear multi-touch attribution.
+"""Acquisition web metrics: referrer-channel classification.
 
-Companions to operators/weblog.py (UA classification, last-touch
-attribution, sessionized intervals) — the remaining trio every web
-analytics pipeline reports. Fixture synthesis follows the repo's
-convention: deterministic expressions over the events table mirrored
-expression-for-expression in the DuckDB oracles
+Companion to operators/weblog.py (UA classification, last-touch
+attribution, sessionized intervals). Fixture synthesis follows the
+repo's convention: deterministic expressions over the events table
+mirrored expression-for-expression in the DuckDB oracles
 (plans/queries_webmetrics.py), asserted equal by tests/test_webmetrics.py.
 
-Determinism: all outputs are BIGINT/VARCHAR or IEEE doubles produced by
-a single division of two exact BIGINTs (correctly rounded -> identical
-across engines); attribution credit is integer micro-units (1e6 split
-by integer division), never a floating partial sum.
+Determinism: all outputs are BIGINT/VARCHAR, so they are identical
+across engines.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 # Spark regexp_extract and DuckDB regexp_extract are both RE2-compatible
 # for these patterns; '' (no match) maps to NULL via nullif on both sides.
@@ -87,97 +83,3 @@ def referrer_report(events: DataFrame) -> DataFrame:
     return (cls.groupBy("channel", "term")
             .agg(F.count(F.lit(1)).alias("requests")))
 
-
-def _ts_s():
-    # Fixture timestamps are TIMESTAMP_NTZ; NTZ->BIGINT needs the
-    # timestamp hop in Spark 4 (UTC session, CLAUDE.md convention).
-    return F.col("ts").cast("timestamp").cast("long")
-
-
-def synth_pages(events: DataFrame) -> DataFrame:
-    """Deterministic page path per event: 7 sections x 23 pages."""
-    page = F.concat(F.lit("/cat"), (F.col("user_id") % 7).cast("string"),
-                    F.lit("/p"), (F.col("event_id") % 23).cast("string"))
-    return events.withColumn("page", page)
-
-
-def bounce_rate(events: DataFrame, gap_s: int = 1800) -> DataFrame:
-    """Entry-page bounce rate: sessionize per user (gap > `gap_s` starts
-    a session), attribute each session to its first page, bounce = the
-    session has exactly one event.
-
-    Distributed shape: ONE shuffle on user_id drives the sessionization
-    window (lag + running sum); the per-session row_number/count windows
-    re-key on (user, session) — a refinement of the user partitioning —
-    and the final per-page rollup is map-side combined over a bounded
-    page space. No per-user state beyond the sort; scales with the
-    event stream, not the user count. bounce_pct divides two exact
-    BIGINTs (IEEE correctly rounded -> engine-identical)."""
-    ev = synth_pages(events).select(
-        "user_id", "event_id", _ts_s().alias("ts_s"), "page")
-    w = Window.partitionBy("user_id").orderBy("ts_s", "event_id")
-    gap = F.col("ts_s") - F.lag("ts_s").over(w)
-    is_start = F.when(gap.isNull() | (gap > gap_s), 1).otherwise(0)
-    sid = F.sum(is_start).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    sess = ev.withColumn("session_id", sid)
-    sw = Window.partitionBy("user_id", "session_id")
-    flagged = sess.select(
-        "page",
-        F.row_number().over(sw.orderBy("ts_s", "event_id")).alias("rn"),
-        F.count(F.lit(1)).over(sw).alias("n_ev"))
-    entry = flagged.where(F.col("rn") == 1)
-    return (entry.groupBy(F.col("page").alias("entry_page"))
-            .agg(F.count(F.lit(1)).alias("sessions"),
-                 F.sum(F.when(F.col("n_ev") == 1, 1).otherwise(0))
-                 .alias("bounces"))
-            .select("entry_page", "sessions", "bounces",
-                    (F.col("bounces").cast("double")
-                     / F.col("sessions").cast("double")).alias("bounce_pct")))
-
-
-def attribution_linear(events: DataFrame,
-                       lookback_s: int = 604800) -> DataFrame:
-    """Linear multi-touch attribution: each purchase splits a credit of
-    1,000,000 micro-units equally (integer division) across ALL of the
-    user's non-purchase touches in the preceding `lookback_s` window;
-    purchases with no in-window touch credit 'direct' in full.
-
-    Distributed shape: purchases LEFT-JOIN touches as a hash join on
-    user_id (the non-equi window predicate evaluates inside the join;
-    per-user histories bound the fan-out), then the per-purchase touch
-    count comes from one window keyed on the purchase's unique event_id
-    — high-cardinality, fully parallel — and the per-channel rollup is
-    map-side combined. Credit stays in exact BIGINT micro-units end to
-    end: no float partials, so sums are partition-order independent and
-    engine-identical. Complements weblog.attribution_last_touch
-    (same window contract: strict (ts, event_id) precedence)."""
-    ev = events.select(_ts_s().alias("ts_s"), "event_id", "user_id",
-                       "event_type")
-    purch = (ev.where(F.col("event_type") == "purchase")
-             .select(F.col("user_id").alias("p_uid"),
-                     F.col("event_id").alias("p_eid"),
-                     F.col("ts_s").alias("p_ts")))
-    touch = (ev.where(F.col("event_type") != "purchase")
-             .select(F.col("user_id").alias("t_uid"),
-                     F.col("event_id").alias("t_eid"),
-                     F.col("ts_s").alias("t_ts"),
-                     F.col("event_type").alias("t_channel")))
-    cond = ((F.col("p_uid") == F.col("t_uid"))
-            & (F.col("t_ts") >= F.col("p_ts") - lookback_s)
-            & ((F.col("t_ts") < F.col("p_ts"))
-               | ((F.col("t_ts") == F.col("p_ts"))
-                  & (F.col("t_eid") < F.col("p_eid")))))
-    joined = purch.join(touch, cond, "left").withColumn(
-        "n", F.count("t_eid").over(Window.partitionBy("p_eid")))
-    credited = joined.select(
-        F.when(F.col("t_eid").isNull(), "direct")
-        .otherwise(F.col("t_channel")).alias("channel"),
-        F.when(F.col("t_eid").isNull(), F.lit(1_000_000).cast("long"))
-        .otherwise(F.expr("CAST(1000000 AS BIGINT) DIV n"))
-        .alias("credit_micro"),
-        F.when(F.col("t_eid").isNull(), 0).otherwise(1)
-        .cast("long").alias("is_touch"))
-    return (credited.groupBy("channel")
-            .agg(F.sum("credit_micro").alias("credit_micro"),
-                 F.sum("is_touch").alias("touches")))

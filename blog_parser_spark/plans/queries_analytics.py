@@ -1,13 +1,8 @@
-"""Driver-contract queries for the log-analytics additions: ordered
-funnel sequence matching, exact corpus heavy hitters, and the linear
-quality-classifier scoring stage.
+"""Driver-contract queries for the corpus-analytics additions: exact
+corpus heavy hitters, the linear quality-classifier scoring stage and
+the domain link graph.
 
 Oracle notes:
-- funnel_sequence's oracle is the chained-min formulation (one CTE per
-  step, each min() constrained strictly after the previous step's time)
-  — semantically identical to the Spark one-shuffle greedy fold (see
-  operators/funnel.py docstring for the equivalence argument).
-  Timestamps compare at microsecond precision (epoch_us/unix_micros).
 - text_quality_classifier: features and logit are fixed-order double
   arithmetic (bit-identical, emitted raw); the sigmoid is transcendental
   so it is round(...,12) on BOTH sides; `keep` thresholds the exact
@@ -18,50 +13,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import funnel, links, textstats
+from ..operators import links, textstats
 from ..sources import io
 from .registry import register
 
 _WORDS = "string_split(text, ' ')"
-
-_FUNNEL_SQL = """
-WITH e AS (
-  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_type
-  FROM events
-  WHERE event_type IN ('signup', 'view', 'click', 'purchase')
-),
-s1 AS (SELECT user_id, min(ts_us) AS t FROM e
-       WHERE event_type = 'signup' GROUP BY 1),
-s2 AS (SELECT e.user_id, min(e.ts_us) AS t FROM e
-       JOIN s1 ON e.user_id = s1.user_id
-       WHERE e.event_type = 'view' AND e.ts_us > s1.t GROUP BY 1),
-s3 AS (SELECT e.user_id, min(e.ts_us) AS t FROM e
-       JOIN s2 ON e.user_id = s2.user_id
-       WHERE e.event_type = 'click' AND e.ts_us > s2.t GROUP BY 1),
-s4 AS (SELECT e.user_id, min(e.ts_us) AS t FROM e
-       JOIN s3 ON e.user_id = s3.user_id
-       WHERE e.event_type = 'purchase' AND e.ts_us > s3.t GROUP BY 1),
-u AS (SELECT DISTINCT user_id FROM e)
-SELECT u.user_id,
-  CAST(CASE WHEN s4.t IS NOT NULL THEN 4
-            WHEN s3.t IS NOT NULL THEN 3
-            WHEN s2.t IS NOT NULL THEN 2
-            WHEN s1.t IS NOT NULL THEN 1
-            ELSE 0 END AS INT) AS funnel_stage,
-  CAST(COALESCE(s4.t, s3.t, s2.t, s1.t) AS BIGINT) AS funnel_ts_us
-FROM u
-LEFT JOIN s1 ON u.user_id = s1.user_id
-LEFT JOIN s2 ON u.user_id = s2.user_id
-LEFT JOIN s3 ON u.user_id = s3.user_id
-LEFT JOIN s4 ON u.user_id = s4.user_id
-"""
-
-
-@register("funnel_sequence", _FUNNEL_SQL)
-def q_funnel_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user strict-order funnel progression over the event log."""
-    ev = io.read_table(spark, sf_dir, "events")
-    return funnel.funnel_stages(ev)
 
 
 @register("text_heavy_hitters", f"""

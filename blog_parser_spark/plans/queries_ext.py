@@ -1,12 +1,10 @@
-"""Driver-contract queries, batch 3: url parsing, the SQL-API flagship,
-and exact distinct counts through mergeable bitmaps
-(operators/aggregate.py)."""
+"""Driver-contract queries, batch 3: url parsing and the SQL-API
+flagship."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import aggregate
 from ..sources import io
 from .registry import register
 
@@ -70,43 +68,3 @@ def _register_flagship_sql():
 
 _register_flagship_sql()
 
-
-@register("agg_bitmap_distinct", """
-SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS distinct_users
-FROM events
-""")
-def q_agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT distinct counting via storable/mergeable bitmaps — the
-    exact-count analog of an HLL sketch-union rollup: per-(group,
-    bucket) bitmaps (bitmap_construct_agg of bit positions) OR-merge
-    across groups, and the global distinct is the sum of per-bucket
-    bitmap_count. Each daily partition can persist its bitmaps and any
-    date-range distinct is a cheap bitmap_or_agg — no raw-data rescan,
-    and unlike HLL the answer is exact, so the oracle checks the value
-    itself (COUNT(DISTINCT))."""
-    ev = io.read_table(spark, sf_dir, "events")
-    per = aggregate.bitmap_build(ev, ["event_type"], "user_id")
-    merged = per.groupBy("bkt").agg(F.bitmap_or_agg("bm").alias("bm"))
-    return merged.agg(F.sum(F.bitmap_count("bm")).cast("long")
-                      .alias("distinct_users"))
-
-
-@register("agg_bitmap_rollup", """
-SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS distinct_users
-FROM events GROUP BY event_type
-""")
-def q_agg_bitmap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The incremental exact-distinct story end-to-end: build
-    per-(event_type, day) bitmaps — the granularity a daily job would
-    PERSIST — then OR-merge across the day axis to answer per-event_type
-    all-time distinct users exactly. The merge reads #groups x #buckets
-    bitmap rows, never the raw events; oracle = grouped COUNT(DISTINCT).
-    The persisted-parquet round-trip (write daily bitmaps, date-range
-    merge with partition pruning) is exercised in tests/test_sinks.py."""
-    ev = (io.read_table(spark, sf_dir, "events")
-          .withColumn("day", F.date_format(
-              F.col("ts").cast("timestamp"), "yyyy-MM-dd")))
-    daily = aggregate.bitmap_build(ev, ["event_type", "day"], "user_id")
-    return (aggregate.bitmap_merge_count(daily, ["event_type"])
-            .select("event_type",
-                    F.col("distinct_count").alias("distinct_users")))

@@ -1,5 +1,5 @@
 """Driver-contract queries for the training-data-pipeline operators:
-dedup family, similarity search, text analysis, multimodal plumbing.
+dedup family, text analysis, deterministic sampling.
 
 Oracle-compat notes:
 - word_hash is identical across engines (md5-hex prefix -> bigint).
@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import dedup, multimodal, sampling, similarity, textstats
+from ..operators import dedup, sampling, textstats
 from ..sources import io
 from .registry import register
 
@@ -352,138 +352,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     mechanism (fingerprint, 4x8-bit band buckets, hamming verify), so
     equality is bit-for-bit, not recall-modulo-banding."""
     return dedup.near_dup_pairs_simhash(_near_corpus(spark, sf_dir), max_hamming=6)
-
-
-# ---------------------------------------------------------------------------
-# similarity search
-# ---------------------------------------------------------------------------
-
-@register("ann_cosine_topk", """
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings)
-SELECT query_id, cand_id, cos, rank FROM (
-  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-         round(list_cosine_similarity(q.v, c.v), 6) AS cos,
-         CAST(row_number() OVER (PARTITION BY q.vec_id
-              ORDER BY round(list_cosine_similarity(q.v, c.v), 6) DESC, c.vec_id) AS INT) AS rank
-  FROM e q JOIN e c ON q.vec_id <> c.vec_id
-  WHERE q.vec_id < 5
-) WHERE rank <= 5
-""")
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = io.read_table(spark, sf_dir, "embeddings")
-    return similarity.brute_force_topk(emb, emb.filter("vec_id < 5"), k=5)
-
-
-# Sign-LSH is deterministic too: the plane weights are a pure function of
-# (table, plane, dim) and the sign of each projection comes from the same
-# left-fold double sum in both engines (DuckDB list_reduce folds left from
-# the first element; Spark folds left from 0.0, and 0.0 + x == x exactly),
-# so the bucket ids — and therefore the candidate set — match bit-for-bit.
-def _lsh_proj_sql(table: int, plane: int) -> str:
-    ws = ", ".join(
-        f"{float(similarity._plane_weight(table * 100 + plane, d))}"
-        for d in range(similarity.DIM))
-    return (f"list_reduce(list_transform(range(1, {similarity.DIM + 1}),"
-            f" i -> v[i] * ([{ws}])[i]), (a, b) -> a + b)")
-
-
-def _lsh_bucket_sql(table: int) -> str:
-    return " + ".join(
-        f"(CASE WHEN {_lsh_proj_sql(table, p)} > 0 THEN {1 << p} ELSE 0 END)"
-        for p in range(similarity.N_PLANES))
-
-
-_ANN_LSH_ORACLE = f"""
-WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-bk AS (
-  SELECT vec_id, v,
-    {", ".join(f"CAST({_lsh_bucket_sql(t)} AS BIGINT) AS b{t}"
-               for t in range(similarity.N_TABLES))}
-  FROM e
-),
-ex AS (
-  SELECT vec_id, v, t.t,
-    CASE t.t {" ".join(f"WHEN {t} THEN b{t}" for t in range(similarity.N_TABLES))}
-    END AS b
-  FROM bk CROSS JOIN (VALUES {", ".join(f"({t})" for t in range(similarity.N_TABLES))}) AS t(t)
-),
-scored AS (
-  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS cand_id,
-         round(list_cosine_similarity(q.v, c.v), 6) AS cos
-  FROM ex q JOIN ex c
-    ON q.t = c.t AND q.b = c.b AND q.vec_id <> c.vec_id
-  WHERE q.vec_id < 5
-)
-SELECT query_id, cand_id, cos, rank FROM (
-  SELECT query_id, cand_id, cos,
-    CAST(row_number() OVER (PARTITION BY query_id
-         ORDER BY cos DESC, cand_id) AS INT) AS rank
-  FROM scored
-) WHERE rank <= 5
-"""
-
-
-@register("ann_lsh_bucketed", _ANN_LSH_ORACLE)
-def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH bucketed ANN; the oracle reproduces the exact mechanism
-    (plane projections, 4-table bucket union, cosine re-rank), so the
-    check is bit-for-bit equality, not recall-vs-brute-force."""
-    emb = io.read_table(spark, sf_dir, "embeddings")
-    return similarity.lsh_topk(emb, emb.filter("vec_id < 5"), k=5)
-
-
-@register("ann_ivf_topk")  # approximate pruning -> rows-only driver check
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: deterministic centroids, broadcast assignment, probe-only
-    list scan (equi-join on centroid_id). With n_probe == n_centroids it
-    equals brute force exactly (tests/test_ml_ops.py); recall at the
-    default probe fraction is also pinned there."""
-    emb = io.read_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk(emb, emb.filter("vec_id < 5"), k=5)
-
-
-# ---------------------------------------------------------------------------
-# multimodal plumbing
-# ---------------------------------------------------------------------------
-
-@register("multimodal_features", """
-SELECT doc_id,
-  CASE WHEN doc_id % 3 = 0 THEN 'image' WHEN doc_id % 3 = 1 THEN 'audio'
-       ELSE 'video' END AS kind,
-  CAST(64 + (doc_id % 8) * 16 AS INT) AS width,
-  CAST(48 + (doc_id % 6) * 16 AS INT) AS height,
-  CAST(least(n_chars, 256) AS INT) AS n_payload_bytes,
-  list_aggregate(list_transform(range(least(n_chars, 256)),
-                 i -> CAST((doc_id + i) % 256 AS DOUBLE)), 'avg') AS mean_byte
-FROM documents
-""")
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return multimodal.extract_features(multimodal.synth_media(spark, sf_dir))
-
-
-@register("multimodal_resize", """
-WITH m AS (
-  SELECT doc_id, 64 + (doc_id % 8) * 16 AS w, 48 + (doc_id % 6) * 16 AS h
-  FROM documents WHERE doc_id % 3 = 0
-)
-SELECT doc_id,
-  CAST(w // greatest((greatest(w, h) + 31) // 32, 1) AS INT) AS out_width,
-  CAST(h // greatest((greatest(w, h) + 31) // 32, 1) AS INT) AS out_height
-FROM m
-""")
-def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = multimodal.resize_images(multimodal.synth_media(spark, sf_dir))
-    return df.select("doc_id", "out_width", "out_height")
-
-
-@register("multimodal_frames", """
-SELECT doc_id, CAST(unnest(range(0, greatest(n_chars * 10, 1), 1000)) AS INT) AS frame_ts_ms
-FROM documents WHERE doc_id % 3 = 2
-""")
-def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return multimodal.sample_frames(multimodal.synth_media(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

@@ -222,40 +222,6 @@ def q_bot_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# schema_drift_census — top-level key census over heterogeneous JSON
-# (per-producer key sets drift by event_type in the fixture): per key
-# the doc count and first-seen day. json_object_keys + explode stays
-# JVM-side; the aggregate's cardinality is |distinct keys| — tiny at
-# any corpus size.
-# ---------------------------------------------------------------------------
-
-@register("schema_drift_census", """
-WITH docs AS (
-  SELECT ts, CASE event_type
-    WHEN 'view' THEN '{"k": ' || CAST(event_id % 100 AS VARCHAR)
-        || ', "page": "p' || CAST(event_id % 10 AS VARCHAR) || '"}'
-    WHEN 'click' THEN '{"k": ' || CAST(event_id % 100 AS VARCHAR)
-        || ', "btn": "b' || CAST(event_id % 3 AS VARCHAR) || '"}'
-    WHEN 'purchase' THEN '{"k": ' || CAST(event_id % 100 AS VARCHAR)
-        || ', "amount": ' || CAST(event_id % 500 AS VARCHAR)
-        || ', "currency": "usd"}'
-    WHEN 'signup' THEN '{"k": ' || CAST(event_id % 100 AS VARCHAR) || '}'
-    ELSE '{"k": ' || CAST(event_id % 100 AS VARCHAR) || ', "code": '
-        || CAST(event_id % 7 AS VARCHAR) || '}'
-    END AS doc
-  FROM events),
-keys AS (
-  SELECT strftime(ts, '%Y-%m-%d') AS day, unnest(json_keys(doc)) AS key
-  FROM docs)
-SELECT key, CAST(COUNT(*) AS BIGINT) AS n_docs, MIN(day) AS first_seen_day
-FROM keys GROUP BY key
-""")
-def q_schema_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = io.read_table(spark, sf_dir, "events")
-    return weblog.schema_key_census(weblog.synth_prop_json(ev))
-
-
-# ---------------------------------------------------------------------------
 # text_boilerplate_strip — per-site common-line boilerplate removal
 # (operators/boilerplate.py): a line appearing on >= 1/2 of its
 # domain's docs is boilerplate. Frequency agg + join-back both key on
@@ -384,32 +350,6 @@ FROM expanded, m WHERE day_t <= max_day GROUP BY day_t
 def q_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = io.read_table(spark, sf_dir, "events")
     return weblog.rolling_distinct_users(ev)
-
-
-# ---------------------------------------------------------------------------
-# trending_event_types — exponential-decay trending with EXACT integer
-# weights (2^(30 - age) via bigint shift): a BIGINT sum is
-# order-independent, so no float-summation nondeterminism and no
-# pow()'s exp/ln route. Per-(type, day) counts map-side-combine; the
-# max-day scalar attaches via one-row broadcast.
-# ---------------------------------------------------------------------------
-
-@register("trending_event_types", """
-WITH per AS (
-  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day_num,
-         CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM events GROUP BY 1, 2),
-m AS (SELECT MAX(day_num) AS max_day FROM per)
-SELECT event_type,
-       CAST(SUM(cnt * (CAST(1 AS BIGINT) << CAST(30 - (max_day - day_num)
-            AS INT))) AS BIGINT) AS trend_score,
-       CAST(COUNT(*) AS BIGINT) AS days_covered
-FROM per, m WHERE max_day - day_num <= 30
-GROUP BY event_type
-""")
-def q_trending_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = io.read_table(spark, sf_dir, "events")
-    return weblog.trending_scores(ev)
 
 
 # ---------------------------------------------------------------------------

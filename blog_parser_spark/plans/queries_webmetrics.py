@@ -1,6 +1,5 @@
-"""Acquisition/engagement metrics + reverse-search + sketch queries —
-driver-contract entries for operators/webmetrics.py (referrer channels,
-entry-page bounce rate, linear multi-touch attribution),
+"""Acquisition metrics + reverse-search + sketch queries —
+driver-contract entries for operators/webmetrics.py (referrer channels),
 operators/percolate.py (saved-query percolation) and
 operators/sketches.py (count-min frequency sketch).
 
@@ -10,10 +9,8 @@ expression-for-expression in the oracles; the percolate saved-query
 registry is generated by ONE Python function inlined as a VALUES list
 here, so the two engines share a single fixture source.
 
-Determinism: BIGINT/VARCHAR outputs everywhere except bounce_pct,
-which is a single IEEE division of two exact BIGINTs (correctly
-rounded -> engine-identical); attribution credit is integer micro-units
-(1e6 split by integer division) — no float partial sums anywhere.
+Determinism: BIGINT/VARCHAR outputs everywhere — no float partial
+sums anywhere.
 """
 
 from __future__ import annotations
@@ -76,87 +73,6 @@ FROM cls GROUP BY channel, term
 def q_referrer_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = io.read_table(spark, sf_dir, "events")
     return webmetrics.referrer_report(ev)
-
-
-# ---------------------------------------------------------------------------
-# bounce_rate_entry — entry-page bounce rate over 30-min-gap sessions:
-# ONE shuffle on user_id drives the sessionization window; the
-# per-session row_number/count windows refine that partitioning; the
-# final per-page rollup is map-side combined. bounce_pct = one IEEE
-# division of two exact BIGINTs.
-# ---------------------------------------------------------------------------
-
-@register("bounce_rate_entry", """
-WITH base AS (
-  SELECT user_id, event_id, epoch_us(ts) // 1000000 AS ts_s,
-         '/cat' || CAST(user_id % 7 AS VARCHAR)
-           || '/p' || CAST(event_id % 23 AS VARCHAR) AS page
-  FROM events),
-st AS (
-  SELECT *, CASE WHEN lag(ts_s) OVER w IS NULL
-                   OR ts_s - lag(ts_s) OVER w > 1800
-                 THEN 1 ELSE 0 END AS is_start
-  FROM base WINDOW w AS (PARTITION BY user_id ORDER BY ts_s, event_id)),
-sid AS (
-  SELECT *, SUM(is_start) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM st),
-fl AS (
-  SELECT page,
-         ROW_NUMBER() OVER (PARTITION BY user_id, session_id
-                            ORDER BY ts_s, event_id) AS rn,
-         COUNT(*) OVER (PARTITION BY user_id, session_id) AS n_ev
-  FROM sid)
-SELECT page AS entry_page,
-       CAST(COUNT(*) AS BIGINT) AS sessions,
-       CAST(SUM(CASE WHEN n_ev = 1 THEN 1 ELSE 0 END) AS BIGINT) AS bounces,
-       CAST(SUM(CASE WHEN n_ev = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-         / CAST(COUNT(*) AS DOUBLE) AS bounce_pct
-FROM fl WHERE rn = 1 GROUP BY page
-""")
-def q_bounce_rate_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = io.read_table(spark, sf_dir, "events")
-    return webmetrics.bounce_rate(ev)
-
-
-# ---------------------------------------------------------------------------
-# attribution_linear — multi-touch linear attribution in exact BIGINT
-# micro-units: purchases LEFT-hash-join touches on user_id (window
-# predicate inside the join), per-purchase touch count from one window
-# keyed on the unique purchase event_id, per-channel rollup map-side
-# combined. Complements attribution_last_touch (same precedence
-# contract: strict (ts, event_id) ordering, 7-day lookback).
-# ---------------------------------------------------------------------------
-
-@register("attribution_linear", """
-WITH ev AS (
-  SELECT epoch_us(ts) // 1000000 AS ts_s, event_id, user_id, event_type
-  FROM events),
-p AS (SELECT user_id AS p_uid, event_id AS p_eid, ts_s AS p_ts
-      FROM ev WHERE event_type = 'purchase'),
-t AS (SELECT user_id AS t_uid, event_id AS t_eid, ts_s AS t_ts,
-             event_type AS t_channel
-      FROM ev WHERE event_type <> 'purchase'),
-j AS (
-  SELECT p.p_eid, t.t_eid, t.t_channel
-  FROM p LEFT JOIN t
-    ON p.p_uid = t.t_uid
-   AND t.t_ts >= p.p_ts - 604800
-   AND (t.t_ts < p.p_ts OR (t.t_ts = p.p_ts AND t.t_eid < p.p_eid))),
-n AS (SELECT *, COUNT(t_eid) OVER (PARTITION BY p_eid) AS n FROM j),
-c AS (
-  SELECT CASE WHEN t_eid IS NULL THEN 'direct' ELSE t_channel END AS channel,
-         CASE WHEN t_eid IS NULL THEN CAST(1000000 AS BIGINT)
-              ELSE 1000000 // n END AS credit_micro,
-         CASE WHEN t_eid IS NULL THEN 0 ELSE 1 END AS is_touch
-  FROM n)
-SELECT channel, CAST(SUM(credit_micro) AS BIGINT) AS credit_micro,
-       CAST(SUM(is_touch) AS BIGINT) AS touches
-FROM c GROUP BY channel
-""")
-def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = io.read_table(spark, sf_dir, "events")
-    return webmetrics.attribution_linear(ev)
 
 
 # ---------------------------------------------------------------------------

@@ -28,8 +28,7 @@ from .. import oracle, spec
 
 TABLE_FORMAT = os.environ.get("SPARK_GRAFT_TABLE_FORMAT", "parquet")
 
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
+TABLES = ("orders", "events", "documents")
 
 PAGES_SCHEMA = StructType([
     StructField("url", StringType(), False),

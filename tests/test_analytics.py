@@ -1,71 +1,13 @@
-"""Funnel sequence matching, heavy hitters, quality classifier."""
+"""Heavy hitters, quality classifier, canonical dedup and compression
+signal."""
 
 from __future__ import annotations
 
-import datetime as dt
 import math
 
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row
 
-from blog_parser_spark.operators import funnel, textstats
-
-
-def _ev(user, sec, etype, us=0):
-    return Row(user_id=user,
-               ts=dt.datetime(2024, 1, 1, 0, 0, sec, us),
-               event_type=etype)
-
-
-def test_funnel_hand_computed(spark):
-    rows = [
-        # u1: full funnel in order -> stage 4
-        _ev(1, 1, "signup"), _ev(1, 2, "view"), _ev(1, 3, "click"),
-        _ev(1, 4, "purchase"),
-        # u2: purchase BEFORE the click -> stops at 2? no: signup, view,
-        # purchase(3), click(4) -> click at 4 advances to 3; no purchase
-        # after 4 -> stage 3
-        _ev(2, 1, "signup"), _ev(2, 2, "view"), _ev(2, 3, "purchase"),
-        _ev(2, 4, "click"),
-        # u3: same-timestamp step must NOT advance (strict >):
-        # signup and view share t=1 -> view doesn't count; view at 2 does
-        _ev(3, 1, "signup"), _ev(3, 1, "view"), _ev(3, 2, "view"),
-        # u4: never signs up -> stage 0 despite later steps
-        _ev(4, 1, "view"), _ev(4, 2, "click"), _ev(4, 3, "purchase"),
-        # u5: non-step events are ignored entirely
-        _ev(5, 1, "error"), _ev(5, 2, "signup"),
-        # u6: greedy-earliest is optimal — signup(1), view(2), view(5),
-        # click(3): taking view@2 lets click@3 land -> stage 3
-        _ev(6, 1, "signup"), _ev(6, 2, "view"), _ev(6, 5, "view"),
-        _ev(6, 3, "click"),
-    ]
-    out = {r["user_id"]: r["funnel_stage"]
-           for r in funnel.funnel_stages(spark.createDataFrame(rows)).collect()}
-    assert out == {1: 4, 2: 3, 3: 2, 4: 0, 5: 1, 6: 3}
-
-
-def test_funnel_ts_is_last_stage_time(spark):
-    rows = [_ev(1, 1, "signup"), _ev(1, 2, "view"), _ev(2, 9, "error"),
-            _ev(2, 10, "signup")]
-    got = {r["user_id"]: r for r in
-           funnel.funnel_stages(spark.createDataFrame(rows)).collect()}
-    base = int(dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc).timestamp())
-    assert got[1]["funnel_ts_us"] == (base + 2) * 1_000_000
-    assert got[2]["funnel_ts_us"] == (base + 10) * 1_000_000
-
-
-def test_funnel_deterministic_under_repartition(spark):
-    ev = (spark.range(0, 2000)
-          .select((F.col("id") % 37).alias("user_id"),
-                  F.timestamp_seconds(1704067200 + (F.col("id") * 7919) % 86400)
-                   .alias("ts"),
-                  F.element_at(
-                      F.array(*[F.lit(s) for s in
-                                ("signup", "view", "click", "purchase", "error")]),
-                      ((F.xxhash64("id") % 5 + 5) % 5 + 1).cast("int"))
-                  .alias("event_type")))
-    a = sorted(funnel.funnel_stages(ev).collect())
-    b = sorted(funnel.funnel_stages(ev.repartition(13, "event_type")).collect())
-    assert a == b
+from blog_parser_spark.operators import textstats
 
 
 def test_heavy_hitters_topk_plan_and_values(spark):

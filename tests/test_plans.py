@@ -10,7 +10,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from blog_parser_spark.plans import pipeline, queries_ext2
+from blog_parser_spark.plans import pipeline
 from blog_parser_spark.sources import io
 from tests.conftest import SF_DIR
 
@@ -88,14 +88,6 @@ def test_bucketed_tables_join_without_shuffle(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS t_pages_b")
         spark.sql("DROP TABLE IF EXISTS t_scores_b")
-
-
-def test_dedup_embedding_cosine_finds_planted_pairs(spark):
-    df = queries_ext2.q_dedup_embedding_cosine(spark, SF_DIR)
-    rows = df.collect()
-    # exactly the 25 planted (original, +100000 copy) pairs, nothing else
-    assert len(rows) == 25
-    assert all(r.id_b == r.id_a + 100000 and r.cos >= 0.99 for r in rows)
 
 
 def test_training_pipeline_plan_shape(spark):

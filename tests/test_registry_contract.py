@@ -103,6 +103,19 @@ def test_no_nested_output_columns_in_any_oracle():
     assert bad == [], f"nested-typed output columns: {bad}"
 
 
+def test_every_fixture_table_is_read_by_some_oracle():
+    """The local gate and the contract tests create one DuckDB view per
+    TABLES entry; a table that no oracle reads is fixture weight with no
+    query behind it. DuckDB's parser names the tables each oracle reads
+    (CTE names excluded)."""
+    import __spark_entry__ as e
+    read: set[str] = set()
+    for sql in e.oracle_sql().values():
+        read |= duckdb.get_table_names(sql)
+    unread = [t for t in TABLES if t not in read]
+    assert unread == [], f"fixture tables no oracle reads: {unread}"
+
+
 def test_bench_registry_legs_are_registered():
     """bench.py times REGISTRY_LEGS by name each round; a leg whose query
     left the registry would raise KeyError mid-bench."""

@@ -1,5 +1,5 @@
-"""Pages schema-drift check and the approximate and exact distinct
-sketches (SURVEY.md §2.3)."""
+"""Pages schema-drift check and the approximate distinct sketches
+(SURVEY.md §2.3)."""
 
 from __future__ import annotations
 
@@ -63,39 +63,3 @@ def test_hll_union_estimate_within_error_bound(spark):
            .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("n"))
            .collect()[0]["n"])
     assert abs(est - exact) <= 0.05 * exact
-
-
-def test_bitmap_rollup_persisted_daily_merge(spark, tmp_path):
-    """Incremental exact-distinct end-to-end: persist per-(event_type,
-    day) bitmaps ONCE, then answer an arbitrary date-range distinct by
-    OR-merging only the stored bitmaps for that range — partition-pruned
-    read, no raw-event rescan — matching COUNT(DISTINCT) exactly."""
-    from blog_parser_spark.operators import aggregate
-
-    ev = (io.read_table(spark, SF_DIR, "events")
-          .withColumn("day", F.date_format(
-              F.col("ts").cast("timestamp"), "yyyy-MM-dd")))
-    store = str(tmp_path / "daily_bitmaps")
-    (aggregate.bitmap_build(ev, ["event_type", "day"], "user_id")
-     .write.partitionBy("day").parquet(store))
-
-    days = sorted(r.day for r in ev.select("day").distinct().collect())
-    assert len(days) >= 4
-    lo, hi = days[1], days[len(days) // 2]
-
-    whole = spark.read.parquet(store)
-    ranged = whole.filter((F.col("day") >= lo) & (F.col("day") <= hi))
-    # partition pruning: the ranged scan physically touches only the
-    # in-range day directories (inputFiles() ignores filters; count the
-    # files the executed scan actually reads)
-    touched = (ranged.select(F.input_file_name().alias("f"))
-               .distinct().count())
-    assert 0 < touched < len(whole.inputFiles())
-
-    got = {r.event_type: r.distinct_count for r in
-           aggregate.bitmap_merge_count(ranged, ["event_type"]).collect()}
-    want = {r.event_type: r.n for r in
-            ev.filter((F.col("day") >= lo) & (F.col("day") <= hi))
-            .groupBy("event_type")
-            .agg(F.countDistinct("user_id").alias("n")).collect()}
-    assert got == want and len(got) > 0

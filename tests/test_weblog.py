@@ -108,18 +108,6 @@ def test_slo_burn_rate_hand_case(spark):
     assert first.alert == 1 and second.alert == 0
 
 
-def test_schema_key_census_hand_case(spark):
-    docs = spark.createDataFrame(
-        [(dt.datetime(2024, 1, 2), '{"a": 1, "b": 2}'),
-         (dt.datetime(2024, 1, 1), '{"a": 3}'),
-         (dt.datetime(2024, 1, 5), '{"b": 4, "c": 5}')],
-        "ts timestamp, doc string")
-    got = {r.key: (r.n_docs, r.first_seen_day)
-           for r in weblog.schema_key_census(docs).collect()}
-    assert got == {"a": (2, "2024-01-01"), "b": (2, "2024-01-02"),
-                   "c": (1, "2024-01-05")}
-
-
 def test_strip_boilerplate_hand_case(spark):
     from blog_parser_spark.operators import boilerplate
     # Domain d: nav on all 3 docs (drop), promo on 1 of 3 (keep), unique
@@ -179,21 +167,6 @@ def test_rolling_distinct_users_hand_case(spark):
     assert got[8] == (1, 2)          # day 3 (user 2) still in [2, 8]
     assert max(got) == 8             # phantom days past max trimmed
     assert 1 not in got or got[1] == (0, 2)
-
-
-def test_trending_scores_recency_dominates(spark):
-    # Same total count, but type "hot" is all on the last day while
-    # "cold" is spread long ago -> hot must outscore cold.
-    rows = [(i, dt.datetime(2024, 1, 30), 1, "hot") for i in range(5)]
-    rows += [(100 + i, dt.datetime(2024, 1, 1 + i), 1, "cold")
-             for i in range(5)]
-    ev = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string")
-    got = {r.event_type: r.trend_score
-           for r in weblog.trending_scores(ev).collect()}
-    assert got["hot"] == 5 * (1 << 30)
-    assert got["cold"] < got["hot"]
-    assert got["cold"] == sum(1 << (30 - (29 - i)) for i in range(5))
 
 
 def test_dq_expectations_null_counts_as_violation(spark):

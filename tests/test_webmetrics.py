@@ -1,24 +1,15 @@
-"""Hand cases + properties for the acquisition/engagement metrics
-(referrer channels, entry-page bounce rate, linear attribution), the
+"""Hand cases + properties for the referrer-channel classifier, the
 inverted percolator, and the count-min sketch: channel-ladder
-precedence, session-gap boundary, exact micro-credit conservation,
-brute-force percolation parity, and the CMS overestimate + mergeability
-guarantees."""
+precedence, brute-force percolation parity, and the CMS overestimate +
+mergeability guarantees."""
 
 from __future__ import annotations
-
-import datetime as dt
 
 from pyspark.sql import functions as F
 
 from blog_parser_spark.operators import percolate, sketches, webmetrics
 
 from .conftest import SF_DIR
-
-
-def _ev(spark, rows):
-    return spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string")
 
 
 def test_referrer_channel_ladder(spark):
@@ -39,62 +30,6 @@ def test_referrer_channel_ladder(spark):
     assert got["https://shop.example/page/3"] == ("internal", None)
     assert got["https://news-site4.example/article/10"] == ("referral", None)
     assert got[""] == ("direct", None)
-
-
-def test_bounce_rate_gap_boundary(spark):
-    t0 = dt.datetime(2024, 1, 1)
-    s = lambda sec: t0 + dt.timedelta(seconds=sec)  # noqa: E731
-    ev = _ev(spark, [
-        # user 1: events at 0 and +1800s -> SAME session (gap not > 1800),
-        # entry page of that 2-event session is the event_id=1 page.
-        (1, s(0), 1, "view"), (2, s(1800), 1, "view"),
-        # then +1801s after the second -> NEW session, single event = bounce.
-        (3, s(3601), 1, "view"),
-        # user 2: one lone event -> bounce.
-        (4, s(0), 2, "view"),
-    ])
-    got = {r.entry_page: (r.sessions, r.bounces, r.bounce_pct)
-           for r in webmetrics.bounce_rate(ev).collect()}
-    # pages: user 1 -> /cat1/pN ; user 2 -> /cat2/pN (event_id % 23)
-    assert got["/cat1/p1"] == (1, 0, 0.0)     # 2-event session, no bounce
-    assert got["/cat1/p3"] == (1, 1, 1.0)     # the 1801s-gap bounce
-    assert got["/cat2/p4"] == (1, 1, 1.0)
-    assert sum(s_ for s_, _, _ in got.values()) == 3
-
-
-def test_attribution_linear_hand_case(spark):
-    t0 = dt.datetime(2024, 6, 1)
-    day = dt.timedelta(days=1)
-    ev = _ev(spark, [
-        # user 1: two in-window touches -> 500000 each.
-        (1, t0, 1, "view"), (2, t0 + day, 1, "click"),
-        (3, t0 + 2 * day, 1, "purchase"),
-        # user 2: the only touch is 8 days before -> out of window, direct.
-        (4, t0, 2, "view"), (5, t0 + 8 * day, 2, "purchase"),
-        # user 3: three touches -> 333333 each (integer division).
-        (6, t0, 3, "view"), (7, t0, 3, "view"), (8, t0 + day, 3, "click"),
-        (9, t0 + 2 * day, 3, "purchase"),
-    ])
-    got = {r.channel: (r.credit_micro, r.touches)
-           for r in webmetrics.attribution_linear(ev).collect()}
-    assert got["direct"] == (1_000_000, 0)
-    # user1 view 500000 + user3 two views 333333*2
-    assert got["view"] == (500_000 + 2 * 333_333, 3)
-    assert got["click"] == (500_000 + 333_333, 2)
-
-
-def test_attribution_linear_credit_conservation(spark):
-    """Each purchase emits n*(1e6 DIV n) micro-units (or exactly 1e6 when
-    direct): total credit is within touches-per-purchase slack of 1e6 *
-    n_purchases — on the real fixture, not a hand case."""
-    from blog_parser_spark.sources import io
-    ev = io.read_table(spark, SF_DIR, "events")
-    out = webmetrics.attribution_linear(ev).collect()
-    total = sum(r.credit_micro for r in out)
-    touches = sum(r.touches for r in out)
-    n_purch = ev.where(F.col("event_type") == "purchase").count()
-    assert total <= 1_000_000 * n_purch
-    assert total >= 1_000_000 * n_purch - touches  # DIV loses < 1 per touch
 
 
 def test_percolate_matches_brute_force(spark):

@@ -112,9 +112,6 @@ def main() -> None:
         "rolling_distinct_users (two-stage plain aggs — NO Expand node; "
         "a double COUNT DISTINCT would plan one)":
             qs["rolling_distinct_users"](spark, SF_DIR),
-        "attribution_linear (left hash join on user_id, window keyed on "
-        "unique purchase id, exact BIGINT micro-credit)":
-            qs["attribution_linear"](spark, SF_DIR),
         "percolate_match (inverted percolator — anchor equi-join against "
         "the broadcast registry before any shuffle)":
             qs["percolate_match"](spark, SF_DIR),
